@@ -110,9 +110,10 @@ object Bench {
     if (only.isEmpty) {
       val lanes: Seq[Seq[(String, () => Unit)]] = Seq(
         // r17 rebalance: this lane WAS cdc+incr_agg+incr_agg_mm = the
-        // 60s critical path of the whole phase (tools/BuildLaneAB: cdc
-        // is 19.4s SOLO, unchanged since r15 — the r16 "regression" to
-        // 35s was purely contention from the heavier sql_dml lane).
+        // 60s critical path of the whole phase (tools/BuildLaneAB, last
+        // present at 5d92bd6: cdc is 19.4s SOLO, unchanged since r15 —
+        // the r16 "regression" to 35s was purely contention from the
+        // heavier sql_dml lane).
         // incr_agg_mm moved to the short mor/merge lane: it re-derives
         // the cdc table via the same memoized computeIfAbsent, which
         // BLOCKS (safely, cross-thread) until this lane's build lands —

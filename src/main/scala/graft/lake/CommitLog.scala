@@ -336,7 +336,6 @@ final class CommitLog(root: String, hadoopConf: Configuration,
     import scala.jdk.CollectionConverters._
     ownStaged.asScala.toSeq
   }
-  private def ownStagedNonEmpty: Boolean = !ownStaged.isEmpty
 
   private def stagedPath(id: Long) =
     new Path(logDir, f"$id%08d.json.txn")

@@ -3988,62 +3988,20 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       }.reduce(_ unionByName _)
   }
 
-  /** Read files recorded ANYWHERE on the timeline — including files a
-    * later commit removed (they survive physically until [[clean]]) —
-    * each with the schema of the commit that ADDED it (resolved through
-    * `schemaJsonOf`, so a long-running caller can keep an INCREMENTAL
-    * path index instead of re-folding the whole timeline per call),
-    * adapted to `streamSchema` by column id with the STREAM contract
-    * ([[SchemaEvo.adaptToStream]]: renames alias, pre-evolution files
-    * null-backfill/upcast, evolution past the stream schema fails loud).
-    * The change-tail read primitive for Copy-on-Write tables, where a
-    * commit's logical changes are derived from its adds/removes. */
-  /** Fused pre/post merged winners for exactly the record keys in
-    * `keys` — which must carry the table's key columns — at commit
-    * `commitId`: the typed MoR change feed's classification probe
-    * ([[graft.sources.GraftTailSource]]). `files` is the live set AT
-    * the commit. Returns ONE frame of merged (tombstone-resolved,
-    * precombine-applied) rows flagged `_win_post` (the key's live
-    * winner at the commit) and `_win_pre` (its winner JUST BEFORE —
-    * the identical merge with the commit's own rows and tombstones
-    * masked out by their write-time `_commit_id` stamp); both flags
-    * can be true on the same row (stale delta — the table didn't
-    * change). Rows winning neither side are filtered out.
-    *
-    * This replaced two [[morMerge]] calls over a shared eager local
-    * checkpoint that a full-outer join then recombined — per commit
-    * that was two window sorts, a join shuffle, and a blocking
-    * materialization. The fused form computes both merges in one
-    * window CHAIN over a single sort (whole-frame tombstone maxes,
-    * then running first-candidate counts — same partition + ordering,
-    * so the second pass reuses the first's sort), needs no checkpoint
-    * (single consumer), and the caller aggregates winners per key
-    * instead of joining. Same-order rank equivalence: the winner is
-    * the first CANDIDATE row in (precombine desc, commit desc, seq
-    * desc) order, which is exactly morMerge's row_number()=1 over the
-    * filtered set.
-    *
-    * Cost shape unchanged: key-range prune (only when it can skip
-    * many files — the 100 TB regime), ONE file read semi-joined down
-    * to the touched keys, then the single merge pass — bounded by the
-    * commit's touched keys' file groups, never the table. */
   /** Merge-exchange partition count, derived from the candidate files'
     * recorded parquet bytes (FileAdd.bytes; pre-upgrade commits recorded
-    * 0): one partition per `spark.graft.mergeTargetPartitionBytes`
-    * (default 2 MB of compressed parquet — a window-sort task big enough
-    * that scheduling overhead stops dominating, small enough that the
-    * r14 one-giant-task coalescing regression cannot recur), capped at
-    * 4x the cluster's default parallelism so a huge backlog never
-    * explodes the task count past what the cluster can run concurrently.
-    * ANY unrecorded candidate (bytes <= 0) raises the result to the
-    * defaultParallelism floor: a single legacy 1 GB base file among
-    * recorded 1 MB deltas would otherwise plan one window-sort task —
-    * the exact single-task regression the explicit count exists to
-    * prevent. */
+    * 0): one partition per 2 MB of compressed parquet — a window-sort
+    * task big enough that scheduling overhead stops dominating, small
+    * enough that the r14 one-giant-task coalescing regression cannot
+    * recur — capped at 4x the cluster's default parallelism so a huge
+    * backlog never explodes the task count past what the cluster can
+    * run concurrently. ANY unrecorded candidate (bytes <= 0) raises the
+    * result to the defaultParallelism floor: a single legacy 1 GB base
+    * file among recorded 1 MB deltas would otherwise plan one
+    * window-sort task — the exact single-task regression the explicit
+    * count exists to prevent. */
   private[graft] def mergePartitions(candidates: Seq[FileAdd]): Int = {
-    val target = spark.conf.getOption("spark.graft.mergeTargetPartitionBytes")
-      .flatMap(v => scala.util.Try(v.toLong).toOption.filter(_ > 0))
-      .getOrElse(2L << 20)
+    val target = 2L << 20
     val bytes = candidates.map(_.bytes).sum
     val cap = 4 * spark.sparkContext.defaultParallelism
     val floor = math.min(spark.sparkContext.defaultParallelism, cap)
@@ -4054,39 +4012,50 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     else fromBytes
   }
 
-  /** Fused MULTI-COMMIT pre/post pivot (r17): one merged probe for a run
-    * of consecutive delta commits, instead of one [[mergedPrePostPivot]]
-    * per commit. Sound only on a removal-free, DV-free run (the caller
-    * segments on that): then live(cᵢ) = live(c_last) restricted to rows
-    * stamped `_commit_id <= cᵢ` — delta commits only ADD files and every
-    * row carries its writing commit's stamp — so ONE scan of
-    * live(c_last), semi-joined to the union of the run's touched keys,
-    * yields every per-commit classification via per-commit predicates in
-    * the same three window passes the single-commit pivot runs. Per-key
-    * rows come back exploded to (key, commit): columns `_record_key`,
-    * `_commit`, `_p` (post winner), `_p_cid`, `_q` (pre winner), for
-    * pairs with a winner on at least one side — exactly the rows the
-    * per-commit pivots would emit (a commit that did not touch a key
-    * classifies to nothing: see the probe note below).
+  /** Fused pre/post merged winners for the record keys each commit of a
+    * run touched: the typed MoR change feed's classification probe
+    * ([[graft.sources.GraftTailSource]]). `keys` pairs each commit of
+    * the run — one or more consecutive delta commits — with frames
+    * carrying the table's key columns; `files` is the live set at the
+    * run's LAST commit. Sound only on a removal-free, DV-free run (the
+    * caller segments on that; a run of one is its own live set, so it
+    * may remove files or add DVs): then live(cᵢ) = live(c_last)
+    * restricted to rows stamped `_commit_id <= cᵢ` — delta commits only
+    * ADD files and every row carries its writing commit's stamp — so ONE
+    * scan of live(c_last), semi-joined to the union of the run's touched
+    * keys, yields every per-commit classification via per-commit
+    * predicates: post candidates `cid <= c` (live(c) holds no later
+    * stamp), pre candidates `cid < c` (the commit's own rows and
+    * tombstones masked out by their write-time stamp); tombstone maxes
+    * restrict the same way.
     *
-    * Why: a catch-up backlog's commits touch overlapping file groups, so
-    * per-commit probes re-read and re-sort the same bytes once per
-    * commit — the fixture's 3-commit feed paid 3 scans + 3 sorts where
-    * one suffices (measured r17: typed batchFrame 4.4 s → fused ~2 s).
-    * Per-commit equivalences: post candidates `cid <= c` (live(c) holds
-    * no later stamp), pre candidates `cid < c` (≡ the single pivot's
-    * `cid != c` over live(c)); tombstone maxes restrict the same way.
+    * Per-key rows come back exploded to (key, commit): columns
+    * `_record_key`, `_commit`, `_p` (the key's merged —
+    * tombstone-resolved, precombine-applied — live winner at the
+    * commit), `_p_cid` (its stamp), `_q` (its winner JUST BEFORE the
+    * commit), for pairs with a winner on at least one side (a commit
+    * that did not touch a key classifies to nothing: see the probe note
+    * below). `_p` and `_q` can be the same row (stale delta — the table
+    * didn't change). The winner is the first CANDIDATE row in
+    * (precombine desc, commit desc, seq desc) order, which is exactly
+    * [[morMerge]]'s row_number()=1 over the filtered set.
+    *
+    * Why: this replaced two [[morMerge]] calls per commit over a shared
+    * eager local checkpoint that a full-outer join then recombined (two
+    * window sorts, a join shuffle and a blocking materialization per
+    * commit), then one probe per commit: a catch-up backlog's commits
+    * touch overlapping file groups, so per-commit probes re-read and
+    * re-sort the same bytes once per commit — the fixture's 3-commit
+    * feed paid 3 scans + 3 sorts where one suffices (measured r17: typed
+    * batchFrame 4.4 s → fused ~2 s). Cost shape: key-range prune (only
+    * when it can skip many files — the 100 TB regime), ONE file read
+    * semi-joined down to the touched keys, then the single merge pass —
+    * bounded by the run's touched keys' file groups, never the table.
     */
   private[graft] def mergedPrePostPivotMulti(
       files: Seq[FileAdd], keys: Seq[(Long, DataFrame)],
       payload: DataFrame => org.apache.spark.sql.Column): DataFrame = {
     require(keys.nonEmpty, "fused pivot needs at least one commit")
-    if (keys.size == 1) {
-      val (cid0, k0) = keys.head
-      return mergedPrePostPivot(files, k0, cid0, payload)
-        .select(col("_record_key"), lit(cid0).as("_commit"),
-          col("_p"), col("_p_cid"), col("_q"))
-    }
     val cids = keys.map(_._1)
     // ONE union probe for the whole run, duplicate-tolerant (left_semi
     // dedupes its build side). No per-commit touched-set is tracked: a
@@ -4106,67 +4075,6 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       return empty.select(col("_record_key"), lit(-1L).as("_commit"),
         payload(empty).as("_p"), col("_commit_id").as("_p_cid"),
         payload(empty).as("_q")).limit(0)
-    }
-    val rows = readFiles(candidates)
-      .join(probe, Seq("_record_key"), "left_semi")
-      .repartition(mergePartitions(candidates), dedupCols.map(col): _*)
-    val keyW = Window.partitionBy(dedupCols.map(col): _*)
-    val w = keyW.orderBy(col(config.precombineCol).desc,
-      col("_commit_id").desc, col("_seq").desc_nulls_last)
-    val whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val upto = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val deleted = coalesce(col("_deleted"), lit(false))
-    val cid = col("_commit_id")
-    // the same three window passes as the single-commit pivot, with one
-    // expression set per commit — same frames fuse into ONE physical
-    // Window operator per pass regardless of run length
-    val s1 = rows.select(col("*") +:
-      cids.zipWithIndex.flatMap { case (c, i) => Seq(
-        max(when(deleted && cid <= c, cid)).over(whole).as(s"_dcp_$i"),
-        max(when(deleted && cid < c, cid)).over(whole).as(s"_dcq_$i")) }: _*)
-    val s2 = s1.select(col("*") +:
-      cids.zipWithIndex.flatMap { case (c, i) => Seq(
-        (!deleted && cid <= c && cid > coalesce(col(s"_dcp_$i"), lit(-1L)))
-          .as(s"_cp_$i"),
-        (!deleted && cid < c && cid > coalesce(col(s"_dcq_$i"), lit(-1L)))
-          .as(s"_cq_$i")) }: _*)
-    val s3 = s2.select(col("*") +: (row_number().over(w).as("_rn") +:
-      cids.indices.flatMap(i => Seq(
-        sum(when(col(s"_cp_$i"), 1).otherwise(0)).over(upto).as(s"_sp_$i"),
-        sum(when(col(s"_cq_$i"), 1).otherwise(0)).over(upto).as(s"_sq_$i")))
-        .toSeq): _*)
-    val s4 = s3.select(col("*") +: cids.indices.flatMap(i => Seq(
-        (col(s"_cp_$i") && col(s"_sp_$i") === 1).as(s"_wp_$i"),
-        (col(s"_cq_$i") && col(s"_sq_$i") === 1).as(s"_wq_$i"))).toSeq: _*)
-    val pk = payload(s4)
-    val s5 = s4.select(col("*") +: cids.indices.flatMap(i => Seq(
-        max(when(col(s"_wp_$i"), pk)).over(whole).as(s"_p_$i"),
-        max(when(col(s"_wp_$i"), cid)).over(whole).as(s"_pc_$i"),
-        max(when(col(s"_wq_$i"), pk)).over(whole).as(s"_q_$i"))).toSeq: _*)
-    s5.filter(col("_rn") === 1)
-      .select(col("_record_key"), explode(array(
-        cids.zipWithIndex.map { case (c, i) =>
-          struct(lit(c).as("_commit"),
-            col(s"_p_$i").as("_p"), col(s"_pc_$i").as("_p_cid"),
-            col(s"_q_$i").as("_q")) }: _*)).as("_e"))
-      .filter(col("_e._p").isNotNull || col("_e._q").isNotNull)
-      .select(col("_record_key"), col("_e._commit").as("_commit"),
-        col("_e._p").as("_p"), col("_e._p_cid").as("_p_cid"),
-        col("_e._q").as("_q"))
-  }
-
-  private[graft] def mergedPrePostPivot(
-      files: Seq[FileAdd], keys: DataFrame, commitId: Long,
-      payload: DataFrame => org.apache.spark.sql.Column): DataFrame = {
-    // no distinct on the probe: left_semi dedupes its build side anyway
-    val probe = keys.select(keyStrExpr.as("_record_key"))
-    val candidates =
-      if (files.size <= 32) files else pruneByKeyRange(keys, files)
-    if (candidates.isEmpty) {
-      val empty = readOrEmpty(candidates).drop("_seq", "_deleted")
-        .join(probe, Seq("_record_key"), "left_semi")
-      return empty.select(col("_record_key"), payload(empty).as("_p"),
-        col("_commit_id").as("_p_cid"), payload(empty).as("_q")).limit(0)
     }
     val rows = readFiles(candidates)
       .join(probe, Seq("_record_key"), "left_semi")
@@ -4191,52 +4099,73 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     val whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val upto = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val deleted = coalesce(col("_deleted"), lit(false)) // base files lack the column
-    val isPre = col("_commit_id") =!= commitId
+    val cid = col("_commit_id")
     // three chained passes over ONE sort (identical partition+ordering,
     // so only the first pays the exchange+sort):
     //   1. whole-frame tombstone maxes;
-    //   2. running first-candidate counts -> winner flags (the first
-    //      CANDIDATE in (precombine desc, commit desc, seq desc) order
-    //      is exactly morMerge's row_number()=1 over the filtered set);
-    //   3. whole-frame winner pivot (at most one non-null per side) +
+    //   2. running first-candidate counts -> winner flags, plus
     //      row_number to emit ONE row per key — which removes the
-    //      groupBy shuffle a separate per-key pivot paid per commit.
-    // Same-frame window expressions are computed in ONE select per pass:
-    // sequential withColumn calls planned one physical Window operator
-    // EACH (eight per-partition buffer traversals per commit, measured
-    // r17); grouping them collapses the plan to the three Window
-    // operators the data dependencies actually force (row_number shares
-    // pass 2 — rank functions resolve to the same unbounded-preceding /
-    // current-row frame as the running sums).
-    val tagged = rows
-      .select(col("*"),
-        max(when(deleted, col("_commit_id"))).over(whole).as("_dcid_post"),
-        max(when(deleted && isPre, col("_commit_id"))).over(whole)
-          .as("_dcid_pre"))
-      .withColumn("_c_post",
-        !deleted && col("_commit_id") > coalesce(col("_dcid_post"), lit(-1L)))
-      .withColumn("_c_pre", isPre && !deleted &&
-        col("_commit_id") > coalesce(col("_dcid_pre"), lit(-1L)))
-      .select(col("*"),
-        sum(when(col("_c_post"), 1).otherwise(0)).over(upto).as("_s_post"),
-        sum(when(col("_c_pre"), 1).otherwise(0)).over(upto).as("_s_pre"),
-        row_number().over(w).as("_rn"))
-      .withColumn("_win_post", col("_c_post") && col("_s_post") === 1)
-      .withColumn("_win_pre", col("_c_pre") && col("_s_pre") === 1)
-    val pk = payload(tagged)
-    tagged
-      .select(col("*"),
-        max(when(col("_win_post"), pk)).over(whole).as("_p"),
-        max(when(col("_win_post"), col("_commit_id"))).over(whole)
-          .as("_p_cid"),
-        max(when(col("_win_pre"), pk)).over(whole).as("_q"))
-      // one row per key; a key with NO winner on either side (e.g. a
-      // tombstone for a key that never lived) emits nothing, matching
-      // the join/groupBy formulations
-      .filter(col("_rn") === 1 && (col("_p").isNotNull || col("_q").isNotNull))
-      .select(col("_record_key"), col("_p"), col("_p_cid"), col("_q"))
+    //      groupBy shuffle a separate per-key pivot paid per commit;
+    //   3. whole-frame winner pivot (at most one non-null per side).
+    // Same-frame window expressions are computed in ONE select per pass,
+    // with one expression set per commit: sequential withColumn calls
+    // planned one physical Window operator EACH (eight per-partition
+    // buffer traversals per commit, measured r17); grouping them
+    // collapses the plan to the three Window operators the data
+    // dependencies actually force, regardless of run length (row_number
+    // shares pass 2 — rank functions resolve to the same
+    // unbounded-preceding / current-row frame as the running sums).
+    val s1 = rows.select(col("*") +:
+      cids.zipWithIndex.flatMap { case (c, i) => Seq(
+        max(when(deleted && cid <= c, cid)).over(whole).as(s"_dcp_$i"),
+        max(when(deleted && cid < c, cid)).over(whole).as(s"_dcq_$i")) }: _*)
+    val s2 = s1.select(col("*") +:
+      cids.zipWithIndex.flatMap { case (c, i) => Seq(
+        (!deleted && cid <= c && cid > coalesce(col(s"_dcp_$i"), lit(-1L)))
+          .as(s"_cp_$i"),
+        (!deleted && cid < c && cid > coalesce(col(s"_dcq_$i"), lit(-1L)))
+          .as(s"_cq_$i")) }: _*)
+    val s3 = s2.select(col("*") +: (row_number().over(w).as("_rn") +:
+      cids.indices.flatMap(i => Seq(
+        sum(when(col(s"_cp_$i"), 1).otherwise(0)).over(upto).as(s"_sp_$i"),
+        sum(when(col(s"_cq_$i"), 1).otherwise(0)).over(upto).as(s"_sq_$i")))
+        .toSeq): _*)
+    val s4 = s3.select(col("*") +: cids.indices.flatMap(i => Seq(
+        (col(s"_cp_$i") && col(s"_sp_$i") === 1).as(s"_wp_$i"),
+        (col(s"_cq_$i") && col(s"_sq_$i") === 1).as(s"_wq_$i"))).toSeq: _*)
+    val pk = payload(s4)
+    // max_by over a stamp marker, never max over the payload: Spark
+    // cannot order a struct holding a map column
+    // (DATATYPE_MISMATCH.INVALID_ORDERING_TYPE). At most one row per
+    // key carries each winner flag, so the marker only selects it.
+    val s5 = s4.select(col("*") +: cids.indices.flatMap(i => Seq(
+        max_by(pk, when(col(s"_wp_$i"), cid)).over(whole).as(s"_p_$i"),
+        max(when(col(s"_wp_$i"), cid)).over(whole).as(s"_pc_$i"),
+        max_by(pk, when(col(s"_wq_$i"), cid)).over(whole).as(s"_q_$i"))).toSeq: _*)
+    // one row per key; a key with NO winner on either side (e.g. a
+    // tombstone for a key that never lived) emits nothing
+    s5.filter(col("_rn") === 1)
+      .select(col("_record_key"), explode(array(
+        cids.zipWithIndex.map { case (c, i) =>
+          struct(lit(c).as("_commit"),
+            col(s"_p_$i").as("_p"), col(s"_pc_$i").as("_p_cid"),
+            col(s"_q_$i").as("_q")) }: _*)).as("_e"))
+      .filter(col("_e._p").isNotNull || col("_e._q").isNotNull)
+      .select(col("_record_key"), col("_e._commit").as("_commit"),
+        col("_e._p").as("_p"), col("_e._p_cid").as("_p_cid"),
+        col("_e._q").as("_q"))
   }
 
+  /** Read files recorded ANYWHERE on the timeline — including files a
+    * later commit removed (they survive physically until [[clean]]) —
+    * each with the schema of the commit that ADDED it (resolved through
+    * `schemaJsonOf`, so a long-running caller can keep an INCREMENTAL
+    * path index instead of re-folding the whole timeline per call),
+    * adapted to `streamSchema` by column id with the STREAM contract
+    * ([[SchemaEvo.adaptToStream]]: renames alias, pre-evolution files
+    * null-backfill/upcast, evolution past the stream schema fails loud).
+    * The change-tail read primitive for Copy-on-Write tables, where a
+    * commit's logical changes are derived from its adds/removes. */
   private[graft] def readTimelineFiles(
       paths: Seq[String], streamSchema: StructType,
       schemaJsonOf: String => Option[String]): DataFrame = {

@@ -94,6 +94,9 @@ private[graft] object SchemaEvo {
     // exact: every int/short/byte is representable as a double; longs
     // are NOT (53-bit mantissa), so long→double is rejected
     case (ByteType | ShortType | IntegerType, DoubleType) => true
+    // a map gaining null values: a CoW merge reads old files back with
+    // valueContainsNull = true while a Scala-encoded batch says false
+    case (MapType(fk, fv, false), MapType(tk, tv, true)) => fk == tk && fv == tv
     case _ => false
   }
 

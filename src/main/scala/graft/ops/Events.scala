@@ -203,14 +203,8 @@ object Events {
       s: org.apache.spark.sql.SparkSession, name: String,
       frame: DataFrame, mode: String = "append"): Unit = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    // parameterized (spark.graft.streamReplayPartitions): the fixture
-    // default of 8 is a bounded-replay setting, not a product default —
-    // a production deployment sets it to the site's parallelism (or
-    // leaves the session conf untouched by not using this harness)
-    val replayParts = s.conf.getOption("spark.graft.streamReplayPartitions")
-      .flatMap(v => scala.util.Try(v.toInt).toOption.filter(_ > 0))
-      .getOrElse(8)
-    s.conf.set("spark.sql.shuffle.partitions", replayParts.toString)
+    // fixed, not a conf knob: an A/B of 4 vs 8 measured flat
+    s.conf.set("spark.sql.shuffle.partitions", "8")
     try {
       val q = frame.writeStream.outputMode(mode).format("memory")
         .queryName(name).start()

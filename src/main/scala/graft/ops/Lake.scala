@@ -759,40 +759,59 @@ object Lake {
     * [[graft.lake.LakeTableConfig.bloomCols]]): keyed lineitem plus a
     * derived high-cardinality `ref` column, ingested as three mod-3
     * commits so every file's KEY range spans the whole table — ranges
-    * prune nothing, only the per-file `ref` value blooms can. The
-    * builder REQUIRES the probe read planned fewer files than live, so
-    * the gated query is pinned to the bloom path. */
+    * prune nothing, only the per-file `ref` value blooms can.
+    * [[bloomColPoint]] REQUIRES the probe read planned fewer files than
+    * live, so the gated query is pinned to the bloom path. */
   private[graft] def bloomColTable(s: SparkSession, d: String): LakeTable =
-    cache.computeIfAbsent(s"$d:bloomcol", _ => {
-      val root = s"/tmp/graft_lake/bloomcol_${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val t = LakeTable(s, LakeTableConfig(
-        root, keyCols = Seq("l_orderkey", "l_linenumber"),
-        precombineCol = "update_ts", partitionCols = Seq("batch"),
-        bloomCols = Seq("ref")))
-      val li = keyedLineitem(s, d)
-        .withColumn("ref", (col("l_orderkey") * 131) % 999983)
-        .withColumn("update_ts", lit(0))
-        .persist()
-      try {
-        // each ingest batch is its own partition, so no commit rewrites
-        // an earlier one: files accumulate, and because the probe column
-        // is NOT the partition column, only the value blooms can prune
-        (0 to 2).foreach(m =>
-          t.upsert(li.filter(col("l_orderkey") % 3 === m)
-            .withColumn("batch", lit(m))))
-      } finally li.unpersist()
-      t
-    })
+    cache.computeIfAbsent(s"$d:bloomcol", _ => buildBloomColTable(s, d,
+      s"/tmp/graft_lake/bloomcol_${d.replaceAll("[^A-Za-z0-9.]", "_")}"))
 
-  /** the bloom-col fixture's probe values: the refs of the ~1% key class
-    * (driver-bounded collect, the lookup-probe precedent) */
-  private def bloomColProbe(s: SparkSession, d: String): Seq[Long] =
-    keyedLineitem(s, d).filter(col("l_orderkey") % 9973 === 7)
+  private[graft] def buildBloomColTable(
+      s: SparkSession, d: String, root: String): LakeTable = {
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val t = LakeTable(s, LakeTableConfig(
+      root, keyCols = Seq("l_orderkey", "l_linenumber"),
+      precombineCol = "update_ts", partitionCols = Seq("batch", "grp"),
+      bloomCols = Seq("ref")))
+    // `grp` puts the whole probe key class (l_orderkey % 9973 = 7) in
+    // one of 8 directories per commit, so the layout the prune depends
+    // on does not follow spark.sql.shuffle.partitions: every commit
+    // writes at least 8 files whatever the range repartition cuts, and
+    // the 7 probe-free directories' files survive only as bloom false
+    // positives.
+    val li = keyedLineitem(s, d)
+      .withColumn("ref", (col("l_orderkey") * 131) % 999983)
+      .withColumn("grp", col("l_orderkey") % 9973 % 8)
+      .withColumn("update_ts", lit(0))
+      .persist()
+    try {
+      // each ingest batch is its own partition, so no commit rewrites
+      // an earlier one: files accumulate, and because the probe column
+      // is NOT a partition column, only the value blooms can prune
+      (0 to 2).foreach(m =>
+        t.upsert(li.filter(col("l_orderkey") % 3 === m)
+          .withColumn("batch", lit(m))))
+    } finally li.unpersist()
+    t
+  }
+
+  /** the bloom-col fixture's probe read: the rows of the ~1% key class's
+    * refs (driver-bounded collect, the lookup-probe precedent), failing
+    * unless the column blooms pruned at least one live file */
+  private[graft] def bloomColPoint(
+      s: SparkSession, d: String, t: LakeTable): DataFrame = {
+    val refs = keyedLineitem(s, d).filter(col("l_orderkey") % 9973 === 7)
       .select(((col("l_orderkey") * 131) % 999983).cast("long"))
       .distinct().collect().map(_.getLong(0)).toSeq
+    val out = t.read(col("ref").isin(refs: _*))
+    require(t.lastReadFiles >= 0 &&
+      t.lastReadFiles < t.log.liveFiles().size,
+      s"column blooms pruned nothing (${t.lastReadFiles} of " +
+        s"${t.log.liveFiles().size} files planned)")
+    out
+  }
 
   /** checkMode=drop table: the quantity-cap expectation quarantines
     * violating rows at ingest (`lake_expect_drop` proves the landed
@@ -943,19 +962,10 @@ object Lake {
     // the probe planned fewer files than live; the oracle replays the
     // same IN-subset the hard way
     GQuery("lake_bloom_col_point",
-      (s, d) => {
-        val t = bloomColTable(s, d)
-        val refs = bloomColProbe(s, d)
-        val out = t.read(col("ref").isin(refs: _*))
-          .select(col("l_orderkey"), col("l_linenumber"),
-            col("l_returnflag"), col("l_quantity"), col("ref"))
-          .orderBy(col("l_orderkey"), col("l_linenumber"))
-        require(t.lastReadFiles >= 0 &&
-          t.lastReadFiles < t.log.liveFiles().size,
-          s"column blooms pruned nothing (${t.lastReadFiles} of " +
-            s"${t.log.liveFiles().size} files planned)")
-        out
-      },
+      (s, d) => bloomColPoint(s, d, bloomColTable(s, d))
+        .select(col("l_orderkey"), col("l_linenumber"),
+          col("l_returnflag"), col("l_quantity"), col("ref"))
+        .orderBy(col("l_orderkey"), col("l_linenumber")),
       Some(s"""WITH $liCte
         SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity,
                (l_orderkey * 131) % 999983 AS ref

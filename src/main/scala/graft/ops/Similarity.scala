@@ -749,10 +749,6 @@ object Similarity {
   private def queryBuckets(s: SparkSession, d: String, nPlanes: Int) =
     queriesDf(s, d).withColumn("qbucket", bucketExpr("qv", nPlanes))
 
-  /** exposed for AnnSpec recall measurement */
-  private[graft] def bruteForce(s: SparkSession, d: String): DataFrame =
-    queries.head.fn(s, d)
-
   /** exposed so Bench can time the index build separately */
   private[graft] def ensureAnnIndex(s: SparkSession, d: String): Unit =
     annIndex(s, d, 6)

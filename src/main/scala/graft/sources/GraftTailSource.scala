@@ -413,10 +413,15 @@ final class GraftTailSource(
           //   old row + unstamped add   → nothing (untouched rewrite)
           // The per-key aggregate is sound on CoW: a commit's rewritten
           // files hold at most ONE live row per key (the precombine
-          // merge's invariant), so max(when(stamped, payload)) is "the"
+          // merge's invariant), so max_by(payload, stamped) is "the"
           // stamped row, and count(*) > 0 marks the key as present in
           // the adds (the tombstone anti-join's old contract, which
-          // deliberately counted UNSTAMPED rewrites as presence).
+          // deliberately counted UNSTAMPED rewrites as presence). The
+          // aggregate counts stamped rows and fails the batch when a key
+          // has two (a partition-scoped table stamping one key in two
+          // partitions), rather than let one win arbitrarily. max_by
+          // orders only the marker: Spark cannot order a payload struct
+          // holding a map column (INVALID_ORDERING_TYPE).
           val payloadFields = schema.fields
             .filterNot(f => f.name == "_deleted" || f.name == "_change_type")
           def packed(df: DataFrame): org.apache.spark.sql.Column = {
@@ -433,10 +438,15 @@ final class GraftTailSource(
               else if (f.name == "_change_type") lit(ctype).as(f.name)
               else side.getField(f.name).as(f.name)
             }.toSeq: _*)
-          import org.apache.spark.sql.functions.{array, count, explode, max, when}
+          import org.apache.spark.sql.functions.{array, concat, count, explode,
+            max_by, raise_error, when}
           val addRows = readAdds()
+          val stamped = when(col("_commit_id") === c.id, lit(1))
           val aggAdds = addRows.groupBy(col("_record_key")).agg(
-            max(when(col("_commit_id") === c.id, packed(addRows))).as("_post"),
+            when(count(stamped) > 1, raise_error(concat(
+                lit(s"commit ${c.id} rewrote more than one row stamped " +
+                  "with it for key "), col("_record_key"))))
+              .otherwise(max_by(packed(addRows), stamped)).as("_post"),
             count(lit(1)).as("_n_any"))
           val olds = readOld()
           val byKey = olds.select(col("_record_key"), packed(olds).as("_pre"))
@@ -563,9 +573,9 @@ final class GraftTailSource(
     *
     * Scope matches the untyped MoR tail: delta commits plus
     * metadata-only partition drops; seeding base loads and physical
-    * maintenance are not changes. Cost: two merged probes per commit,
-    * key-range-pruned to the touched keys' file groups
-    * ([[graft.lake.LakeTable.mergedPrePostRows]]) — read-time only, zero
+    * maintenance are not changes. Cost: one merged probe per run of
+    * delta commits, key-range-pruned to the touched keys' file groups
+    * ([[graft.lake.LakeTable.mergedPrePostPivotMulti]]) — read-time only, zero
     * write-path change files, bounded by the batch's keys, never the
     * table. Pre-state = the commit's snapshot MINUS its own adds (delta
     * commits remove nothing, so that IS the prior live set).
@@ -597,8 +607,8 @@ final class GraftTailSource(
         else if (f.name == "_change_type") lit(ctype).as(f.name)
         else side.getField(f.name).as(f.name)
       }.toSeq: _*)
-    // classification emission shared by the single-commit and fused
-    // paths: byKey rows carry (_record_key, _commit, _p, _p_cid, _q)
+    // classification emission: byKey rows carry
+    // (_record_key, _commit, _p, _p_cid, _q)
     def typedChanges(byKey: DataFrame): DataFrame = byKey
       .select(explode(
         when(col("_q").isNull,
@@ -626,8 +636,7 @@ final class GraftTailSource(
     // classifies every commit — a catch-up backlog stops re-reading the
     // same file groups once per commit. Any removal (compaction,
     // partition drop, clean sweep) or DV commit in the range breaks the
-    // run; runs cap at 16 commits to bound plan width. A run of one
-    // falls through to the single-commit pivot unchanged.
+    // run; runs cap at 16 commits to bound plan width.
     val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val run = scala.collection.mutable.ArrayBuffer
       .empty[(graft.lake.Commit, Seq[String])]

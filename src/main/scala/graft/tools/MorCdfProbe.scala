@@ -59,10 +59,11 @@ object MorCdfProbe {
       timed("  c2 keys scan")(keys.count())
       val liveAt = t.log.liveFiles(Some(2L))
       import org.apache.spark.sql.functions.struct
+      // payload = the row's own columns, without the pivot's helpers
+      val helper = "_seq|_deleted|_rn|_(dcp|dcq|cp|cq|sp|sq|wp|wq)_\\d+"
       def pay(df: org.apache.spark.sql.DataFrame) = struct(df.columns
-        .filterNot(Set("_win_post", "_win_pre", "_seq", "_deleted").contains)
-        .map(col).toSeq: _*)
-      val byKey = t.mergedPrePostPivot(liveAt, keys, 2L, pay)
+        .filterNot(_.matches(helper)).map(col).toSeq: _*)
+      val byKey = t.mergedPrePostPivotMulti(liveAt, Seq(2L -> keys), pay)
       timed("  c2 fused pivot")(byKey.count())
       timed("  c2 fused pivot again")(byKey.count())
     }

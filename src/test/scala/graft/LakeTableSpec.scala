@@ -64,10 +64,6 @@ class LakeTableSpec extends AnyFunSuite {
     // recorded count above the floor is not reduced by an unrecorded file
     val big = Seq.fill(2 * p)(add(2L << 20)) :+ add(0)
     assert(t.mergePartitions(big) == math.max(floor, 2 * p))
-    // malformed conf falls back to the 2 MB default instead of throwing
-    spark.conf.set("spark.graft.mergeTargetPartitionBytes", "not-a-number")
-    try assert(t.mergePartitions(Seq(add(10L << 20))) == 5)
-    finally spark.conf.unset("spark.graft.mergeTargetPartitionBytes")
   }
 
   test("check constraints: violating write fails whole commit, table intact") {

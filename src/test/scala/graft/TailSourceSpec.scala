@@ -630,6 +630,69 @@ class TailSourceSpec extends AnyFunSuite {
       ("update_preimage", "a2"), ("update_postimage", "a3")), again)
   }
 
+  // Spark cannot order a struct holding a map, so the typed tails must
+  // pick each side's winner without max(payload struct)
+  private def mapDf(rows: (Long, Int, Map[String, Int], Int)*): DataFrame = {
+    import spark.implicits._
+    rows.toDF("pk", "vendorid", "attrs", "ts")
+  }
+
+  private def typedMapRows(t: LakeTable, from: Long, to: Long) =
+    new GraftTailSource(spark.sqlContext, t, t.changeFeedSchema,
+      changeTypes = true).batchFrame(from, to)
+      .select("_change_type", "pk", "attrs").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getMap[String, Int](2).toMap))
+      .toSet
+
+  test("changeTypes: typed CDF tail on CoW with a MAP column") {
+    val t = LakeTable(spark, LakeTableConfig(freshRoot(), keyCols = Seq("pk"),
+      precombineCol = "ts", partitionCols = Seq("vendorid")))
+    t.bulkInsert(mapDf((1L, 1, Map("a" -> 1), 0), (2L, 1, Map("b" -> 2), 0)))
+    t.upsert(mapDf((1L, 1, Map("a" -> 3), 1), (3L, 1, Map("c" -> 4), 1)))
+    t.delete(mapDf((2L, 1, Map.empty, 0)).select("pk", "vendorid"))
+    assert(typedMapRows(t, -1L, 2L) == Set(
+      ("insert", 1L, Map("a" -> 1)), ("insert", 2L, Map("b" -> 2)),
+      ("update_preimage", 1L, Map("a" -> 1)),
+      ("update_postimage", 1L, Map("a" -> 3)),
+      ("insert", 3L, Map("c" -> 4)),
+      ("delete", 2L, Map("b" -> 2))))
+  }
+
+  test("changeTypes: typed CDF tail on MoR with a MAP column") {
+    val t = LakeTable(spark, LakeTableConfig(freshRoot(), keyCols = Seq("pk"),
+      precombineCol = "ts", partitionCols = Seq("vendorid"),
+      storageType = "mor"))
+    t.bulkInsert(mapDf((1L, 1, Map("a" -> 1), 0), (2L, 1, Map("b" -> 2), 0)))
+    t.upsert(mapDf((1L, 1, Map("a" -> 3), 1), (3L, 1, Map("c" -> 4), 1)))
+    t.delete(mapDf((2L, 1, Map.empty, 0)).select("pk", "vendorid"))
+    // c1 + c2 classify as one fused run
+    assert(typedMapRows(t, -1L, 2L) == Set(
+      ("update_preimage", 1L, Map("a" -> 1)),
+      ("update_postimage", 1L, Map("a" -> 3)),
+      ("insert", 3L, Map("c" -> 4)),
+      ("delete", 2L, Map("b" -> 2))))
+    // a run of one commit
+    t.upsert(mapDf((1L, 1, Map("a" -> 5), 2)))
+    assert(typedMapRows(t, 2L, 3L) == Set(
+      ("update_preimage", 1L, Map("a" -> 3)),
+      ("update_postimage", 1L, Map("a" -> 5))))
+  }
+
+  test("CoW typed tail fails loud when a commit stamps one key twice") {
+    // the fused classification keeps ONE stamped row per record key; a
+    // partition-scoped table can stamp the same key in two partitions
+    // in one commit, and that must fail the batch, not pick one row
+    val t = LakeTable(spark, LakeTableConfig(freshRoot(), keyCols = Seq("pk"),
+      precombineCol = "ts", partitionCols = Seq("vendorid")))
+    t.bulkInsert(df((1L, 1, "a", 0), (2L, 2, "b", 0)))
+    t.upsert(df((5L, 1, "x", 1), (5L, 2, "y", 1)))
+    assert(t.read().filter(col("pk") === 5L).count() == 2)
+    val src = new GraftTailSource(spark.sqlContext, t, t.changeFeedSchema,
+      changeTypes = true)
+    val e = intercept[Exception](src.batchFrame(0L, 1L).collect())
+    assert(e.getMessage.contains("more than one row stamped"), e.getMessage)
+  }
+
   test("MoR tail derives tombstones from a metadata-only partition drop") {
     val t = morTable(freshRoot())
     t.bulkInsert(df((1L, 1, "a", 0), (2L, 2, "b", 0)))
