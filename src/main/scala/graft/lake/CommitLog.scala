@@ -140,7 +140,7 @@ final class CommitConflict(msg: String) extends IllegalStateException(msg)
   * @param schemaJson table schema as of `id` (the last commit's)
   * @param schemas    distinct FILE schemas among `live` (schema
   *                   evolution: each live file reads with the schema its
-  *                   add-commit recorded — see LakeTable.pathSchemaJson)
+  *                   add-commit recorded — see [[Snapshot.pathSchemas]])
   * @param live       live file set as of `id`, in replay order (the
   *                   LinkedHashMap order a full replay produces, so
   *                   checkpointed and replayed resolution are
@@ -153,6 +153,32 @@ final case class Checkpoint(
     schemas: Seq[String],
     live: Seq[FileAdd],
     schemaIdx: Seq[Int])
+
+/** One resolved version of a table ([[CommitLog.snapshot]]), immutable:
+  * an operation resolves each version it reads exactly once and hands
+  * this value to every helper below it, so it can never mix versions.
+  *
+  * @param id          the resolved commit id; None on an empty table
+  * @param files       live DATA files (base + delta), in replay order
+  * @param dvs         live deletion-vector sidecars, in replay order
+  * @param schemaJson  table schema as of `id` (the last commit's)
+  * @param pathSchemas `path -> schemaJson of its add-commit` for every
+  *                    live file — the FILE schema a reader adapts from
+  */
+final case class Snapshot(
+    id: Option[Long],
+    files: Seq[FileAdd],
+    dvs: Seq[FileAdd],
+    schemaJson: Option[String],
+    pathSchemas: Map[String, String]) {
+  /** the full live set, DVs included — checkpoints, clones and savepoint
+    * pins must cover DV sidecars or travel/clean would lose them */
+  def all: Seq[FileAdd] = files ++ dvs
+}
+
+object Snapshot {
+  val Empty: Snapshot = Snapshot(None, Seq.empty, Seq.empty, None, Map.empty)
+}
 
 /** A compacted run of archived commits (Hudi timeline-archival role,
   * the companion of `KEEP_LATEST_COMMITS` the reference relies on —
@@ -658,26 +684,17 @@ final class CommitLog(root: String, hadoopConf: Configuration,
     maybeCheckpoint()
   }
 
-  /** Live file set as of `asOf` (inclusive); latest when None. Resolves
-    * from the newest [[Checkpoint]] at-or-before the target plus the
-    * commit tail — a full replay only when no checkpoint covers the
-    * target (pre-checkpoint time travel, or a table that never wrote
-    * one). Both paths produce the IDENTICAL sequence, order included:
-    * the checkpoint stores the replay order it was built from. */
-  /** Live DATA files (base + delta) — deletion-vector sidecars are
-    * tracked through the same add/remove fold but surfaced separately
-    * ([[liveDvs]]), so every existing consumer of the data live set
-    * stays correct without a filter at each site. */
-  def liveFiles(asOf: Option[Long] = None): Seq[FileAdd] =
-    liveFilesAll(asOf).filterNot(_.isDv)
-
-  /** Live deletion-vector sidecars (kind == "dv") at the pin. */
-  def liveDvs(asOf: Option[Long] = None): Seq[FileAdd] =
-    liveFilesAll(asOf).filter(_.isDv)
-
-  /** the full live set, DVs included — checkpoints and savepoint pins
-    * must cover DV sidecars or travel/clean would lose them */
-  def liveFilesAll(asOf: Option[Long] = None): Seq[FileAdd] = {
+  /** Resolve ONE version: the state as of `asOf` (inclusive), the head
+    * when None — one listing of commit ids, one checkpoint lookup, one
+    * fold of the newest [[Checkpoint]] at-or-before the target plus the
+    * commit tail. Checkpointed and replayed resolution produce the
+    * IDENTICAL [[Snapshot]], order included.
+    *
+    * Contract: an operation resolves each version it reads exactly once,
+    * here, and passes the value down; helpers below the entry point
+    * never resolve the head themselves. The three methods below are
+    * projections for callers that need one fact of one resolution. */
+  def snapshot(asOf: Option[Long] = None): Snapshot = {
     val ids = listIds
     asOf.foreach { id =>
       require(id > archiveUpTo,
@@ -686,47 +703,33 @@ final class CommitLog(root: String, hadoopConf: Configuration,
           "longer travelable")
       require(ids.contains(id), s"no commit $id on the timeline")
     }
-    val target = asOf.orElse(ids.lastOption).getOrElse(return Seq.empty)
+    val target = asOf.orElse(ids.lastOption).getOrElse(return Snapshot.Empty)
     val ck = latestCheckpointAt(target)
     val from = ck.map(_.id).getOrElse(-1L)
     val live = mutable.LinkedHashMap.empty[String, FileAdd]
-    ck.foreach(_.live.foreach(a => live(a.path) = a))
+    val schemaOf = mutable.HashMap.empty[String, String]
+    var schemaJson = ck.map(_.schemaJson)
+    ck.foreach(c => c.live.iterator.zip(c.schemaIdx.iterator).foreach {
+      case (a, i) => live(a.path) = a; schemaOf(a.path) = c.schemas(i)
+    })
     ids.withFilter(id => id > from && id <= target).map(read).foreach { c =>
       c.removes.foreach(live.remove)
-      c.adds.foreach(a => live(a.path) = a)
+      c.adds.foreach { a => live(a.path) = a; schemaOf(a.path) = c.schemaJson }
+      schemaJson = Some(c.schemaJson)
     }
-    live.values.toSeq
+    val (dvs, files) = live.values.toSeq.partition(_.isDv)
+    Snapshot(Some(target), files, dvs, schemaJson, schemaOf.toMap)
   }
 
-  def schemaJsonAsOf(asOf: Option[Long] = None): Option[String] = {
-    val ids = listIds
-    val target = asOf.orElse(ids.lastOption).getOrElse(return None)
-    val ck = latestCheckpointAt(target)
-    val from = ck.map(_.id).getOrElse(-1L)
-    ids.filter(id => id > from && id <= target).lastOption
-      .map(read(_).schemaJson)
-      .orElse(ck.map(_.schemaJson))
-  }
+  /** Live DATA files (base + delta) as of `asOf` ([[Snapshot.files]]). */
+  def liveFiles(asOf: Option[Long] = None): Seq[FileAdd] = snapshot(asOf).files
 
-  /** `path -> schemaJson of its add-commit` for every file LIVE at
-    * `upTo` plus every file added after the covering checkpoint (dead
-    * or alive) — the schema-evolution scan's lookup structure
-    * (LakeTable.pathSchemaJson). Callers only ever look up live paths;
-    * files both added AND removed before the checkpoint are absent,
-    * which is exactly what makes this O(tail), not O(history). */
-  def pathSchemas(upTo: Option[Long] = None): Map[String, String] = {
-    val ids = listIds
-    val target = upTo.orElse(ids.lastOption).getOrElse(return Map.empty)
-    val ck = latestCheckpointAt(target)
-    val from = ck.map(_.id).getOrElse(-1L)
-    val m = mutable.HashMap.empty[String, String]
-    ck.foreach(c => c.live.iterator.zip(c.schemaIdx.iterator).foreach {
-      case (a, i) => m(a.path) = c.schemas(i)
-    })
-    ids.withFilter(id => id > from && id <= target).map(read)
-      .foreach(c => c.adds.foreach(a => m(a.path) = c.schemaJson))
-    m.toMap
-  }
+  /** Live deletion-vector sidecars as of `asOf` ([[Snapshot.dvs]]). */
+  def liveDvs(asOf: Option[Long] = None): Seq[FileAdd] = snapshot(asOf).dvs
+
+  /** Table schema JSON as of `asOf` ([[Snapshot.schemaJson]]). */
+  def schemaJsonAsOf(asOf: Option[Long] = None): Option[String] =
+    snapshot(asOf).schemaJson
 
   // ---- checkpoints (the Delta parquet-checkpoint role; see [[Checkpoint]])
 
@@ -791,9 +794,10 @@ final class CommitLog(root: String, hadoopConf: Configuration,
   private def writeCheckpoint(at: Long): Unit = {
     val dst = ckptPath(at)
     if (fs.exists(dst)) return // idempotent: same id ⇒ same content
-    val live = liveFilesAll(Some(at))
-    val bySchema = pathSchemas(Some(at))
-    val table = schemaJsonAsOf(Some(at)).getOrElse(return)
+    val snap = snapshot(Some(at))
+    val live = snap.all
+    val bySchema = snap.pathSchemas
+    val table = snap.schemaJson.getOrElse(return)
     val schemas = live.map(a => bySchema.getOrElse(a.path, table)).distinct
     val idxOf = schemas.zipWithIndex.toMap
     val ck = Checkpoint(at, table, schemas, live,
@@ -1251,7 +1255,7 @@ final class CommitLog(root: String, hadoopConf: Configuration,
       .getOrElse(cutoff0)
     if (cutoff < 0 || cutoff < cleanedUpTo) return (-1L, Seq.empty)
     val pinned: Set[String] = pins.filter(_ <= cutoff)
-      .flatMap(s => liveFilesAll(Some(s)).map(_.path)).toSet
+      .flatMap(s => snapshot(Some(s)).all.map(_.path)).toSet
     val removedEarly = commits.filter(_.id <= cutoff).flatMap(_.removes)
     (cutoff, removedEarly.filterNot(pinned).filter(owned))
   }

@@ -591,8 +591,9 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         kind = "delta", basedOn = Some(basedOn), commitMeta = dropMeta,
         // a delta append reads nothing; collisions (even cross-partition
         // under a global index) resolve deterministically at read time by
-        // (precombine, commit id) — identical to serial execution
-        partitionScoped = true)
+        // (precombine, commit id) — identical to serial execution, so it
+        // rebases over any intervener, a compaction of its partitions too
+        partitionScoped = true, readFree = true)
       maybeInlineCompact()
       return cid
     }
@@ -720,7 +721,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     require(badDerived.isEmpty,
       s"UPDATE may not assign engine-derived (generated/ALWAYS-identity) " +
         s"columns: ${badDerived.mkString(",")}")
-    val known = tableSchema(None).fieldNames.toSet
+    val known = tableSchema().fieldNames.toSet
     val unknown = sets.keySet -- known
     require(unknown.isEmpty, s"unknown column(s): ${unknown.mkString(",")}")
     withOccRetry(updateDvOnce(pred, sets))
@@ -731,14 +732,15 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     val id = log.nextId
     val basedOn = log.latestId.getOrElse(log.EmptyTable)
     if (basedOn < 0) return -1L
-    val live = log.liveFiles()
-    val resolved = resolvePredicate(pred, None)
-    val files = resolved.fold(live)(p => pruneFilesFor(live, p, None))
+    val snap = log.snapshot()
+    val live = snap.files
+    val resolved = resolvePredicate(pred, snap)
+    val files = resolved.fold(live)(p => pruneFilesFor(live, p, snap))
     if (files.isEmpty) return basedOn
-    val target = tableSchema(None)
+    val target = tableSchema(snap)
     val targetKey = SchemaEvo.adaptKey(target)
-    val jsonOf = pathSchemaJson(None)
-    val dvRows = dvRowsFor(files, None)
+    val jsonOf = snap.pathSchemas
+    val dvRows = dvRowsFor(files, snap)
     // candidate rows with positions, adapted to the CURRENT table schema
     // (pred and assignments resolve against current names), existing DVs
     // applied so already-superseded positions never re-match
@@ -787,13 +789,14 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     if (keys.isEmpty) return log.latestId.getOrElse(-1L)
     val id = log.nextId
     val basedOn = log.latestId.getOrElse(log.EmptyTable)
-    val live = log.liveFiles()
+    val snap = log.snapshot()
+    val live = snap.files
     val userPartsKnown = config.partitionCols.forall(keys.columns.contains)
     val oldFiles =
       if (effParts.isEmpty) pruneByKeyRange(keys, live)
       else if (!config.globalIndex && userPartsKnown)
         pruneByKeyRange(keys, filesMatchingTuples(live, withDerived(keys)))
-      else pruneByKeyRange(keys, filesInKeyPartitions(keys, live))
+      else pruneByKeyRange(keys, filesInKeyPartitions(keys, live, snap))
     if (oldFiles.isEmpty) return log.latestId.getOrElse(-1L)
     val joinCols =
       if (!config.globalIndex && config.partitionCols.nonEmpty && userPartsKnown)
@@ -802,15 +805,15 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // candidate rows WITH positions, existing DVs applied (an
     // already-deleted position can never re-enter a new DV, keeping
     // per-position counts exact)
-    val jsonOf = pathSchemaJson(None)
-    val dvRows = dvRowsFor(oldFiles, None)
-    val groups = oldFiles.groupBy(f =>
-      jsonOf.getOrElse(f.path, tableSchema(None).json))
+    val jsonOf = snap.pathSchemas
+    val dvRows = dvRowsFor(oldFiles, snap)
+    val tableJson = tableSchema(snap).json
+    val groups = oldFiles.groupBy(f => jsonOf.getOrElse(f.path, tableJson))
     val posCols = joinCols.map(c => col("`" + c + "`"))
     val candidates = groups.toSeq.map { case (j, fs) =>
       val fileSchema = parseSchema(j)
       val raw0 = spark.read.schema(fileSchema).parquet(fs.map(_.path): _*)
-      val raw = dvRows.fold(raw0)(dv => antiJoinDvs(raw0, dv))
+      val raw = dvRows.fold(raw0)(dv => joinDvs(raw0, dv))
       raw.select(posCols :+
         DvCodec.normPathCol(col("_metadata.file_path")).as("__dv_file") :+
         col("_metadata.row_index").as("__dv_pos"): _*)
@@ -823,9 +826,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     try {
       val (dir, adds) = writeDvSidecars(id, "dv_delete", matches, oldFiles)
       if (adds.isEmpty) return log.latestId.getOrElse(-1L) // nothing matched
-      val schemaJson = log.schemaJsonAsOf(None).getOrElse(tableSchema(None).json)
       try log.append(Commit(id, "dv_delete", System.currentTimeMillis(),
-        schemaJson, adds, Seq.empty), basedOnLatest = basedOn)
+        tableJson, adds, Seq.empty), basedOnLatest = basedOn)
       catch { case e: Throwable =>
         try { fs.delete(dir, true); () }
         catch { case scala.util.control.NonFatal(_) => () }
@@ -903,12 +905,13 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       pred: org.apache.spark.sql.Column): Option[Long] = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    if (!exists || config.partitionCols.isEmpty) return None
-    val live = log.liveFiles()
+    if (config.partitionCols.isEmpty) return None
+    val snap = log.snapshot()
+    val live = snap.files
     if (live.isEmpty) return None // read(pred) on empty is a cheap no-op
     if (live.exists(_.isDelta) && !groupLocalMergeSafe) return None
-    val keys = partitionKeyRows(live, None).getOrElse(return None)
-    val tbl = tableSchema(None)
+    val keys = partitionKeyRows(live, snap).getOrElse(return None)
+    val tbl = tableSchema(snap)
     val partSchema = StructType(config.partitionCols.map(c =>
       tbl.fields.find(_.name == c).getOrElse(return None)))
     // one probe row per DISTINCT stored tuple, tagged with the tuple
@@ -946,7 +949,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // empty payload at the pinned table schema: SchemaEvo sees an
     // unchanged schema and the writer emits zero files — the commit is
     // the removals (the truncate/empty-region-overwrite precedent)
-    Some(writeCommit(readOrEmpty(Seq.empty, None), "delete",
+    Some(writeCommit(readOrEmpty(Seq.empty, snap), "delete",
       doomed.map(_.path), Some(id), basedOn = Some(basedOn),
       commitMeta = Map("delete.metadataOnly" -> "true"),
       partitionScoped = true))
@@ -974,7 +977,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       .persist()
     try {
       val deduped = dedupWithinBatch(incoming)
-      val live = if (exists) log.liveFiles() else Seq.empty
+      val snap = log.snapshot()
+      val live = snap.files
       // overwrite scope is the USER partition: every live file whose user
       // partition levels match the batch is superseded, including buckets
       // the batch did not touch (the derived bucket is a file-group
@@ -993,11 +997,11 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         if (!config.globalIndex) (touched, deduped)
         else {
           val others = live.filterNot(touched.toSet)
-          val foreign = filesInKeyPartitions(incoming, others)
+          val foreign = filesInKeyPartitions(incoming, others, snap)
           if (foreign.isEmpty) (touched, deduped)
           else {
             val doomed = incoming.select(config.keyCols.map(col): _*).distinct().as("k")
-            val cur = readFiles(foreign)
+            val cur = readFiles(foreign, snap)
             val cond = config.keyCols.map(c => cur(c) <=> doomed(c)).reduce(_ && _)
             val keepers = cur.join(doomed, cond, "left_anti")
             (touched ++ foreign,
@@ -1041,14 +1045,12 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       require(incoming.filter(!inRegion).isEmpty,
         "overwriteWhere: every batch row must satisfy the predicate — " +
           "rows outside the replaced region would silently widen the overwrite")
-      val live = if (exists) log.liveFiles() else Seq.empty
+      val snap = log.snapshot()
+      val live = snap.files
       // same analyzed-probe route as read(pruneBy): the stats index
       // drops files (→ partitions) that provably hold no matching row
-      val probe = readOrEmpty(Seq.empty, None).filter(pred)
-      val cond = probe.queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }
-      val may = cond.fold(live)(p => pruneByColStats(live, p))
+      val may = resolvePredicate(pred, snap)
+        .fold(live)(p => pruneByColStats(live, p, snap))
       val nUser = config.partitionCols.size
       val batchEmpty = incoming.isEmpty
       // rewrite scope = partitions that MAY hold a pred-matching row
@@ -1086,12 +1088,12 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         if (!config.globalIndex || batchEmpty) touched
         else {
           val others = live.filterNot(touched.toSet)
-          touched ++ filesInKeyPartitions(incoming, others)
+          touched ++ filesInKeyPartitions(incoming, others, snap)
         }
       val payload =
         if (scope.isEmpty) dedupWithinBatch(incoming)
         else {
-          val keep = mergeIfNeeded(scope)
+          val keep = mergeIfNeeded(scope, snap)
             .filter(!inRegion)
             .join(incoming.select(dedupCols.map(col): _*).distinct(),
               dedupCols, "left_anti")
@@ -1117,7 +1119,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     val id = log.nextId
     val incoming = withDerived(withMeta(batch, id))
       .withColumn("_seq", monotonically_increasing_id())
-    val live = if (exists) log.liveFiles() else Seq.empty
+    val live = log.liveFiles()
     writeCommit(dedupWithinBatch(incoming), "insert_overwrite",
       live.map(_.path), Some(id), basedOn = Some(basedOn),
       commitMeta = dropMeta ++ meta,
@@ -1289,14 +1291,15 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // table thus rewrites only the partitions actually holding the keys,
     // never the whole table; semantics are unchanged because partitions
     // the probe skips cannot contain a matching key.
-    val live = log.liveFiles()
+    val snap = log.snapshot()
+    val live = snap.files
     val userPartsKnown = config.partitionCols.forall(keys.columns.contains)
     val oldFiles =
       if (effParts.isEmpty) live
       else if (!config.globalIndex && userPartsKnown)
         filesMatchingTuples(live, withDerived(keys))
-      else filesInKeyPartitions(keys, live)
-    val current = readOrEmpty(oldFiles)
+      else filesInKeyPartitions(keys, live, snap)
+    val current = readOrEmpty(oldFiles, snap)
     // identity for the anti-join: when the keys frame pins the partition
     // (non-global index), match on (partition..., key) so the same key
     // value in a co-touched partition survives — mirrors MoR tombstones
@@ -1398,17 +1401,19 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       withDerived(source0).withColumn("_seq", monotonically_increasing_id()))
       .persist()
     try {
-      val live = log.liveFiles()
+      val snap = log.snapshot()
+      val live = snap.files
       val oldFiles =
         if (hasBySource || effParts.isEmpty) live
         // a subset MoR delta-merge is only sound when dedup groups are
         // partition-local; otherwise a key's rows may span partitions
         else if (config.isMor && !groupLocalMergeSafe) live
         else (filesMatchingTuples(live, src) ++
-          (if (config.globalIndex) filesInKeyPartitions(src, live)
+          (if (config.globalIndex) filesInKeyPartitions(src, live, snap)
            else Seq.empty)).distinct
       val current =
-        if (oldFiles.isEmpty) readOrEmpty(oldFiles) else mergeIfNeeded(oldFiles)
+        if (oldFiles.isEmpty) readOrEmpty(oldFiles, snap)
+        else mergeIfNeeded(oldFiles, snap)
       val userCols = current.columns
         .filterNot(c => c == "_commit_id" || c == "_record_key" ||
           c == "_commit_seqno" || c == BucketCol)
@@ -1487,7 +1492,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   // ---- read paths -----------------------------------------------------
 
   /** Latest committed snapshot (reference S4, MockCuratedGlueJob.py:23). */
-  def read(): DataFrame = readSnapshot(None)
+  def read(): DataFrame = readPruned(log.snapshot(), None)
 
   /** Snapshot filtered by `pruneBy`, with DATA SKIPPING on the commit
     * log's per-file column stats (Hudi's column-stats index): files whose
@@ -1506,39 +1511,60 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * columns) pruning is skipped entirely.
     */
   def read(pruneBy: org.apache.spark.sql.Column): DataFrame =
-    read(pruneBy, None)
+    readPruned(log.snapshot(), Some(pruneBy))
 
   /** [[read(pruneBy*]] pinned to a commit: the stats-skipping path over
-    * a SPECIFIC snapshot (scan-stable under concurrent writers — the
-    * DSv2 scan uses this so one query never mixes table versions). */
+    * a SPECIFIC snapshot. */
   def read(pruneBy: org.apache.spark.sql.Column, asOf: Option[Long]): DataFrame = {
-    asOf.foreach(id =>
-      require(id >= log.cleanedUpTo || log.pins.contains(id),
-        s"commit $id was cleaned (retained from ${log.cleanedUpTo})"))
-    // resolve the predicate against the table schema (resolvePredicate:
-    // analyzed probe filter, not optimized) and run every metadata
-    // pruning channel — column stats, partition tuples, key equality
-    val pred = resolvePredicate(pruneBy, asOf)
-    val live = log.liveFiles(asOf)
-    val files = pred.fold(live)(p => pruneFilesFor(live, p, asOf))
-    lastReadFiles = files.size // spec observability, like lastLookupFiles
-    // all-pruned: keep the schema shape stable with the merged (non-empty)
-    // branch — the latest commit may be a delta whose schema carries the
-    // MoR internals morMerge would have dropped
-    (if (files.isEmpty)
-       withEmptyFileName(readOrEmpty(files, asOf).drop("_seq", "_deleted"))
-     else mergeIfNeeded(files, asOf, tagFileName = config.metaColumns))
-      .filter(pruneBy)
+    asOf.foreach(requireReadable)
+    readPruned(log.snapshot(asOf), Some(pruneBy))
+  }
+
+  /** [[read(pruneBy*]] over the [[Snapshot]] a scan surface (DSv2
+    * table, DSv1 relation) pinned, so one query never mixes versions. */
+  private[graft] def read(snap: Snapshot,
+      pruneBy: Option[org.apache.spark.sql.Column]): DataFrame = {
+    snap.id.foreach(requireReadable)
+    readPruned(snap, pruneBy)
   }
 
   /** Time travel: snapshot as of a commit id on the timeline. A commit
     * below the cleaner horizon stays readable while pinned (savepoint
     * or tag). */
   def readAsOf(commitId: Long): DataFrame = {
-    require(commitId >= log.cleanedUpTo || log.pins.contains(commitId),
-      s"commit $commitId was cleaned (retained from ${log.cleanedUpTo})")
-    readSnapshot(Some(commitId))
+    requireReadable(commitId)
+    readPruned(log.snapshot(Some(commitId)), None)
   }
+
+  /** the commit's files may already be physically cleaned: refuse to
+    * read below the cleaner horizon unless a savepoint or tag pins it */
+  private def requireReadable(id: Long): Unit =
+    require(id >= log.cleanedUpTo || log.pins.contains(id),
+      s"commit $id was cleaned (retained from ${log.cleanedUpTo})")
+
+  /** The snapshot read behind the public surfaces: every metadata
+    * pruning channel ([[pruneFilesFor]]), the merge of what survives,
+    * then the predicate re-applied row-level. */
+  private def readPruned(snap: Snapshot,
+      pruneBy: Option[org.apache.spark.sql.Column]): DataFrame = {
+    val files = pruneBy.flatMap(resolvePredicate(_, snap))
+      .fold(snap.files)(p => pruneFilesFor(snap.files, p, snap))
+    lastReadFiles = files.size // spec observability, like lastLookupFiles
+    val out = scanOrEmpty(snap, files)
+    pruneBy.fold(out)(out.filter)
+  }
+
+  /** The one result rule of the snapshot read surfaces: the merged scan
+    * of `files` (`_file_name`-tagged on metaColumns tables), or, with no
+    * file left to scan, an empty frame with the same columns — the table
+    * schema minus the MoR internals the merge drops. */
+  private def scanOrEmpty(snap: Snapshot, files: Seq[FileAdd]): DataFrame =
+    if (files.nonEmpty) mergeIfNeeded(files, snap, tagFileName = config.metaColumns)
+    else {
+      val empty = readOrEmpty(Seq.empty, snap).drop("_seq", "_deleted")
+      if (!config.metaColumns) empty
+      else empty.withColumn("_file_name", lit(null).cast("string"))
+    }
 
   /** Incremental query (Hudi's third read type, beside snapshot and
     * read-optimized): current row versions ingested AFTER `fromCommit`.
@@ -1583,9 +1609,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     require(from < to, s"need from < to, got [$from, $to]")
     // same horizon guard as readAsOf: the commit JSONs survive cleaning,
     // but a from-snapshot below the horizon references deleted files
-    Seq(from, to).foreach(id =>
-      require(id >= log.cleanedUpTo || log.pins.contains(id),
-        s"commit $id was cleaned (retained from ${log.cleanedUpTo})"))
+    Seq(from, to).foreach(requireReadable)
     // an undecided transaction commit inside the window would later
     // materialize at an id this feed already emitted around — a CDF
     // consumer applying the changes in served order would misorder it.
@@ -1593,8 +1617,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     log.stagedFloor.filter(_ <= to).foreach(f => require(f > to,
       s"commit $f is an undecided transaction commit inside [$from, $to] " +
         "— retry after the transaction decides"))
-    val newSnap = readSnapshot(Some(to))
-    val oldSnap = readSnapshot(Some(from))
+    val newSnap = readPruned(log.snapshot(Some(to)), None)
+    val oldSnap = readPruned(log.snapshot(Some(from)), None)
     val keyed = dedupCols
     // ONE null-safe full-outer join of the two snapshots (r18): the
     // previous shape derived inserts/updates (changed ⟕ old keys),
@@ -1642,22 +1666,19 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * delta merge — stale by up to the un-compacted deltas but as cheap as
     * a CoW scan. For CoW tables this equals read().
     */
-  def readOptimized(): DataFrame = {
-    val base = log.liveFiles().filter(!_.isDelta)
-    readOrEmpty(base)
-  }
+  def readOptimized(): DataFrame = readOptimized(None, log.snapshot())
 
   /** [[readOptimized]] with the snapshot read's predicate file pruning
-    * (stats/partition/key skipping over the BASE files) and an optional
-    * pin — the SQL `db.t.ro` surface. Base files are disjoint row sets
-    * (only deltas overlap), so this is a plain pruned union scan with
-    * no merge, which is the entire point of the `_ro` view. */
-  def readOptimized(pruneBy: Option[org.apache.spark.sql.Column],
-      asOf: Option[Long]): DataFrame = {
-    val base = log.liveFiles(asOf).filter(!_.isDelta)
-    val files = pruneBy.flatMap(c => resolvePredicate(c, asOf))
-      .map(p => pruneFilesFor(base, p, asOf)).getOrElse(base)
-    readOrEmpty(files)
+    * (stats/partition/key skipping over the BASE files) over a pinned
+    * snapshot — the SQL `db.t.ro` surface. Base files are disjoint row
+    * sets (only deltas overlap), so this is a plain pruned union scan
+    * with no merge, which is the entire point of the `_ro` view. */
+  private[graft] def readOptimized(pruneBy: Option[org.apache.spark.sql.Column],
+      snap: Snapshot): DataFrame = {
+    val base = snap.files.filter(!_.isDelta)
+    val files = pruneBy.flatMap(c => resolvePredicate(c, snap))
+      .map(p => pruneFilesFor(base, p, snap)).getOrElse(base)
+    readOrEmpty(files, snap)
   }
 
   /** Partition-pruned snapshot: only the named partition values' live
@@ -1665,8 +1686,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * scan cost is the touched partitions, not the table).
     */
   def readPartitions(values: Set[String]): DataFrame = {
-    val files = log.liveFiles().filter(f => values.contains(f.partition))
-    if (files.isEmpty) readOrEmpty(files) else mergeIfNeeded(files)
+    val snap = log.snapshot()
+    scanOrEmpty(snap, snap.files.filter(f => values.contains(f.partition)))
   }
 
   /** Point lookup by record key — the footer key-range index as a
@@ -1695,7 +1716,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // so Spark reuses its shuffle outputs across the jobs (re-evaluation
     // skips the expensive stages); an explicit localCheckpoint was
     // A/B-measured slower (block-write overhead, no stage saved)
-    val live = log.liveFiles()
+    val snap = log.snapshot()
+    val live = snap.files
     // hash-bucketed tables prune by file group FIRST: a probe key can
     // only live in the bucket it hashes into, which holds even when
     // per-file key RANGES span the whole key space (hash-spread ingest
@@ -1715,11 +1737,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     lastLookupFiles = candidates.size
     lastLookupLive = live.size
     val probe = keys.select(keyStrExpr.as("_record_key")).distinct()
-    // all-pruned: same schema-stability drop as read(pruneBy) — the
-    // latest commit may be a delta whose schema carries MoR internals
-    (if (candidates.isEmpty) readOrEmpty(candidates).drop("_seq", "_deleted")
-     else mergeIfNeeded(candidates))
-      .join(probe, Seq("_record_key"), "left_semi")
+    scanOrEmpty(snap, candidates).join(probe, Seq("_record_key"), "left_semi")
   }
 
   /** Widest schema across the WHOLE timeline, not just base commits:
@@ -1823,15 +1841,15 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   def shallowClone(targetRoot: String, asOf: Option[Long] = None): LakeTable = {
     // borrow the FULL live set — deletion-vector sidecars included, or a
     // clone of a DV'd table would resurrect the deleted rows
-    val files = log.liveFilesAll(asOf)
-    val schemaJson = log.schemaJsonAsOf(asOf)
-      .getOrElse(new StructType().json)
+    val snap = log.snapshot(asOf)
+    val files = snap.all
+    val schemaJson = snap.schemaJson.getOrElse(new StructType().json)
     val clone = new LakeTable(spark, config.copy(root = targetRoot))
     require(!clone.exists, s"clone target $targetRoot already exists")
     // provenance for write-audit-publish: publishFrom validates the
     // fast-forward precondition (source unchanged since this snapshot)
     // against these, so they must travel atomically with the clone
-    val srcCommit = asOf.orElse(log.latestId).getOrElse(log.EmptyTable)
+    val srcCommit = snap.id.getOrElse(log.EmptyTable)
     val provenance = Map(
       "clone.sourceRoot" -> config.root,
       "clone.sourceCommit" -> srcCommit.toString)
@@ -1840,7 +1858,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // through id adaptation) — one clone commit per distinct source
     // schema, then a final schema commit pinning the table schema so
     // schemaJsonAsOf(latest) is the evolved schema, not the last group's
-    val jsonOf = pathSchemaJson(asOf)
+    val jsonOf = snap.pathSchemas
     val groups = scala.collection.mutable.LinkedHashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[FileAdd]]
     files.foreach(f => groups.getOrElseUpdate(jsonOf.getOrElse(f.path, schemaJson),
@@ -1893,11 +1911,11 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   def deepClone(targetRoot: String, asOf: Option[Long] = None): LakeTable = {
     val clone = new LakeTable(spark, config.copy(root = targetRoot))
     require(!clone.exists, s"clone target $targetRoot already exists")
-    val clean = nativeScanFiles(asOf).filter(_ => log.liveDvs(asOf).isEmpty)
+    val snap = log.snapshot(asOf)
+    val clean = nativeScanFiles(snap).filter(_ => snap.dvs.isEmpty)
     clean match {
       case Some(files) =>
-        val schemaJson = log.schemaJsonAsOf(asOf)
-          .getOrElse(new StructType().json)
+        val schemaJson = snap.schemaJson.getOrElse(new StructType().json)
         val srcFs = new Path(config.root).getFileSystem(hconf)
         val dstDir = new Path(targetRoot, "data/c00000000-deepclone")
         val dstFs = dstDir.getFileSystem(hconf)
@@ -1920,7 +1938,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
           }
           f.copy(path = dstFs.makeQualified(dp).toString)
         }
-        val jsonOf = pathSchemaJson(asOf)
+        val jsonOf = snap.pathSchemas
         // one commit per distinct source FILE schema (same discipline as
         // shallowClone: pre-evolution files stay readable through id
         // adaptation), then a schema commit pinning the table schema
@@ -1947,7 +1965,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       case None =>
         // merged-snapshot rewrite: user columns only (engine stamps are
         // re-minted by the clone's own commit)
-        val snap0 = asOf.map(readAsOf).getOrElse(read())
+        val snap0 = read(snap, None)
         val user = snap0.schema.fieldNames
           .filterNot(SchemaEvo.isInternal).toSeq
         clone.bulkInsert(snap0.select(user.map(col): _*))
@@ -1998,8 +2016,10 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // FULL live sets (DV sidecars included): an audit whose changes are
     // position deletes must publish its sidecars with it, and a fold on
     // the audit must retire the source's borrowed sidecars
-    val srcLive = log.liveFilesAll().map(f => f.path -> f).toMap
-    val auditLive = audit.log.liveFilesAll()
+    val src = log.snapshot()
+    val srcLive = src.all.map(f => f.path -> f).toMap
+    val auditSnap = audit.log.snapshot()
+    val auditLive = auditSnap.all
     val adds = auditLive.filterNot(f => srcLive.contains(f.path))
     val removes = {
       val keep = auditLive.map(_.path).toSet
@@ -2014,12 +2034,11 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         s"cannot fast-forward publish: ${config.root} advanced to commit " +
           s"$head since the audit cloned commit $sourceCommit — re-clone " +
           "and re-audit against the current snapshot")
-    val schemaJson = audit.log.schemaJsonAsOf(None)
-      .getOrElse(tableSchema(None).json)
+    val schemaJson = auditSnap.schemaJson.getOrElse(tableSchema(src).json)
     // one commit = one schema: every audit-added file must already be
     // at the audit head schema (field order differences are fine — the
     // adaptation KEY is order-insensitive)
-    val jsonOf = audit.pathSchemaJson(None)
+    val jsonOf = auditSnap.pathSchemas
     val headKey = SchemaEvo.adaptKey(parseSchema(schemaJson))
     adds.filterNot(_.isDv).foreach(f => require(
       jsonOf.get(f.path).exists(j => SchemaEvo.adaptKey(parseSchema(j)) == headKey),
@@ -2030,9 +2049,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // invariant proved this — re-prove here, fail before the append)
     val retainedSchemas = {
       val gone = removes.toSet
-      val srcJsonOf = pathSchemaJson(None)
-      log.liveFiles().filterNot(f => gone.contains(f.path))
-        .flatMap(f => srcJsonOf.get(f.path)).distinct.map(parseSchema)
+      src.files.filterNot(f => gone.contains(f.path))
+        .flatMap(f => src.pathSchemas.get(f.path)).distinct.map(parseSchema)
     }
     SchemaEvo.validateAgainstLiveFiles(parseSchema(schemaJson), retainedSchemas)
     val id = math.max(log.nextId, audit.log.latestId.getOrElse(0L))
@@ -2066,7 +2084,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     */
   def renameColumn(oldName: String, newName: String): Long = {
     require(exists, s"table ${config.root} does not exist")
-    val s = tableSchema(None)
+    val s = tableSchema()
     require(s.fieldNames.contains(oldName), s"no column '$oldName'")
     require(!s.fieldNames.contains(newName), s"column '$newName' already exists")
     require(!SchemaEvo.isInternal(oldName) && !pinnedCols.contains(oldName),
@@ -2083,7 +2101,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * dropped data never resurrects. */
   def dropColumn(name: String): Long = {
     require(exists, s"table ${config.root} does not exist")
-    val s = tableSchema(None)
+    val s = tableSchema()
     require(s.fieldNames.contains(name), s"no column '$name'")
     require(!SchemaEvo.isInternal(name) && !pinnedCols.contains(name),
       s"column '$name' is pinned by the table configuration")
@@ -2096,7 +2114,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   def addColumn(name: String, dt: DataType,
       defaultSql: Option[String] = None): Long = {
     require(exists, s"table ${config.root} does not exist")
-    val s = tableSchema(None)
+    val s = tableSchema()
     require(!s.fieldNames.contains(name), s"column '$name' already exists")
     require(name.nonEmpty && !SchemaEvo.isInternal(name),
       s"invalid column name '$name'")
@@ -2172,7 +2190,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * those files read as. Validated now, loudly, like ADD COLUMN. */
   def setColumnDefault(name: String, defaultSql: Option[String]): Long = {
     require(exists, s"table ${config.root} does not exist")
-    val s = tableSchema(None)
+    val s = tableSchema()
     val f = s.fields.find(_.name == name)
       .getOrElse(throw new IllegalArgumentException(s"no column '$name'"))
     require(!SchemaEvo.isInternal(name), s"invalid column name '$name'")
@@ -2194,7 +2212,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * narrow physical type; reads cast up by column id. */
   def widenColumn(name: String, dt: DataType): Long = {
     require(exists, s"table ${config.root} does not exist")
-    val s = tableSchema(None)
+    val s = tableSchema()
     val f = s.fields.find(_.name == name)
       .getOrElse(throw new IllegalArgumentException(s"no column '$name'"))
     require(!SchemaEvo.isInternal(name) && !pinnedCols.contains(name),
@@ -2249,7 +2267,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     require(!SchemaEvo.isInternal(path.head) &&
         !pinnedCols.contains(path.head),
       s"column '${path.head}' is pinned by the table configuration")
-    schemaCommit(op(tableSchema(None)))
+    schemaCommit(op(tableSchema()))
   }
 
   /** publish a metadata-only schema commit (op "schema"): adds/removes
@@ -2263,9 +2281,9 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       if (SchemaEvo.isInternal(f.name)) f
       else SchemaEvo.renameField(
         f.copy(dataType = SchemaEvo.stampIds(f.dataType)), f.name)))
-    val jsonOf = pathSchemaJson(None)
+    val head = log.snapshot()
     SchemaEvo.validateAgainstLiveFiles(stamped,
-      log.liveFiles().flatMap(f => jsonOf.get(f.path)).distinct.map(parseSchema))
+      head.files.flatMap(f => head.pathSchemas.get(f.path)).distinct.map(parseSchema))
     log.append(Commit(id, "schema", System.currentTimeMillis(), stamped.json,
       Seq.empty, Seq.empty), basedOnLatest = basedOn)
     resync()
@@ -2342,12 +2360,14 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * like the MoR snapshot read itself. Correct in every state,
     * metadata-only in the steady (CoW / compacted) state.
     */
-  def countRows(asOf: Option[Long] = None): Long = {
-    val files = log.liveFiles(asOf)
+  def countRows(asOf: Option[Long] = None): Long = countRowsOf(log.snapshot(asOf))
+
+  private def countRowsOf(snap: Snapshot): Long = {
+    val files = snap.files
     // a global-index MoR delta can shadow a key in ANY partition — no
     // per-partition reasoning survives; merge (and count) table-wide
     if (files.exists(_.isDelta) && !groupLocalMergeSafe)
-      return mergeIfNeeded(files, asOf).count()
+      return mergeIfNeeded(files, snap).count()
     var metaSum = 0L
     val scan = Seq.newBuilder[FileAdd]
     files.groupBy(_.partition).foreach { case (_, fs) =>
@@ -2363,10 +2383,10 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // subtract those (exact — one live DV entry per position). Scanned
     // files need no adjustment: readFiles applies their DVs row-level.
     val restPaths = rest.map(_.path).toSet
-    val dvAdj = log.liveDvs(asOf)
+    val dvAdj = snap.dvs
       .filterNot(d => restPaths.contains(d.target)).map(_.rows).sum
     metaSum -= dvAdj
-    if (rest.isEmpty) metaSum else metaSum + mergeIfNeeded(rest, asOf).count()
+    if (rest.isEmpty) metaSum else metaSum + mergeIfNeeded(rest, snap).count()
   }
 
   /** Strict prover behind the SQL aggregate pushdown: the snapshot row
@@ -2376,27 +2396,24 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * always-answers hybrid).
     */
   def metadataRowCount(asOf: Option[Long] = None): Option[Long] = {
-    val base = metadataRowCountOfData(log.liveFiles(asOf))
-    // deletion vectors: live positions subtract EXACTLY — each position
-    // was admitted once (the DV write reads through existing DVs, so a
-    // position can never appear in two live DVs)
-    base.map(_ - log.liveDvs(asOf).map(_.rows).sum)
+    val snap = log.snapshot(asOf)
+    metadataRowCountOf(snap.files, snap)
   }
 
   /** [[metadataRowCount]] over an explicit file subset (the filtered
     * aggregate pushdown's shape: the subset is an EXACT partition
     * selection, so its footer counts ARE the filtered count). */
   private[graft] def metadataRowCountOf(files: Seq[FileAdd],
-      asOf: Option[Long] = None): Option[Long] =
-    // subset form (scan pushdown over an EXACT partition selection):
+      snap: Snapshot): Option[Long] =
     // live DVs subtract exactly — every live DV names one live target
-    // file, so the positions of targets IN the subset are precisely the
-    // deleted rows of the subset's footprint (a point delete must not
-    // cost a 100 TB table its metadata counts). Targets outside the
-    // subset are irrelevant to it.
+    // file, and each position was admitted once (the DV write reads
+    // through existing DVs), so the positions of targets IN the subset
+    // are precisely the deleted rows of the subset's footprint (a point
+    // delete must not cost a 100 TB table its metadata counts). Targets
+    // outside the subset are irrelevant to it.
     metadataRowCountOfData(files).map { base =>
       val paths = files.map(_.path).toSet
-      base - log.liveDvs(asOf)
+      base - snap.dvs
         .filter(d => paths.contains(d.target)).map(_.rows).sum
     }
 
@@ -2436,12 +2453,20 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       /** range bounds per column (`">=" | ">" | "<" | "<=" -> literal`):
         * provable ONLY on temporal-transformed levels whose bound sits
         * exactly on a level boundary — see the transform branch below */
-      ranges: Map[String, Seq[(String, Any)]] = Map.empty): Option[Seq[FileAdd]] = {
+      ranges: Map[String, Seq[(String, Any)]] = Map.empty): Option[Seq[FileAdd]] =
+    exactPartitionFiles(constraints, log.snapshot(asOf), notNull, ranges)
+
+  /** [[exactPartitionFiles]] over an already-resolved snapshot (the
+    * pinned DSv2 scan's filter claims and aggregate pushdown) */
+  private[graft] def exactPartitionFiles(
+      constraints: Map[String, Seq[Any]], snap: Snapshot,
+      notNull: Set[String],
+      ranges: Map[String, Seq[(String, Any)]]): Option[Seq[FileAdd]] = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
     import org.apache.spark.sql.types.{BooleanType, ByteType, DateType, IntegerType, LongType, ShortType, StringType, TimestampType}
-    if (!exists ||
+    if (snap.id.isEmpty ||
         (constraints.isEmpty && notNull.isEmpty && ranges.isEmpty)) return None
-    val tbl = tableSchema(asOf)
+    val tbl = tableSchema(snap)
     val levelOf = config.partitionCols.zipWithIndex.toMap
     val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
     // types whose IDENTITY render is provably injective and whose
@@ -2594,7 +2619,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     Some(kept)
     } // claimFor
 
-    val files = log.liveFiles(asOf)
+    val files = snap.files
     if (files.exists(_.isDelta) && !groupLocalMergeSafe) return None
     if (!config.hasSpecHistory) claimFor(config.transforms, files)
     else {
@@ -2619,13 +2644,16 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * ever answered from metadata.
     */
   def metadataMinMax(colName: String, asOf: Option[Long] = None)
-      : Option[(Long, Long)] =
-    metadataMinMaxOf(colName, log.liveFiles(asOf))
-
-  /** [[metadataMinMax]] over an explicit (exact-partition) file subset. */
-  private[graft] def metadataMinMaxOf(colName: String, files: Seq[FileAdd])
       : Option[(Long, Long)] = {
-    if (log.liveDvs().nonEmpty) return None // a DV may hold the min/max row
+    val snap = log.snapshot(asOf)
+    metadataMinMaxOf(colName, snap.files, snap)
+  }
+
+  /** [[metadataMinMax]] over an explicit (exact-partition) file subset of
+    * `snap`. */
+  private[graft] def metadataMinMaxOf(colName: String, files: Seq[FileAdd],
+      snap: Snapshot): Option[(Long, Long)] = {
+    if (snap.dvs.nonEmpty) return None // a DV may hold the min/max row
     if (files.isEmpty ||
         !files.forall(f => !f.isDelta &&
           f.colMin.contains(colName) && f.colMax.contains(colName))) None
@@ -2642,11 +2670,11 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * the returned count. Decimal accumulation — the caller is
     * responsible for refusing totals outside its result type's range.
     */
-  private[graft] def metadataSumOf(colName: String, files: Seq[FileAdd])
-      : Option[(java.math.BigDecimal, Long)] = {
+  private[graft] def metadataSumOf(colName: String, files: Seq[FileAdd],
+      snap: Snapshot): Option[(java.math.BigDecimal, Long)] = {
     if (!config.sumCols.contains(colName)) return None
     if (files.exists(_.isDelta)) return None
-    if (log.liveDvs().nonEmpty) return None // deleted positions are in the sums
+    if (snap.dvs.nonEmpty) return None // deleted positions are in the sums
     var total = java.math.BigDecimal.ZERO
     var nonNull = 0L
     files.foreach { f =>
@@ -2663,11 +2691,6 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     Some((total, nonNull))
   }
 
-  /** Strict per-partition prover (see [[metadataRowCount]]): partition
-    * columns + `n_rows`, or None when any partition would need a scan. */
-  def metadataPartitionRowCounts(asOf: Option[Long] = None): Option[DataFrame] =
-    metadataPartitionAggs(Seq.empty, asOf)
-
   /** Strict per-partition metadata-aggregate prover: partition columns,
     * `n_rows`, and raw integer-domain bounds `_min_<c>`/`_max_<c>` for
     * each requested stats column — Some ONLY when every live file at
@@ -2676,8 +2699,10 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * absent stats must refuse). An empty snapshot yields the empty
     * frame: zero groups IS the metadata answer. */
   def metadataPartitionAggs(boundCols: Seq[String], asOf: Option[Long] = None)
-      : Option[DataFrame] =
-    metadataPartitionAggsOf(boundCols, Seq.empty, log.liveFiles(asOf), asOf)
+      : Option[DataFrame] = {
+    val snap = log.snapshot(asOf)
+    metadataPartitionAggsOf(boundCols, Seq.empty, snap.files, snap)
+  }
 
   /** [[metadataPartitionAggs]] over an explicit (exact-partition) file
     * subset — the grouped form of the filtered aggregate pushdown.
@@ -2688,7 +2713,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * then apply). */
   private[graft] def metadataPartitionAggsOf(
       boundCols: Seq[String], sumColsReq: Seq[String],
-      files: Seq[FileAdd], asOf: Option[Long])
+      files: Seq[FileAdd], snap: Snapshot)
       : Option[DataFrame] = {
     import org.apache.spark.sql.Row
     if (config.partitionCols.isEmpty) return None
@@ -2698,11 +2723,11 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // deletion vectors: bounds/sums may include deleted positions —
     // refuse outright; pure row counts subtract the per-partition DV
     // position totals exactly (each position admitted once)
-    val dvs = log.liveDvs(asOf)
+    val dvs = snap.dvs
     if (dvs.nonEmpty && (boundCols.nonEmpty || sumColsReq.nonEmpty)) return None
     val dvByPart = dvs.groupBy(d => userLevels(d.partition))
       .map { case (t, ds) => t -> ds.map(_.rows).sum }
-    val tbl = tableSchema(asOf)
+    val tbl = tableSchema(snap)
     val ok = files.forall(f => !f.isDelta && f.rows > 0L &&
       boundCols.forall(c => f.colMin.contains(c) && f.colMax.contains(c)) &&
       sumColsReq.forall(c => config.sumCols.contains(c) &&
@@ -2736,7 +2761,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
                   .longValueExact(): java.lang.Long // overflow → Try → None
               })
           },
-        boundCols, sumColsReq, tableSchema(asOf))
+        boundCols, sumColsReq, tbl)
     }.toOption
   }
 
@@ -2779,12 +2804,13 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val parts = config.partitionCols
+    val snap = log.snapshot(asOf)
     if (parts.isEmpty)
       return spark.createDataFrame(
-        java.util.Collections.singletonList(Row(countRows(asOf))),
+        java.util.Collections.singletonList(Row(countRowsOf(snap))),
         StructType(Seq(StructField("n_rows", LongType, nullable = false))))
-    val files = log.liveFiles(asOf)
-    val tbl = tableSchema(asOf)
+    val files = snap.files
+    val tbl = tableSchema(snap)
     val wholeTableMerge = files.exists(_.isDelta) && !groupLocalMergeSafe
     // dirtiness is decided per USER partition (not per bucket tuple): a
     // user partition with one dirty bucket scans whole, or its clean
@@ -2805,7 +2831,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // group by the USER partition levels (hash-bucketed tables carry the
     // derived bucket as an extra trailing tuple level — fold it in)
     val cleanPaths = clean.map(_.path).toSet
-    val dvByPart = log.liveDvs(asOf)
+    val dvByPart = snap.dvs
       .filter(d => cleanPaths.contains(d.target))
       .groupBy(d => userLevels(d.partition))
       .map { case (t, ds) => t -> ds.map(_.rows).sum }
@@ -2817,7 +2843,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       Seq.empty, Seq.empty, tbl)
     if (dirty.isEmpty) metaDf
     else metaDf.unionByName(
-      mergeIfNeeded(dirty, asOf)
+      mergeIfNeeded(dirty, snap)
         .groupBy(parts.map(col): _*)
         .agg(count(lit(1)).as("n_rows")))
   }
@@ -3267,7 +3293,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       val retired = log.commitsAll.filter(_.id <= log.cleanedUpTo)
         .flatMap(_.removes).filter(p => qp(p).startsWith(prefix)).toSet
       val pinnedLive = log.pins.toSeq
-        .flatMap(s => log.liveFilesAll(Some(s)).map(_.path))
+        .flatMap(s => log.snapshot(Some(s)).all.map(_.path))
         .filter(p => qp(p).startsWith(prefix)).toSet
       val blocking = (published -- retired) ++ pinnedLive
       require(blocking.isEmpty,
@@ -3481,22 +3507,6 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       .map(j => DataType.fromJson(j).asInstanceOf[StructType])
       .getOrElse(new StructType())
 
-  private def readSnapshot(asOf: Option[Long]): DataFrame = {
-    val files = log.liveFiles(asOf)
-    if (files.isEmpty)
-      withEmptyFileName(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema(asOf)))
-    else mergeIfNeeded(files, asOf, tagFileName = config.metaColumns)
-  }
-
-  /** keeps the snapshot schema stable on branches that never scan a file
-    * (empty table, all files pruned): flagged tables always surface
-    * `_file_name`, null when there was no scan to capture it from */
-  private def withEmptyFileName(df: DataFrame): DataFrame =
-    if (config.metaColumns && !df.columns.contains("_file_name"))
-      df.withColumn("_file_name", lit(null).cast("string"))
-    else df
-
   /** True when every MoR dedup group is confined to a single partition
     * tuple, so base+delta merging can run file-group-local. Non-global
     * tables always qualify: the dedup identity carries every user
@@ -3520,19 +3530,19 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * only. Falls back to a table-wide merge when dedup groups can span
     * partitions (see [[groupLocalMergeSafe]]).
     */
-  private def mergeIfNeeded(files: Seq[FileAdd], asOf: Option[Long] = None,
+  private def mergeIfNeeded(files: Seq[FileAdd], snap: Snapshot,
       tagFileName: Boolean = false): DataFrame = {
-    if (!files.exists(_.isDelta)) readFiles(files, asOf, tagFileName)
-    else if (!groupLocalMergeSafe) morMerge(readFiles(files, asOf, tagFileName))
+    if (!files.exists(_.isDelta)) readFiles(files, snap, tagFileName)
+    else if (!groupLocalMergeSafe) morMerge(readFiles(files, snap, tagFileName))
     else {
       val touched = files.filter(_.isDelta).map(_.partition).toSet
       val (dirty, clean) = files.partition(f => touched.contains(f.partition))
-      val merged = morMerge(readFiles(dirty, asOf, tagFileName))
+      val merged = morMerge(readFiles(dirty, snap, tagFileName))
       if (clean.isEmpty) merged
       else
         // allowMissingColumns: delta commits may have widened the schema,
         // so the merged side can carry columns the clean base files lack
-        merged.unionByName(readFiles(clean, asOf, tagFileName),
+        merged.unionByName(readFiles(clean, snap, tagFileName),
           allowMissingColumns = true)
     }
   }
@@ -3575,7 +3585,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         // column-pruned index scan (footer-range-pruned first):
         // key -> current partition tuple(s)
         withDerived(
-          readOrEmpty(pruneByKeyRange(keyed, log.liveFiles()))
+          { val snap = log.snapshot()
+            readOrEmpty(pruneByKeyRange(keyed, snap.files), snap) }
             .select((config.keyCols ++ config.partitionCols).distinct.map(col): _*)
             .distinct()
             .join(keyed, config.keyCols, "left_semi"))
@@ -3600,7 +3611,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   def compact(): Long = {
     require(config.isMor, "compact() applies to merge-on-read tables")
     val basedOn = log.latestId.getOrElse(log.EmptyTable)
-    val live = log.liveFiles()
+    val snap = log.snapshot()
+    val live = snap.files
     if (!live.exists(_.isDelta)) return log.latestId.getOrElse(-1L)
     // Hudi compaction scope: only file groups that accumulated deltas are
     // rewritten; partitions that saw no writes since the last compaction
@@ -3611,7 +3623,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         val touched = live.filter(_.isDelta).map(_.partition).toSet
         live.filter(f => touched.contains(f.partition))
       } else live
-    val merged = morMerge(readFiles(dirty))
+    val merged = morMerge(readFiles(dirty, snap))
     writeCommit(merged, "compact", dirty.map(_.path), basedOn = Some(basedOn),
       // reads exactly the dirty partitions; rows keep their provenance
       // stamps, so a rebase moves nothing
@@ -3634,15 +3646,16 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     require(!config.isMor, "foldDvs() applies to CoW tables (MoR folds DVs via compact)")
     require(minRatio > 0 && minRatio <= 1, s"minRatio in (0,1], got $minRatio")
     val basedOn = log.latestId.getOrElse(log.EmptyTable)
-    val dvs = log.liveDvs()
+    val snap = log.snapshot()
+    val dvs = snap.dvs
     if (dvs.isEmpty) return basedOn
     val dvByTarget = dvs.groupBy(_.target)
       .map { case (t, ds) => t -> ds.map(_.rows).sum }
-    val victims = log.liveFiles().filter(f =>
+    val victims = snap.files.filter(f =>
       f.rows > 0L && dvByTarget.getOrElse(f.path, 0L).toDouble / f.rows >= minRatio)
     if (victims.isEmpty) return basedOn
     // readFiles applies the victims' DVs; rows keep their stamps
-    writeCommit(readFiles(victims), "dv_fold", victims.map(_.path),
+    writeCommit(readFiles(victims, snap), "dv_fold", victims.map(_.path),
       basedOn = Some(basedOn), partitionScoped = true, stampsId = false)
   }
 
@@ -3671,14 +3684,11 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     require(config.clusterCols.nonEmpty,
       "recluster() needs clusterCols configured")
     val basedOn = log.latestId.getOrElse(log.EmptyTable)
-    val live = log.liveFiles()
+    val snap = log.snapshot()
+    val live = snap.files
     if (live.isEmpty) return basedOn
-    val selected = pruneBy.fold(live) { p =>
-      val probe = readOrEmpty(Seq.empty).filter(p)
-      probe.queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }.fold(live)(c => pruneByColStats(live, c))
-    }
+    val selected = pruneBy.flatMap(resolvePredicate(_, snap))
+      .fold(live)(c => pruneByColStats(live, c, snap))
     // MoR dedup groups must never straddle the rewrite boundary: expand
     // the scope to whole partitions, and to the whole table when groups
     // can span partitions (same discipline as compact)
@@ -3716,8 +3726,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     var last = basedOn
     batches.foreach { vs =>
       val mat =
-        if (vs.exists(_.isDelta)) morMerge(readFiles(vs))
-        else readFiles(vs)
+        if (vs.exists(_.isDelta)) morMerge(readFiles(vs, snap))
+        else readFiles(vs, snap)
       // basedOn re-resolves per batch: one small OCC window per batch,
       // partial progress survives a crash or a lost race mid-backlog
       last = writeCommit(mat, "recluster", vs.map(_.path),
@@ -3761,7 +3771,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       /** observation seam (specs): runs after each batch commit —
         * injecting a failure here IS the crash window between batches */
       onBatchCommitted: Long => Unit = _ => ()): Long = {
-    val live = log.liveFiles()
+    val snap = log.snapshot()
+    val live = snap.files
     def sizeOf(f: FileAdd): Long =
       if (f.bytes > 0) f.bytes
       else new Path(f.path).getFileSystem(hconf).getFileStatus(new Path(f.path)).getLen
@@ -3785,7 +3796,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       val nOut = math.max(1L,
         (victims.map(sizeOf).sum + maxBytes - 1) / maxBytes).toInt
       // basedOn re-resolves per batch: each OCC window spans ONE batch
-      last = writeCommit(readFiles(victims).coalesce(nOut), "delta_compact",
+      last = writeCommit(readFiles(victims, snap).coalesce(nOut), "delta_compact",
         victims.map(_.path), kind = if (config.isMor) "delta" else "base",
         basedOn = Some(log.latestId.getOrElse(log.EmptyTable)),
         // verbatim per-partition rewrite of its victims only
@@ -3833,33 +3844,14 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   private[graft] def parseSchema(j: String): StructType =
     schemaParseCache.getOrElseUpdate(j, DataType.fromJson(j).asInstanceOf[StructType])
 
-  /** the TABLE schema as of a commit (the latest commit's recorded
+  /** the TABLE schema of a snapshot (its latest commit's recorded
     * schemaJson — since schema evolution, every commit records the full
     * evolved table schema, not just its batch's) */
-  private[graft] def tableSchema(asOf: Option[Long] = None): StructType =
-    log.schemaJsonAsOf(asOf).map(parseSchema).getOrElse(new StructType())
+  private[graft] def tableSchema(snap: Snapshot): StructType =
+    snap.schemaJson.map(parseSchema).getOrElse(new StructType())
 
-  /** schemaJson of the commit that added each live file — the FILE
-    * schema a reader must adapt from. Last add wins, matching
-    * [[CommitLog.liveFiles]]. Memoized per (scope, timeline head): the
-    * log is append-only and commit JSONs are immutable, so a map built
-    * at head H is valid until a new commit lands — without the memo,
-    * every read/prune/write on a long-lived table would re-fold the
-    * whole add history (O(files ever added) driver work per call, the
-    * growth-with-AGE failure mode the commit log exists to avoid). */
-  private val pathSchemaCache =
-    scala.collection.concurrent.TrieMap.empty[(Option[Long], Long), Map[String, String]]
-  private def pathSchemaJson(upTo: Option[Long]): Map[String, String] = {
-    val head = log.latestId.getOrElse(-1L)
-    pathSchemaCache.getOrElseUpdate((upTo, head), {
-      // keep the memo bounded: a new head invalidates earlier entries
-      if (pathSchemaCache.size > 64) pathSchemaCache.clear()
-      // checkpoint-accelerated (CommitLog.pathSchemas): covers every
-      // LIVE path — the only paths the evolution-aware scan, clone and
-      // publish ever look up — in O(tail) metadata opens
-      log.pathSchemas(upTo)
-    })
-  }
+  /** the table schema at the head (writers and schema changes) */
+  private[graft] def tableSchema(): StructType = tableSchema(log.snapshot())
 
   /** Schema-evolution-aware scan: live files group by the schema their
     * commit recorded, each group reads with ITS schema (so physical
@@ -3883,10 +3875,10 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * rows (compaction, merge, index probes) never do, so the column is
     * never persisted.
     */
-  private def readFiles(files: Seq[FileAdd], asOf: Option[Long] = None,
+  private def readFiles(files: Seq[FileAdd], snap: Snapshot,
       tagFileName: Boolean = false): DataFrame = {
-    val target = tableSchema(asOf)
-    val jsonOf = pathSchemaJson(asOf)
+    val target = tableSchema(snap)
+    val jsonOf = snap.pathSchemas
     // group by ADAPTATION KEY, not raw schema JSON: commits whose
     // schemas differ only in field order (or metadata rendering) share
     // one scan — parquet matches file columns by name, so one explicit
@@ -3906,10 +3898,10 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // broadcast anti-join on (file, row position) per schema group,
     // directly on the raw scan (codegen'd BroadcastHashJoin LeftAnti).
     // Zero-cost when no DV is live — the common case stays a bare scan.
-    val dvRows = dvRowsFor(files, asOf)
+    val dvRows = dvRowsFor(files, snap)
     groups.toSeq.map { case (key, (fileSchema, paths)) =>
       val raw0 = spark.read.schema(fileSchema).parquet(paths.toSeq: _*)
-      val raw = dvRows.fold(raw0)(dv => antiJoinDvs(raw0, dv))
+      val raw = dvRows.fold(raw0)(dv => joinDvs(raw0, dv))
       val adapted = if (key == targetKey) raw
         else SchemaEvo.adapt(raw, fileSchema, target)
       // tag AFTER adapt (adapt projects the file schema's columns and
@@ -3926,35 +3918,39 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * small broadcastable frame — None when no DV applies (the common
     * case: one driver-side fold, no plan change). Positions load in
     * EXECUTORS (one task per DV sidecar batch), never on the driver. */
-  private def dvRowsFor(files: Seq[FileAdd], asOf: Option[Long])
+  private def dvRowsFor(files: Seq[FileAdd], snap: Snapshot)
       : Option[DataFrame] = {
-    if (config.isMor || !exists) return None // DVs are CoW-only
-    val dvs = log.liveDvs(asOf)
-    if (dvs.isEmpty) return None
+    val dvs = snap.dvs
+    if (config.isMor || dvs.isEmpty) return None // DVs are CoW-only
     val targets = files.map(f => DvCodec.normPath(f.path)).toSet
     val hits = dvs.filter(d => targets.contains(DvCodec.normPath(d.target)))
-    if (hits.isEmpty) return None
-    val conf = new SerializableHadoopConf(hconf)
-    import spark.implicits._
-    Some(spark.createDataset(
-        hits.map(d => (d.path, DvCodec.normPath(d.target))))
-      .flatMap { case (p, t) =>
-        DvCodec.read(conf.value, p).iterator.map(pos => (t, pos)) }
-      .toDF("_dv_target", "_dv_tpos"))
+    if (hits.isEmpty) None else Some(dvPositions(hits))
   }
 
-  /** drop the (file, position) pairs in `dvRows` from a raw file scan —
-    * the deletion-vector read filter. The join keys are derived from the
-    * scan's hidden `_metadata` columns in the SAME select (metadata
-    * columns do not survive arbitrary projections), then dropped. */
-  private def antiJoinDvs(scan: DataFrame, dvRows: DataFrame): DataFrame =
+  /** the (`_dv_target`, `_dv_tpos`) rows of `dvs`, loaded in executors */
+  private def dvPositions(dvs: Seq[FileAdd]): DataFrame = {
+    val conf = new SerializableHadoopConf(hconf)
+    import spark.implicits._
+    spark.createDataset(dvs.map(d => (d.path, DvCodec.normPath(d.target))))
+      .flatMap { case (p, t) =>
+        DvCodec.read(conf.value, p).iterator.map(pos => (t, pos)) }
+      .toDF("_dv_target", "_dv_tpos")
+  }
+
+  /** join a raw file scan against (file, position) pairs in `dvRows` —
+    * `left_anti` is the deletion-vector read filter, `left_semi` its
+    * inverse. The join keys are derived from the scan's hidden
+    * `_metadata` columns in the SAME select (metadata columns do not
+    * survive arbitrary projections), then dropped. */
+  private def joinDvs(scan: DataFrame, dvRows: DataFrame,
+      how: String = "left_anti"): DataFrame =
     scan.select(col("*"),
         DvCodec.normPathCol(col("_metadata.file_path")).as("__dv_file"),
         col("_metadata.row_index").as("__dv_pos"))
       .join(broadcast(dvRows),
         col("__dv_file") === col("_dv_target") &&
           col("__dv_pos") === col("_dv_tpos"),
-        "left_anti")
+        how)
       .drop("__dv_file", "__dv_pos")
 
   /** The rows a `dv_delete` commit tombstoned — target files' rows at
@@ -3964,26 +3960,13 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   private[graft] def dvDeletedRows(dvs: Seq[FileAdd],
       streamSchema: StructType,
       schemaJsonOf: String => Option[String]): DataFrame = {
-    val conf = new SerializableHadoopConf(hconf)
-    import spark.implicits._
-    val dvRows = spark.createDataset(
-        dvs.map(d => (d.path, DvCodec.normPath(d.target))))
-      .flatMap { case (p, t) =>
-        DvCodec.read(conf.value, p).iterator.map(pos => (t, pos)) }
-      .toDF("_dv_target", "_dv_tpos")
+    val dvRows = dvPositions(dvs)
     dvs.map(_.target).distinct
-      .groupBy(p => schemaJsonOf(p).getOrElse(tableSchema(None).json))
+      .groupBy(p => schemaJsonOf(p).getOrElse(tableSchema().json))
       .toSeq.map { case (j, ps) =>
         val fileSchema = parseSchema(j)
-        val raw = spark.read.schema(fileSchema).parquet(ps: _*)
-          .select(col("*"),
-            DvCodec.normPathCol(col("_metadata.file_path")).as("__dv_file"),
-            col("_metadata.row_index").as("__dv_pos"))
-          .join(broadcast(dvRows),
-            col("__dv_file") === col("_dv_target") &&
-              col("__dv_pos") === col("_dv_tpos"),
-            "left_semi")
-          .drop("__dv_file", "__dv_pos")
+        val raw = joinDvs(spark.read.schema(fileSchema).parquet(ps: _*),
+          dvRows, "left_semi")
         SchemaEvo.adaptToStream(raw, fileSchema, streamSchema)
       }.reduce(_ unionByName _)
   }
@@ -4054,7 +4037,9 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     */
   private[graft] def mergedPrePostPivotMulti(
       files: Seq[FileAdd], keys: Seq[(Long, DataFrame)],
-      payload: DataFrame => org.apache.spark.sql.Column): DataFrame = {
+      payload: DataFrame => org.apache.spark.sql.Column,
+      /** the snapshot whose schema the rows are read and adapted with */
+      snap: Snapshot): DataFrame = {
     require(keys.nonEmpty, "fused pivot needs at least one commit")
     val cids = keys.map(_._1)
     // ONE union probe for the whole run, duplicate-tolerant (left_semi
@@ -4070,13 +4055,13 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       if (files.size <= 32) files
       else pruneByKeyRange(allKeys, files)
     if (candidates.isEmpty) {
-      val empty = readOrEmpty(candidates).drop("_seq", "_deleted")
+      val empty = readOrEmpty(candidates, snap).drop("_seq", "_deleted")
         .join(probe, Seq("_record_key"), "left_semi")
       return empty.select(col("_record_key"), lit(-1L).as("_commit"),
         payload(empty).as("_p"), col("_commit_id").as("_p_cid"),
         payload(empty).as("_q")).limit(0)
     }
-    val rows = readFiles(candidates)
+    val rows = readFiles(candidates, snap)
       .join(probe, Seq("_record_key"), "left_semi")
       // explicit partition count on the merge exchange, derived from the
       // candidate files' recorded bytes: AQE coalesces a ~18 MB exchange
@@ -4275,8 +4260,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * the empty probe relation and drop the filter). */
   private[graft] def resolvePredicate(
       pruneBy: org.apache.spark.sql.Column,
-      asOf: Option[Long]): Option[org.apache.spark.sql.catalyst.expressions.Expression] =
-    readOrEmpty(Seq.empty, asOf).filter(pruneBy)
+      snap: Snapshot): Option[org.apache.spark.sql.catalyst.expressions.Expression] =
+    readOrEmpty(Seq.empty, snap).filter(pruneBy)
       .queryExecution.analyzed.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }
@@ -4290,11 +4275,11 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   private[graft] def pruneFilesFor(
       files: Seq[FileAdd],
       pred: org.apache.spark.sql.catalyst.expressions.Expression,
-      asOf: Option[Long]): Seq[FileAdd] = {
-    val afterStats = pruneByColStats(files, pred, asOf)
-    val afterParts = pruneByPartitionValues(afterStats, pred, asOf)
-    val afterKeys = pruneByKeyEquality(afterParts, pred, asOf)
-    pruneByColBlooms(afterKeys, pred, asOf)
+      snap: Snapshot): Seq[FileAdd] = {
+    val afterStats = pruneByColStats(files, pred, snap)
+    val afterParts = pruneByPartitionValues(afterStats, pred, snap)
+    val afterKeys = pruneByKeyEquality(afterParts, pred, snap)
+    pruneByColBlooms(afterKeys, pred, snap)
   }
 
   /** Per-column value-bloom refinement ([[LakeTableConfig.bloomCols]]):
@@ -4311,11 +4296,11 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   private def pruneByColBlooms(
       files: Seq[FileAdd],
       pred: org.apache.spark.sql.catalyst.expressions.Expression,
-      asOf: Option[Long]): Seq[FileAdd] = {
+      snap: Snapshot): Seq[FileAdd] = {
     if (config.bloomCols.isEmpty || files.isEmpty) return files
     if (files.exists(_.isDelta)) return files
     val accepted = acceptedRenders(pred, config.bloomCols.toSet,
-      tableSchema(asOf), nullRender = None)
+      tableSchema(snap), nullRender = None)
     if (accepted.isEmpty) return files
     accepted.foldLeft(files) { case (fs0, (c, vals0)) =>
       if (vals0.isEmpty || vals0.size > 1024) fs0
@@ -4445,10 +4430,10 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   private def pruneByPartitionValues(
       files: Seq[FileAdd],
       pred: org.apache.spark.sql.catalyst.expressions.Expression,
-      asOf: Option[Long]): Seq[FileAdd] = {
+      snap: Snapshot): Seq[FileAdd] = {
     if (config.partitionCols.isEmpty) return files
     if (files.exists(_.isDelta) && !groupLocalMergeSafe) return files
-    val tbl = tableSchema(asOf)
+    val tbl = tableSchema(snap)
     // spec evolution: each file's tuple is only meaningful under the
     // spec it was written with — dispatch per spec group (single-spec
     // tables take the one-pass path unchanged)
@@ -4710,11 +4695,11 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   private def pruneByKeyEquality(
       files: Seq[FileAdd],
       pred: org.apache.spark.sql.catalyst.expressions.Expression,
-      asOf: Option[Long]): Seq[FileAdd] = {
+      snap: Snapshot): Seq[FileAdd] = {
     if (config.keyCols.size != 1) return files
     if (files.exists(_.isDelta) && !groupLocalMergeSafe) return files
     val accepted = acceptedRenders(pred, config.keyCols.toSet,
-      tableSchema(asOf), nullRender = None)
+      tableSchema(snap), nullRender = None)
     accepted.get(config.keyCols.head) match {
       case None => files
       case Some(keys0) if keys0.isEmpty || keys0.size > 100000 => files
@@ -4757,7 +4742,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * on a string column (null and '' collapse), a value that does not
     * round-trip — refuses the whole snapshot. */
   private[graft] def partitionKeyRows(
-      files: Seq[FileAdd], asOf: Option[Long])
+      files: Seq[FileAdd], snap: Snapshot)
       : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
@@ -4770,7 +4755,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // a key-grouped partitioning would silently mis-join. Any spec in
     // the history counts: old files keep their transformed layout.
     if (config.anyHiddenSpec) return None
-    val tbl = tableSchema(asOf)
+    val tbl = tableSchema(snap)
     val types = config.partitionCols.map(c =>
       tbl.fields.find(_.name == c).map(_.dataType).getOrElse(return None))
     if (types.exists(t => t == TimestampType || t == TimestampNTZType))
@@ -4808,9 +4793,12 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * adaptation). Anything else reads through the V1 fallback path
     * untouched. Same strict-prover contract as the metadata aggregate
     * pushdown: certify completely or fall through. */
-  private[graft] def nativeScanFiles(asOf: Option[Long]): Option[Seq[FileAdd]] = {
-    if (!exists) return None
-    val files = log.liveFiles(asOf)
+  private[graft] def nativeScanFiles(asOf: Option[Long]): Option[Seq[FileAdd]] =
+    nativeScanFiles(log.snapshot(asOf))
+
+  /** [[nativeScanFiles]] over an already-resolved snapshot */
+  private[graft] def nativeScanFiles(snap: Snapshot): Option[Seq[FileAdd]] = {
+    val files = snap.files
     if (files.isEmpty) return None // the empty-frame path owns this case
     if (files.exists(f => f.isDelta || f.bytes <= 0L)) return None
     // live DVs no longer demote the snapshot off the native path: the
@@ -4820,11 +4808,12 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // reads, DPP, and storage-partitioned joins. Only a (pathological)
     // user column colliding with the parquet reader's internal row-index
     // name forces the V1 fallback.
-    if (log.liveDvs(asOf).nonEmpty && tableSchema(asOf).fieldNames.contains(
+    val tbl = tableSchema(snap)
+    if (snap.dvs.nonEmpty && tbl.fieldNames.contains(
         org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
           .ROW_INDEX_TEMPORARY_COLUMN_NAME)) return None
-    val target = SchemaEvo.adaptKey(tableSchema(asOf))
-    val jsonOf = pathSchemaJson(asOf)
+    val target = SchemaEvo.adaptKey(tbl)
+    val jsonOf = snap.pathSchemas
     val uniform = files.forall(f =>
       jsonOf.get(f.path).exists(j => SchemaEvo.adaptKey(parseSchema(j)) == target))
     if (uniform) Some(files) else None
@@ -4842,7 +4831,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   private def pruneByColStats(
       files: Seq[FileAdd],
       pred0: org.apache.spark.sql.catalyst.expressions.Expression,
-      asOf: Option[Long] = None): Seq[FileAdd] = {
+      snap: Snapshot): Seq[FileAdd] = {
     if (config.statsCols.isEmpty && config.shredSpecs.isEmpty) files
     else {
       // shredding: extraction sub-expressions over configured
@@ -4860,17 +4849,17 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       // schema evolution: stats were recorded under the file's PHYSICAL
       // column names and types — resolve each file's schema once so
       // bounds can match by column id and parse in the file's type.
-      // BOTH resolutions pin to `asOf`: a VERSION AS OF read's predicate
-      // names the PINNED schema's columns, so resolving against the head
-      // (which may have renamed them since) would silently lose all
-      // skipping — correct but fully unpruned.
-      val jsonOf = pathSchemaJson(asOf)
+      // BOTH come from the read's snapshot: a VERSION AS OF read's
+      // predicate names the PINNED schema's columns, so resolving against
+      // the head (which may have renamed them since) would silently lose
+      // all skipping — correct but fully unpruned.
+      val jsonOf = snap.pathSchemas
       // shadow fields appended so the comparator resolves rewritten
       // `_shred_*` attributes; they carry no column id and recorded file
       // schemas never contain them, so the per-file resolution falls to
       // (shadow name, configured type) — exactly where the write path
       // recorded the stat
-      val tbl = StructType(tableSchema(asOf).fields ++
+      val tbl = StructType(tableSchema(snap).fields ++
         config.shredSpecs.map(s =>
           org.apache.spark.sql.types.StructField(s.name, s.dt)))
       val schemaCache = scala.collection.mutable.HashMap.empty[String, StructType]
@@ -5031,15 +5020,16 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * columns), so a key migrating partitions drops its old row.
     */
   private def snapshotForUpsert(incoming: DataFrame): (Seq[FileAdd], DataFrame) = {
-    val live = log.liveFiles()
-    if (effParts.isEmpty) (live, readOrEmpty(live))
+    val snap = log.snapshot()
+    val live = snap.files
+    if (effParts.isEmpty) (live, readOrEmpty(live, snap))
     else {
       // `incoming` already carries the derived bucket column; matching
       // dispatches per-file on the partition spec (evolution)
       val files = (filesMatchingTuples(live, incoming) ++
-        (if (config.globalIndex) filesInKeyPartitions(incoming, live)
+        (if (config.globalIndex) filesInKeyPartitions(incoming, live, snap)
          else Seq.empty)).distinct
-      (files, readOrEmpty(files))
+      (files, readOrEmpty(files, snap))
     }
     // NOTE the rewrite scope is deliberately partition/bucket-granular,
     // not file-granular: rewriting only the key-range-hit files would
@@ -5059,35 +5049,26 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * candidates (Hudi GLOBAL_SIMPLE's strategy) — reads a few columns,
     * never payloads; the closure compares each file's tuple under the
     * file's OWN partition spec. */
-  private def filesInKeyPartitions(df: DataFrame, live: Seq[FileAdd]): Seq[FileAdd] = {
+  private def filesInKeyPartitions(df: DataFrame, live: Seq[FileAdd],
+      snap: Snapshot): Seq[FileAdd] = {
     val candidates = pruneByKeyRange(df, live) // footer index cuts the scan
     if (candidates.isEmpty) Seq.empty
     else filesMatchingTuples(live,
-      readFiles(candidates)
+      readFiles(candidates, snap)
         .join(df.select(config.keyCols.map(col): _*).distinct(),
           config.keyCols, "left_semi"))
   }
 
-  /** Raw read of an explicit live-file subset (no MoR merge, no DV
-    * filter — callers must have proven the set is all-base and DV-free).
-    * The window-bounded incremental-aggregate refresh uses it to read
-    * exactly the file groups a commit window touched. */
-  private[lake] def readFileSet(
-      files: Seq[FileAdd], asOf: Option[Long]): DataFrame =
-    readOrEmpty(files, asOf)
-
-  private def readOrEmpty(
-      files: Seq[FileAdd], asOf: Option[Long] = None): DataFrame =
-    if (files.nonEmpty) readFiles(files, asOf)
-    else {
-      // empty frame at the PINNED schema: an as-of read's probe/fallback
-      // must expose the columns of that version, not the head's (a later
-      // rename would otherwise unresolve a valid as-of predicate)
-      val schema = log.schemaJsonAsOf(asOf)
-        .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-        .getOrElse(new StructType())
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+  /** Raw read of an explicit file subset of `snap` (no MoR merge; live
+    * DVs of `snap` applied), or the empty frame at the snapshot's schema
+    * — an as-of read's probe/fallback must expose the columns of that
+    * version, not the head's (a later rename would otherwise unresolve a
+    * valid as-of predicate). The window-bounded incremental-aggregate
+    * refresh reads exactly the file groups a commit window touched. */
+  private[lake] def readOrEmpty(files: Seq[FileAdd], snap: Snapshot): DataFrame =
+    if (files.nonEmpty) readFiles(files, snap)
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema(snap))
 
   /** Write `df` under a fresh commit directory, then append the commit
     * JSON (files-then-log ordering = crash safety; see CommitLog).
@@ -5115,6 +5096,10 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       basedOn: Option[Long] = None,
       commitMeta: Map[String, String] = Map.empty,
       partitionScoped: Boolean = false,
+      /** true for an append that read nothing from the snapshot (a MoR
+        * delta upsert): it rebases onto ANY new head, partition overlap
+        * or not — see [[rebaseOrAbort]] */
+      readFree: Boolean = false,
       stampsId: Boolean = true,
       rebaseAttempt: Int = 0,
       /** true for whole-table overwrites: no old file survives, so the
@@ -5139,12 +5124,13 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // THROUGH the DVs, so the rewritten files already exclude the
     // deleted positions (this is how compaction folds DVs in), and a
     // DV must never outlive its target into the cleaner's replay
+    val head = log.snapshot()
     val removes = {
       val r0 = removesIn
-      if (r0.isEmpty || config.isMor || !log.exists) r0
+      if (r0.isEmpty || config.isMor) r0
       else {
         val rs = r0.toSet
-        r0 ++ log.liveDvs().filter(d => rs.contains(d.target)).map(_.path)
+        r0 ++ head.dvs.filter(d => rs.contains(d.target)).map(_.path)
       }
     }
     // schema evolution (SchemaEvo): the commit records the evolved TABLE
@@ -5157,11 +5143,10 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       if (expectedHead < 0) None
       else log.schemaJsonAsOf(Some(expectedHead)).map(parseSchema)
     val evolved = SchemaEvo.evolve(prevSchema, df0.schema, id, reset = schemaReset)
-    if (log.exists) {
+    if (head.id.isDefined) {
       val removeSet = removes.toSet
-      val jsonOf = pathSchemaJson(None)
-      val retained = log.liveFiles().filterNot(f => removeSet.contains(f.path))
-        .flatMap(f => jsonOf.get(f.path)).distinct.map(parseSchema)
+      val retained = head.files.filterNot(f => removeSet.contains(f.path))
+        .flatMap(f => head.pathSchemas.get(f.path)).distinct.map(parseSchema)
       SchemaEvo.validateAgainstLiveFiles(evolved, retained)
     }
     // conform the batch to the evolved types (a narrow batch column
@@ -5275,7 +5260,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     catch {
       case e: CommitConflict =>
         rebaseOrAbort(e, dir, withBlooms, op, removes, kind, commitMeta,
-          expectedHead, id, partitionScoped, stampsId, rebaseAttempt,
+          expectedHead, id, partitionScoped, readFree, stampsId, rebaseAttempt,
           schemaJson) match {
           case Some(cid) => return cid
           case None =>
@@ -5318,7 +5303,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       cause: CommitConflict, dir: Path, adds: Seq[FileAdd], op: String,
       removes: Seq[String], kind: String, commitMeta: Map[String, String],
       expectedHead: Long, failedId: Long,
-      partitionScoped: Boolean, stampsId: Boolean, attempt: Int,
+      partitionScoped: Boolean, readFree: Boolean, stampsId: Boolean,
+      attempt: Int,
       schemaJson: String): Option[Long] = {
     val fs = dir.getFileSystem(hconf)
     if (!partitionScoped || attempt >= MaxRebase) return None
@@ -5331,39 +5317,47 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     val stagedInterveners = log.stagedCommits.filter(_.id > expectedHead)
     if (newHead <= expectedHead && stagedInterveners.isEmpty)
       return None // retired-id or odd state: abort
-    // removes resolve to partitions via the add that made the file live;
-    // every removed path was live at expectedHead so its add is on the
-    // timeline (including a clone's borrowed files). Resolve ONLY the
-    // paths the disjointness check needs, walking the timeline BACKWARDS
-    // from the new head with early exit — an add never sits above the
-    // commit that removed its file, and supersessions target recent
-    // files, so this reads a handful of commit JSONs instead of
-    // materializing path→partition for every file ever added
     val interveners =
       log.commitsInRange(math.max(expectedHead, -1L), newHead) ++
         stagedInterveners
-    val needed = scala.collection.mutable.Set.empty[String]
-    needed ++= removes
-    interveners.foreach(needed ++= _.removes)
-    val partOfRemoved = scala.collection.mutable.Map.empty[String, String]
-    var cursor = newHead
-    while (needed.nonEmpty && cursor >= 0L) {
-      log.commitIfExists(cursor).foreach(_.adds.foreach { a =>
-        if (needed.remove(a.path)) partOfRemoved(a.path) = a.partition
-      })
-      cursor -= 1
+    def disjoint: Boolean = {
+      // removes resolve to partitions via the add that made the file
+      // live; every removed path was live at expectedHead so its add is
+      // on the timeline (including a clone's borrowed files). Resolve
+      // ONLY the paths the disjointness check needs, walking the
+      // timeline BACKWARDS from the new head with early exit — an add
+      // never sits above the commit that removed its file, and
+      // supersessions target recent files, so this reads a handful of
+      // commit JSONs instead of materializing path→partition for every
+      // file ever added
+      val needed = scala.collection.mutable.Set.empty[String]
+      needed ++= removes
+      interveners.foreach(needed ++= _.removes)
+      val partOfRemoved = scala.collection.mutable.Map.empty[String, String]
+      var cursor = newHead
+      while (needed.nonEmpty && cursor >= 0L) {
+        log.commitIfExists(cursor).foreach(_.adds.foreach { a =>
+          if (needed.remove(a.path)) partOfRemoved(a.path) = a.partition
+        })
+        cursor -= 1
+      }
+      def touched(ads: Seq[FileAdd], rms: Seq[String]): Option[Set[String]] = {
+        val resolved = rms.map(partOfRemoved.get)
+        if (resolved.exists(_.isEmpty)) None
+        else Some(ads.map(_.partition).toSet ++ resolved.flatten)
+      }
+      (for {
+        ours <- touched(adds, removes)
+        theirs <- interveners.foldLeft(Option(Set.empty[String])) { (acc, c) =>
+          for { a <- acc; t <- touched(c.adds, c.removes) } yield a ++ t }
+      } yield (ours & theirs).isEmpty).getOrElse(false)
     }
-    def touched(ads: Seq[FileAdd], rms: Seq[String]): Option[Set[String]] = {
-      val resolved = rms.map(partOfRemoved.get)
-      if (resolved.exists(_.isEmpty)) None
-      else Some(ads.map(_.partition).toSet ++ resolved.flatten)
-    }
-    val disjoint = (for {
-      ours <- touched(adds, removes)
-      theirs <- interveners.foldLeft(Option(Set.empty[String])) { (acc, c) =>
-        for { a <- acc; t <- touched(c.adds, c.removes) } yield a ++ t }
-    } yield (ours & theirs).isEmpty).getOrElse(false)
-    if (!disjoint) return None
+    // a read-free append (a MoR delta upsert) derived nothing from the
+    // snapshot it resolved: re-executing it on the new head writes the
+    // same rows whatever the interveners touched (a compaction of its
+    // partitions included) — only the schema can conflict, and the
+    // adapt below fails loud on that
+    if (!readFree && !disjoint) return None
     val provenStaged = stagedInterveners.map(_.id).toSet
     val newId = log.nextId
     // a write with no files (e.g. a whole-partition delete) rebases as a
@@ -5387,7 +5381,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       } catch {
         case e2: CommitConflict =>
           return rebaseOrAbort(e2, dir, adds, op, removes, kind, commitMeta,
-            newHead, newId, partitionScoped, stampsId, attempt + 1, schemaJson)
+            newHead, newId, partitionScoped, readFree, stampsId, attempt + 1,
+            schemaJson)
       }
     }
     // re-read this write's own files (parquet is self-describing; shadow
@@ -5428,14 +5423,14 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     try {
       val cid = writeCommit(restamped, op, removes, Some(newId), kind,
         basedOn = Some(newHead), commitMeta = commitMeta,
-        partitionScoped = true, stampsId = stampsId,
+        partitionScoped = true, readFree = readFree, stampsId = stampsId,
         rebaseAttempt = attempt + 1, knownStaged = provenStaged)
       // the failed attempt's directory is fully superseded only now (the
       // rebase write read from it)
       try { fs.delete(dir, true); () } catch { case scala.util.control.NonFatal(_) => () }
       Some(cid)
     } catch {
-      case e: CommitConflict =>
+      case scala.util.control.NonFatal(e) =>
         try { fs.delete(dir, true); () } catch { case scala.util.control.NonFatal(_) => () }
         throw e
     }

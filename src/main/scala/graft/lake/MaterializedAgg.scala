@@ -293,13 +293,12 @@ final class MaterializedAgg(
     if (cs.isEmpty) return None
     if (cs.exists(_.adds.exists(a => Option(a.kind).getOrElse("base") != "base")))
       return None
-    val liveTo = log.liveFiles(Some(to))
-    val liveFrom = log.liveFiles(Some(from))
-    if ((liveTo ++ liveFrom).exists(_.isDelta)) return None
-    if (log.liveDvs(Some(to)).nonEmpty || log.liveDvs(Some(from)).nonEmpty)
-      return None
-    val liveToPaths = liveTo.map(_.path).toSet
-    val liveFromByPath = liveFrom.map(f => f.path -> f).toMap
+    val snapTo = log.snapshot(Some(to))
+    val snapFrom = log.snapshot(Some(from))
+    if ((snapTo.files ++ snapFrom.files).exists(_.isDelta)) return None
+    if (snapTo.dvs.nonEmpty || snapFrom.dvs.nonEmpty) return None
+    val liveToPaths = snapTo.files.map(_.path).toSet
+    val liveFromByPath = snapFrom.files.map(f => f.path -> f).toMap
     val addedLive = cs.flatMap(_.adds)
       .filter(a => liveToPaths.contains(a.path)).distinct
     val removedOld = cs.flatMap(_.removes).distinct
@@ -307,9 +306,9 @@ final class MaterializedAgg(
     // a commits-only window with no file churn (schema evolution etc.)
     // has nothing to read — let the fallback produce its empty delta
     if (addedLive.isEmpty && removedOld.isEmpty) return None
-    val addedFull = source.readFileSet(addedLive, Some(to))
+    val addedFull = source.readOrEmpty(addedLive, snapTo)
     val adds = addedFull.filter(col("_commit_id") > from)
-    val oldTouched = source.readFileSet(removedOld, Some(from))
+    val oldTouched = source.readOrEmpty(removedOld, snapFrom)
     val o = oldTouched.select(keyed.map(col): _*).distinct().as("o")
     val rep = addedFull.select(keyed.map(col): _*).distinct().as("r")
     val goneKeys = o.join(rep,

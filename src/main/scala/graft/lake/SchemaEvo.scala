@@ -161,8 +161,9 @@ private[graft] object SchemaEvo {
   /** Merged type of a kept column across (previous table, new batch) —
     * the recursive heart of [[evolve]]. Structs merge field-by-field
     * with the SAME rules as the top level (kept-if-absent, widen, new
-    * nested fields minted fresh); arrays merge element types; anything
-    * else must be equal or an exact widening in one direction. Batch
+    * nested fields minted fresh); arrays merge element types, maps merge
+    * value types over identical key types; anything else must be equal
+    * or an exact widening in one direction. Batch
     * types match by NAME at every level (user batches carry no ids);
     * the previous schema's nested ids are carried through.
     */
@@ -187,6 +188,8 @@ private[graft] object SchemaEvo {
       StructType(evolved ++ appendedNested)
     case (ArrayType(pe, pn), ArrayType(be, bn)) =>
       ArrayType(mergeType(pe, be, mint, s"$path[]"), pn || bn)
+    case (MapType(pk, pv, pn), MapType(bk, bv, bn)) if pk == bk =>
+      MapType(pk, mergeType(pv, bv, mint, s"$path{}"), pn || bn)
     case (p, b) if canWiden(p, b) => b
     case (p, b) if canWiden(b, p) => p // narrow batch upcasts
     case (p, b) => throw new IllegalArgumentException(
@@ -239,9 +242,9 @@ private[graft] object SchemaEvo {
     * [[adapt]]'s per-column logic. Structs rebuild field-by-field
     * matched by column id (rename via field re-label, widen via
     * recursion, null-backfill for fields the file predates, dropped
-    * fields simply unselected); arrays adapt element-wise; primitives
-    * cast. A NULL source struct stays NULL (a bare struct() rebuild
-    * would turn it into a struct of nulls).
+    * fields simply unselected); arrays adapt element-wise, maps
+    * value-wise; primitives cast. A NULL source struct stays NULL (a
+    * bare struct() rebuild would turn it into a struct of nulls).
     */
   private def adaptValue(src: Column, from: DataType, to: DataType): Column =
     (from, to) match {
@@ -261,6 +264,8 @@ private[graft] object SchemaEvo {
         when(src.isNotNull, struct(parts: _*))
       case (f: ArrayType, t: ArrayType) =>
         transform(src, x => adaptValue(x, f.elementType, t.elementType))
+      case (f: MapType, t: MapType) if f.keyType == t.keyType =>
+        transform_values(src, (_, v) => adaptValue(v, f.valueType, t.valueType))
       case (_, t) => src.cast(t)
     }
 
@@ -380,6 +385,9 @@ private[graft] object SchemaEvo {
     case (f: ArrayType, t: ArrayType) =>
       transform(src, x =>
         adaptValueStrict(x, f.elementType, t.elementType, s"$name[]"))
+    case (f: MapType, t: MapType) if f.keyType == t.keyType =>
+      transform_values(src, (_, v) =>
+        adaptValueStrict(v, f.valueType, t.valueType, s"$name{}"))
     case (f, t) =>
       if (!canWiden(f, t))
         throw new IllegalStateException(
@@ -533,6 +541,9 @@ private[graft] object SchemaEvo {
           .forall(tf => canStore(ff.dataType, tf.dataType)))
       case (f: ArrayType, t: ArrayType) =>
         canStore(f.elementType, t.elementType)
+      case (f: MapType, t: MapType) =>
+        f.keyType == t.keyType && (t.valueContainsNull || !f.valueContainsNull) &&
+          canStore(f.valueType, t.valueType)
       case (f, t) => canWiden(f, t)
     }
 }

@@ -198,12 +198,9 @@ private[sources] final class GraftRelation(
   // (twice in a self-join, again per re-executed action), and resolving
   // "latest" each time would let an interleaved commit make one
   // DataFrame read two different table versions
-  private val pinned: Option[Long] = asOf.orElse(table.log.latestId)
+  private val pinned = table.log.snapshot(asOf)
 
-  private def snapshot(): DataFrame =
-    pinned.fold(table.read())(table.readAsOf)
-
-  override val schema: StructType = snapshot().schema
+  override val schema: StructType = table.read(pinned, None).schema
 
   override def unhandledFilters(filters: Array[Filter]): Array[Filter] = filters
 
@@ -215,20 +212,15 @@ private[sources] final class GraftRelation(
   /** exact size from the commit log — lets Spark auto-broadcast small
     * lake tables instead of assuming defaultSizeInBytes (huge) */
   override def sizeInBytes: Long = {
-    val bytes = table.log.liveFiles(pinned).map(_.bytes).sum
+    val bytes = pinned.files.map(_.bytes).sum
     if (bytes > 0) bytes else super.sizeInBytes
   }
 
   override def buildScan(
       requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    val pred = filters.flatMap(toColumn).reduceOption(_ && _)
-    val base = (pred, pinned) match {
-      // the stats-skipping path serves the LATEST snapshot; use it only
-      // while the pin IS the head (the predicate re-applies either way)
-      case (Some(p), pin) if pin == table.log.latestId => table.read(p)
-      case (Some(p), _) => snapshot().filter(p)
-      case (None, _) => snapshot()
-    }
+    // the stats-skipping read of the PINNED version (the predicate
+    // re-applies row-level either way)
+    val base = table.read(pinned, filters.flatMap(toColumn).reduceOption(_ && _))
     val projected =
       if (requiredColumns.isEmpty) base else base.select(requiredColumns.map(qcol): _*)
     projected.rdd

@@ -637,6 +637,9 @@ final class GraftTailSource(
     // same file groups once per commit. Any removal (compaction,
     // partition drop, clean sweep) or DV commit in the range breaks the
     // run; runs cap at 16 commits to bound plan width.
+    // rows of every run are read and adapted with the table's current
+    // schema (the stream schema's names), resolved once per batch
+    lazy val head = table.log.snapshot()
     val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val run = scala.collection.mutable.ArrayBuffer
       .empty[(graft.lake.Commit, Seq[String])]
@@ -645,7 +648,7 @@ final class GraftTailSource(
         val keysByCommit = run.toSeq.map { case (c, ps) => c.id -> keysOf(c, ps) }
         val liveAtLast = table.log.liveFiles(Some(run.last._1.id))
         frames += typedChanges(
-          table.mergedPrePostPivotMulti(liveAtLast, keysByCommit, packed))
+          table.mergedPrePostPivotMulti(liveAtLast, keysByCommit, packed, head))
         run.clear()
       }
     }

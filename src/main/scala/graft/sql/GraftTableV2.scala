@@ -15,7 +15,7 @@ import org.apache.spark.sql.sources.{AlwaysTrue, BaseRelation, Filter, Insertabl
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.lake.{LakeTable, TableDescriptor}
+import graft.lake.{LakeTable, Snapshot, TableDescriptor}
 import graft.sources.FilterTranslation
 
 /** The lake table as a DSv2 catalog table. Reads and writes delegate to
@@ -107,7 +107,7 @@ final class GraftTableV2(
   override def name(): String = ident
 
   override def schema(): StructType = {
-    val st = lake.log.schemaJsonAsOf(asOf)
+    val st = pinned.schemaJson
       .map(j => DataType.fromJson(j).asInstanceOf[StructType])
       .orElse(Option(desc.schemaJson).filter(_.nonEmpty)
         .map(j => DataType.fromJson(j).asInstanceOf[StructType]))
@@ -263,42 +263,28 @@ final class GraftTableV2(
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(this)
 
-  /** The snapshot EVERY scan of this table instance reads: the
-    * explicit VERSION AS OF, else the head at first resolution. Without
-    * the pin, each buildScan would re-resolve the latest commit — a
+  /** The ONE version every use of this table instance reads — its
+    * schema, filter claims, aggregate pushdown, scan planning and
+    * runtime filters: the explicit VERSION AS OF, else the head at first
+    * resolution, resolved once ([[graft.lake.CommitLog.snapshot]]).
+    * Without the pin, each use would re-resolve the latest commit — a
     * self-join (or a re-executed DataFrame) racing a writer could mix
     * two table versions in one query. */
-  private[sql] lazy val pinned: Option[Long] = asOf.orElse(lake.log.latestId)
-
-  /** user schema captured when the pin resolves — the None-pin empty
-    * frame must not re-read a log that moved since */
-  private lazy val pinnedSchema: StructType = schema()
+  private[sql] lazy val pinned: Snapshot = lake.log.snapshot(asOf)
 
   /** pinned snapshot with user columns only; predicates still engage
     * the commit-log stats skipping (file-list pruning at the pin) */
   private[sql] def snapshot(pred: Option[Column]): org.apache.spark.sql.DataFrame = {
-    val base = (pred, pinned) match {
-      case (_, None) =>
+    val base =
+      if (pinned.id.isEmpty)
         // empty at resolution: the pin is EMPTINESS — a first writer
         // landing between resolution and (re-)execution must not leak
         // rows into an already-resolved scan
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], pinnedSchema)
-      case _ if readOptimized => lake.readOptimized(pred, pinned)
-      case (Some(p), v) => lake.read(p, v)
-      case (None, Some(v)) => lake.readAsOf(v)
-    }
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema())
+      else if (readOptimized) lake.readOptimized(pred, pinned)
+      else lake.read(pinned, pred)
     base.drop((metaCols ++ mvHidden).toSeq: _*)
   }
-
-  /** the file set this table variant scans: base-only under `_ro` */
-  private def scannable(asOf: Option[Long]): Seq[graft.lake.FileAdd] = {
-    val live = lake.log.liveFiles(asOf)
-    if (readOptimized) live.filter(!_.isDelta) else live
-  }
-
-  private[sql] def liveBytes: Long =
-    scannable(pinned).map(_.bytes).sum
 
   /** Commit-log bytes the scan would actually read under `pred`
     * (file-list pruning applied) — the planner's size estimate. A
@@ -308,8 +294,8 @@ final class GraftTableV2(
     * surviving file predates byte recording (unknowable — let the
     * planner fall back to its default, never to a false small). */
   private[sql] def scanBytes(pred: Option[Column]): Option[Long] = {
-    if (pinned.isEmpty) return Some(0L) // pinned-empty scan reads nothing
-    val live = scannable(pinned)
+    if (pinned.id.isEmpty) return Some(0L) // pinned-empty scan reads nothing
+    val live = if (readOptimized) pinned.files.filter(!_.isDelta) else pinned.files
     val files = pred.flatMap(c => lake.resolvePredicate(c, pinned))
       .map(p => lake.pruneFilesFor(live, p, pinned)).getOrElse(live)
     if (files.exists(_.bytes <= 0L)) None else Some(files.map(_.bytes).sum)
@@ -332,7 +318,7 @@ final class GraftTableV2(
     else lake.nativeScanFiles(pinned).map { files =>
       val pruned = pred.flatMap(c => lake.resolvePredicate(c, pinned))
         .map(p => lake.pruneFilesFor(files, p, pinned)).getOrElse(files)
-      val dvs = lake.log.liveDvs(pinned)
+      val dvs = pinned.dvs
         .groupBy(d => graft.lake.DvCodec.normPath(d.target))
       (pruned, lake.tableSchema(pinned), dvs)
     }
@@ -535,7 +521,7 @@ private[sql] final class GraftScanBuilder(table: GraftTableV2)
     * when any filter escapes the claim (rows, not metadata). */
   private def aggFiles(): Option[Seq[graft.lake.FileAdd]] = {
     if (pushed.exists(f => !claimed.contains(f))) return None
-    if (claimed.isEmpty) Some(table.lake.log.liveFiles(table.pinned))
+    if (claimed.isEmpty) Some(table.pinned.files)
     else claimSpec(claimed.toIndexedSeq).flatMap { case (cs, nn, rs) =>
       table.lake.exactPartitionFiles(cs, table.pinned, nn, rs) }
   }
@@ -583,12 +569,12 @@ private[sql] final class GraftScanBuilder(table: GraftTableV2)
     // integrals is LongType, so an out-of-range exact total refuses
     // here and the normal scan (with its own overflow semantics) runs
     def sumOk(fs: Seq[graft.lake.FileAdd]): Boolean =
-      sums.forall(sc => table.lake.metadataSumOf(sc.name, fs).exists {
+      sums.forall(sc => table.lake.metadataSumOf(sc.name, fs, table.pinned).exists {
         case (total, _) =>
           total.compareTo(java.math.BigDecimal.valueOf(Long.MaxValue)) <= 0 &&
           total.compareTo(java.math.BigDecimal.valueOf(Long.MinValue)) >= 0
       })
-    val provable = table.pinned match {
+    val provable = table.pinned.id match {
       case None =>
         pushed.isEmpty && gb.isEmpty // pinned-empty global: count 0, bounds NULL
       case some if gb.isEmpty =>
@@ -598,13 +584,13 @@ private[sql] final class GraftScanBuilder(table: GraftTableV2)
             (vals.forall(_ != PushCount) ||
               table.lake.metadataRowCountOf(fs, table.pinned).isDefined) &&
               bounds.forall(b =>
-                table.lake.metadataMinMaxOf(b.name, fs).isDefined) &&
+                table.lake.metadataMinMaxOf(b.name, fs, table.pinned).isDefined) &&
               sumOk(fs)
         }
-      case some =>
+      case _ =>
         aggFiles().exists(fs => table.lake
           .metadataPartitionAggsOf(bounds.map(_.name).distinct,
-            sums.map(_.name).distinct, fs, some)
+            sums.map(_.name).distinct, fs, table.pinned)
           .isDefined)
     }
     if (!provable) None
@@ -666,8 +652,8 @@ private[sql] final class GraftScanBuilder(table: GraftTableV2)
       // a prover miss here means the files changed under the pin —
       // fail loud rather than silently return a wrong aggregate
       throw new IllegalStateException(
-        s"pinned snapshot ${table.pinned} no longer metadata-answerable"))
-    (table.pinned, gb) match {
+        s"pinned snapshot ${table.pinned.id} no longer metadata-answerable"))
+    (table.pinned.id, gb) match {
       case (pin, Nil) =>
         val fs = pin.map(_ => reprove(aggFiles()))
         val cols = vals.map {
@@ -676,13 +662,13 @@ private[sql] final class GraftScanBuilder(table: GraftTableV2)
             case Some(sub) => lit(reprove(table.lake.metadataRowCountOf(sub, table.pinned)))
           }
           case PushBound(n, dt, minOf) =>
-            fs.map(sub => reprove(table.lake.metadataMinMaxOf(n, sub)))
+            fs.map(sub => reprove(table.lake.metadataMinMaxOf(n, sub, table.pinned)))
               .map(mm => if (minOf) mm._1 else mm._2) match {
               case None => lit(null).cast(dt)
               case Some(v) => boundExpr(lit(v), dt)
             }
           case PushSum(n) =>
-            fs.map(sub => reprove(table.lake.metadataSumOf(n, sub))) match {
+            fs.map(sub => reprove(table.lake.metadataSumOf(n, sub, table.pinned))) match {
               case None => lit(null).cast(LongType) // pinned-empty table
               case Some((_, 0L)) => lit(null).cast(LongType) // all-NULL sum
               case Some((total, _)) => lit(total.longValueExact())
@@ -690,14 +676,14 @@ private[sql] final class GraftScanBuilder(table: GraftTableV2)
         }
         ss.range(1).select(cols: _*).rdd
       case (None, _) => ss.sparkContext.emptyRDD[Row]
-      case (some, groupCols) =>
+      case (_, groupCols) =>
         val boundNames =
           vals.collect { case b: PushBound => b.name }.distinct
         val sumNames =
           vals.collect { case sc: PushSum => sc.name }.distinct
         reprove(table.lake
           .metadataPartitionAggsOf(boundNames, sumNames,
-            reprove(aggFiles()), some))
+            reprove(aggFiles()), table.pinned))
           .select(groupCols.map(FilterTranslation.qcol) ++ vals.map {
             case PushCount => col("n_rows")
             case PushBound(n, dt, minOf) =>

@@ -63,7 +63,8 @@ object MorCdfProbe {
       val helper = "_seq|_deleted|_rn|_(dcp|dcq|cp|cq|sp|sq|wp|wq)_\\d+"
       def pay(df: org.apache.spark.sql.DataFrame) = struct(df.columns
         .filterNot(_.matches(helper)).map(col).toSeq: _*)
-      val byKey = t.mergedPrePostPivotMulti(liveAt, Seq(2L -> keys), pay)
+      val byKey = t.mergedPrePostPivotMulti(liveAt, Seq(2L -> keys), pay,
+        t.log.snapshot())
       timed("  c2 fused pivot")(byKey.count())
       timed("  c2 fused pivot again")(byKey.count())
     }

@@ -47,8 +47,9 @@ class HiddenPartitionSpec extends AnyFunSuite {
   }
 
   private def prunedFiles(t: LakeTable, pred: org.apache.spark.sql.Column): Seq[FileAdd] = {
-    val p = t.resolvePredicate(pred, None).get
-    t.pruneFilesFor(t.log.liveFiles(None), p, None)
+    val snap = t.log.snapshot()
+    val p = t.resolvePredicate(pred, snap).get
+    t.pruneFilesFor(snap.files, p, snap)
   }
 
   test("days(ts): directories are epoch-day dates; reads stay complete") {
@@ -149,7 +150,7 @@ class HiddenPartitionSpec extends AnyFunSuite {
       "filtered metadata aggregates must not claim a transformed level")
     assert(t.metadataPartitionAggs(Seq.empty, None).isEmpty,
       "grouped metadata aggs cannot re-parse transform values")
-    assert(t.partitionKeyRows(t.log.liveFiles(None), None).isEmpty,
+    assert(t.partitionKeyRows(t.log.liveFiles(None), t.log.snapshot()).isEmpty,
       "key-grouped (storage-partitioned join) reporting must refuse")
     // per-partition counts still answer — through a scan
     val pc = t.partitionRowCounts(None).collect()

@@ -1587,7 +1587,7 @@ class LakeTableSpec extends AnyFunSuite {
     val pc = t.partitionRowCounts().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(pc == Map(1 -> 5, 2 -> 3))
-    val strict = t.metadataPartitionRowCounts()
+    val strict = t.metadataPartitionAggs(Seq.empty)
     assert(strict.isDefined)
     assert(strict.get.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap ==
       Map(1 -> 5, 2 -> 3))
@@ -1652,7 +1652,7 @@ class LakeTableSpec extends AnyFunSuite {
     t.bulkInsert(df((1L, 1, "", 0), (2L, 1, null, 0), (3L, 1, "r1", 0)))
     // on disk '' and NULL share the hive-default directory: the stored
     // tuple is ambiguous, so the strict prover must refuse...
-    assert(t.metadataPartitionRowCounts().isEmpty)
+    assert(t.metadataPartitionAggs(Seq.empty).isEmpty)
     // ...and the hybrid must scan those partitions and report the TRUE
     // column values as distinct groups
     val pc = t.partitionRowCounts().collect()

@@ -53,8 +53,9 @@ class PartSpecEvoSpec extends AnyFunSuite {
   }
 
   private def prunedFiles(t: LakeTable, pred: org.apache.spark.sql.Column): Seq[FileAdd] = {
-    val p = t.resolvePredicate(pred, None).get
-    t.pruneFilesFor(t.log.liveFiles(None), p, None)
+    val snap = t.log.snapshot()
+    val p = t.resolvePredicate(pred, snap).get
+    t.pruneFilesFor(snap.files, p, snap)
   }
 
   test("evolution: old files keep months tuples, new files get days; reads complete") {
@@ -133,7 +134,7 @@ class PartSpecEvoSpec extends AnyFunSuite {
     // metadata partition aggs must refuse: the 2024-03 level is not a
     // row value even though the CURRENT spec is identity
     assert(t.metadataPartitionAggsOf(Seq.empty, Seq.empty,
-      t.log.liveFiles(), None).isEmpty)
+      t.log.liveFiles(), t.log.snapshot()).isEmpty)
   }
 
   test("exactness claims dispatch per spec: every spec group must prove") {
