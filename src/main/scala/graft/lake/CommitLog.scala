@@ -164,20 +164,21 @@ final case class Checkpoint(
   * @param schemaJson  table schema as of `id` (the last commit's)
   * @param pathSchemas `path -> schemaJson of its add-commit` for every
   *                    live file — the FILE schema a reader adapts from
+  * @param nextId      the id a commit based on this snapshot publishes
+  *                    at: one past every visible, rolled-back, staged
+  *                    and archived id of the SAME listing that resolved
+  *                    `id`, so a writer never picks its id before its base
   */
 final case class Snapshot(
     id: Option[Long],
     files: Seq[FileAdd],
     dvs: Seq[FileAdd],
     schemaJson: Option[String],
-    pathSchemas: Map[String, String]) {
+    pathSchemas: Map[String, String],
+    nextId: Long) {
   /** the full live set, DVs included — checkpoints, clones and savepoint
     * pins must cover DV sidecars or travel/clean would lose them */
   def all: Seq[FileAdd] = files ++ dvs
-}
-
-object Snapshot {
-  val Empty: Snapshot = Snapshot(None, Seq.empty, Seq.empty, None, Map.empty)
 }
 
 /** A compacted run of archived commits (Hudi timeline-archival role,
@@ -318,6 +319,9 @@ final class CommitLog(root: String, hadoopConf: Configuration,
         !ownStaged.contains(n.stripSuffix(".json.txn").toLong))
     if (names.exists(foreign) && sweepStaged(names.filter(foreign)))
       names = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
+    // the archive boundary rides the same listing ([[archiveUpTo]] is
+    // part of every next id)
+    archCache = archRangesIn(names)
     val visible = names
       .filter(_.matches("\\d{8,}\\.json")) // %08d emits 9+ digits past 10^8 — keep them visible
       .map(_.stripSuffix(".json").toLong)
@@ -328,14 +332,23 @@ final class CommitLog(root: String, hadoopConf: Configuration,
     (visible, rolled, staged)
   }
 
-  private def listIds: Seq[Long] = {
-    val (visible, _, _) = scanLog()
-    // read-your-writes INSIDE a transaction: the txn's own handle (and
-    // only it) resolves its own staged commits as part of the timeline —
-    // a second write in the same transaction merges from a snapshot that
-    // includes the first. Every other reader stays blind until decide.
+  private def listIds: Seq[Long] = timeline(scanLog()._1)
+
+  /** the ids a resolution sees among `visible`: read-your-writes INSIDE
+    * a transaction — the txn's own handle (and only it) resolves its own
+    * staged commits as part of the timeline, so a second write in the
+    * same transaction merges from a snapshot that includes the first.
+    * Every other reader stays blind until decide. */
+  private def timeline(visible: Seq[Long]): Seq[Long] =
     (if (staging.isDefined) visible ++ ownStagedSeq else visible).sorted
-  }
+
+  /** one past every id of one listing: staged transaction ids are
+    * allocated too (a parallel writer must not land on one — the
+    * materialization rename targets that id), rolled-back ids are
+    * retired, and the archived range is retired wholesale */
+  private def nextIdOf(visible: Seq[Long], rolled: Seq[Long],
+      staged: Seq[Long]): Long =
+    (visible ++ rolled ++ staged :+ archiveUpTo).max.max(-1L) + 1
 
   // ---- multi-table transactions (GraftTxn): staged commits ------------
   // A transactional write stages its commit as `<id>.json.txn` — the id
@@ -508,12 +521,11 @@ final class CommitLog(root: String, hadoopConf: Configuration,
     * CommitLog instance on this root) stays sound */
   private def rolledIds: Seq[Long] = scanLog()._2
 
+  /** the next free id — for writers that base nothing on the table's
+    * state (timeline tooling); table writes take [[Snapshot.nextId]] */
   def nextId: Long = {
-    // staged transaction ids are allocated too: a parallel writer must
-    // not land on one (the materialization rename targets that id).
-    // ONE listing resolves all three id families.
     val (visible, rolled, staged) = scanLog()
-    (visible ++ rolled ++ staged :+ archiveUpTo).max.max(-1L) + 1
+    nextIdOf(visible, rolled, staged)
   }
 
   // commit JSONs are immutable once renamed into place, so parsed commits
@@ -590,19 +602,25 @@ final class CommitLog(root: String, hadoopConf: Configuration,
     * arbitrates them: on file:// a POSIX hard link — link(2) fails with
     * EEXIST where rename(2) would silently OVERWRITE the winner; on
     * HDFS-like filesystems rename is already no-overwrite. Writers from
-    * DIFFERENT observed states are caught by the staleness check (the id
-    * was resolved no earlier than the snapshot, so a head change between
-    * the two is visible by publish time). Every interleaving lands in
-    * one of the two guards: one winner, one clean failure.
+    * DIFFERENT observed states are caught by the staleness check: a table
+    * write takes both its id ([[Snapshot.nextId]]) and `basedOnLatest`
+    * ([[Snapshot.id]]) from the one [[Snapshot]] it read, so the id can
+    * never be resolved before the base, and any head change after that
+    * listing is visible at publish. Every interleaving lands in one of
+    * the two guards: one winner, one clean failure.
+    *
+    * The pre-publish checks (retired id, head, staged interveners) read
+    * ONE fresh listing of the log.
     */
   def append(c: Commit, basedOnLatest: Long = Unchecked,
       knownStaged: Set[Long] = Set.empty): Unit = {
+    val (visible, rolled, stagedNow) = scanLog()
     // a retired (rolled-back) id must NEVER be reused, even though its
     // JSON path is free again: other CommitLog instances memoize commit
     // JSONs forever per id, and a rollback interleaved between two
     // writers' id resolutions would otherwise let a stale writer land on
     // the retired id with the head check still passing
-    if (rolledIds.contains(c.id))
+    if (rolled.contains(c.id))
       throw new CommitConflict(
         s"commit id ${c.id} was retired by a rollback — resolve a fresh id")
     // the archived range is retired wholesale: its ids are out of the
@@ -614,7 +632,7 @@ final class CommitLog(root: String, hadoopConf: Configuration,
         s"commit id ${c.id} is below the archived timeline boundary " +
           s"($archiveUpTo) — resolve a fresh id")
     if (basedOnLatest != Unchecked) {
-      val head = latestId.getOrElse(EmptyTable)
+      val head = timeline(visible).lastOption.getOrElse(EmptyTable)
       if (head != basedOnLatest)
         throw new CommitConflict(
           s"stale write: commit $head landed after the snapshot this write " +
@@ -628,7 +646,7 @@ final class CommitLog(root: String, hadoopConf: Configuration,
       // disjoint back as `knownStaged`. A txn handle's OWN staged
       // commits are exempt: its resolution already includes them
       // (read-your-writes), so the merge DID see them.
-      val blocking = stagedIds.filter(i =>
+      val blocking = stagedNow.sorted.filter(i =>
         i > basedOnLatest && i != c.id && !knownStaged.contains(i) &&
           !ownStaged.contains(i))
       if (blocking.nonEmpty)
@@ -692,10 +710,14 @@ final class CommitLog(root: String, hadoopConf: Configuration,
     *
     * Contract: an operation resolves each version it reads exactly once,
     * here, and passes the value down; helpers below the entry point
-    * never resolve the head themselves. The three methods below are
-    * projections for callers that need one fact of one resolution. */
+    * never resolve the head themselves. A write's commit id is this
+    * value's [[Snapshot.nextId]], taken from the same listing. The three
+    * methods below are projections for callers that need one fact of
+    * one resolution. */
   def snapshot(asOf: Option[Long] = None): Snapshot = {
-    val ids = listIds
+    val (visible, rolled, staged) = scanLog()
+    val ids = timeline(visible)
+    val nextId = nextIdOf(visible, rolled, staged)
     asOf.foreach { id =>
       require(id > archiveUpTo,
         s"commit $id is archived (timeline archived up to $archiveUpTo) — " +
@@ -703,7 +725,8 @@ final class CommitLog(root: String, hadoopConf: Configuration,
           "longer travelable")
       require(ids.contains(id), s"no commit $id on the timeline")
     }
-    val target = asOf.orElse(ids.lastOption).getOrElse(return Snapshot.Empty)
+    val target = asOf.orElse(ids.lastOption).getOrElse(
+      return Snapshot(None, Seq.empty, Seq.empty, None, Map.empty, nextId))
     val ck = latestCheckpointAt(target)
     val from = ck.map(_.id).getOrElse(-1L)
     val live = mutable.LinkedHashMap.empty[String, FileAdd]
@@ -713,12 +736,14 @@ final class CommitLog(root: String, hadoopConf: Configuration,
       case (a, i) => live(a.path) = a; schemaOf(a.path) = c.schemas(i)
     })
     ids.withFilter(id => id > from && id <= target).map(read).foreach { c =>
-      c.removes.foreach(live.remove)
+      // a removed file leaves the schema map too: replayed and
+      // checkpointed resolution then agree on it, entry for entry
+      c.removes.foreach { p => live.remove(p); schemaOf.remove(p) }
       c.adds.foreach { a => live(a.path) = a; schemaOf(a.path) = c.schemaJson }
       schemaJson = Some(c.schemaJson)
     }
     val (dvs, files) = live.values.toSeq.partition(_.isDv)
-    Snapshot(Some(target), files, dvs, schemaJson, schemaOf.toMap)
+    Snapshot(Some(target), files, dvs, schemaJson, schemaOf.toMap, nextId)
   }
 
   /** Live DATA files (base + delta) as of `asOf` ([[Snapshot.files]]). */
@@ -771,13 +796,14 @@ final class CommitLog(root: String, hadoopConf: Configuration,
     * failed and provoke a duplicating retry. */
   private def maybeCheckpoint(): Unit =
     if (checkpointEvery > 0) try {
-      val ids = listIds
+      val (visible, _, staged) = scanLog() // ONE listing for head + floor
+      val ids = timeline(visible)
       if (ids.nonEmpty) {
         val last = ckptIds.lastOption.getOrElse(-1L)
         // never checkpoint ACROSS a staged transaction commit: a live
         // set baked above an undecided id would silently skip it when
         // it later materializes (resolution trusts the checkpoint)
-        val at = stagedFloor.map(f => math.min(ids.last, f - 1))
+        val at = staged.minOption.map(f => math.min(ids.last, f - 1))
           .getOrElse(ids.last)
         if (at > last && ids.count(_ > last) >= checkpointEvery)
           writeCheckpoint(ids.filter(_ <= at).last)
@@ -830,19 +856,21 @@ final class CommitLog(root: String, hadoopConf: Configuration,
     * [[archive]] extends the set (which refreshes), so the `id <=
     * archiveUpTo` probes on every append/nextId stop paying a listStatus
     * each — on object stores that roughly doubled per-commit metadata
-    * round-trips for tables that never archive. Cross-process archival
-    * is handled at the miss site: [[commitIfExists]] refreshes once
-    * before concluding a below-boundary id is gone. */
+    * round-trips for tables that never archive. Every id listing
+    * (`scanLog`) refreshes it from the names it already read, so a
+    * snapshot's next id costs no listing of its own. Cross-process
+    * archival is otherwise handled at the miss site: [[commitIfExists]]
+    * refreshes once before concluding a below-boundary id is gone. */
   @volatile private var archCache: Seq[(Long, Long)] = null
 
   private def listArchivedRanges(): Seq[(Long, Long)] =
     if (!fs.exists(logDir)) Seq.empty
-    else fs.listStatus(logDir).toSeq
-      .map(_.getPath.getName)
-      .flatMap { n =>
-        val m = "arch-(\\d{8,})-(\\d{8,})\\.json".r
-        n match { case m(f, t) => Some((f.toLong, t.toLong)); case _ => None }
-      }.sorted
+    else archRangesIn(fs.listStatus(logDir).toSeq.map(_.getPath.getName))
+
+  private val ArchName = "arch-(\\d{8,})-(\\d{8,})\\.json".r
+
+  private def archRangesIn(names: Seq[String]): Seq[(Long, Long)] =
+    names.collect { case ArchName(f, t) => (f.toLong, t.toLong) }.sorted
 
   def archivedRanges: Seq[(Long, Long)] = {
     var c = archCache

@@ -515,16 +515,16 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * `glue/HudiJarGlueJob.py:118-126`). Refuses on a non-empty table.
     */
   def bulkInsert(df: DataFrame, meta: Map[String, String] = Map.empty): Long = {
-    require(!exists, s"table ${config.root} already exists; use upsert")
+    val base = log.snapshot()
+    require(base.id.isEmpty, s"table ${config.root} already exists; use upsert")
     // stamp with the RESOLVED id, not 0: rollback-retired ids are never
     // reused, so a table emptied by rollbacks re-loads at id > 0 — a
     // hard-coded 0 stamp would hide the reload from incremental/CDC
     // readers filtering _commit_id > from
-    val id = log.nextId
+    val id = base.nextId
     val (adm, dropMeta) = admitBatch(df)
-    writeCommit(withDerived(withMeta(adm, id)), op = "bulk_insert",
-      removesIn = Seq.empty, fixedId = Some(id),
-      basedOn = Some(log.EmptyTable), commitMeta = meta ++ dropMeta)
+    writeCommit(withDerived(withMeta(adm, id)), "bulk_insert", base, id,
+      Seq.empty, commitMeta = meta ++ dropMeta)
   }
 
   /** Merge a batch by record key; on key collision the row with the highest
@@ -558,9 +558,11 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   def upsert(batch0: DataFrame): Long = withOccRetry(upsertOnce(batch0))
 
   private def upsertOnce(batch0: DataFrame): Long = {
-    if (batch0.isEmpty) return log.latestId.getOrElse(-1L)
+    val base = log.snapshot()
+    if (batch0.isEmpty) return base.id.getOrElse(-1L)
     val (batch, dropMeta) = admitBatch(batch0)
-    if (!exists) {
+    val id = base.nextId
+    if (base.id.isEmpty) {
       // first write still precombines WITHIN the batch: only the explicit
       // bulkInsert() API skips dedup (the reference's connector job notes
       // bulk_insert performs no pre-combining, HudiConnectorGlueJob.py:85-86).
@@ -568,12 +570,10 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       // hard-coded 0 could diverge from the landed id under a racing
       // creator, and the rebase restamp (which matches on the resolved
       // id) would then fix nothing — rows would carry the rival's id.
-      val id = log.nextId
       val incoming = withDerived(withMeta(batch, id))
         .withColumn("_seq", monotonically_increasing_id())
-      return writeCommit(dedupWithinBatch(incoming), "upsert", Seq.empty,
-        fixedId = Some(id),
-        basedOn = Some(log.EmptyTable), commitMeta = dropMeta,
+      return writeCommit(dedupWithinBatch(incoming), "upsert", base, id,
+        Seq.empty, commitMeta = dropMeta,
         // read nothing (table was empty): rebase-safe against a racing
         // creator unless the global index demands table-wide key checks
         partitionScoped = !config.globalIndex)
@@ -582,13 +582,11 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       // MoR: append the batch as-is as delta files — no read, no merge,
       // no rewrite; collisions resolve at read time (morMerge). _seq
       // still pins intra-batch duplicate order.
-      val id = log.nextId
-      val basedOn = log.latestId.getOrElse(log.EmptyTable)
       val incoming = withDerived(withMeta(batch, id))
         .withColumn("_seq", monotonically_increasing_id())
         .withColumn("_deleted", lit(false))
-      val cid = writeCommit(incoming, "delta_commit", Seq.empty, Some(id),
-        kind = "delta", basedOn = Some(basedOn), commitMeta = dropMeta,
+      val cid = writeCommit(incoming, "delta_commit", base, id, Seq.empty,
+        kind = "delta", commitMeta = dropMeta,
         // a delta append reads nothing; collisions (even cross-partition
         // under a global index) resolve deterministically at read time by
         // (precombine, commit id) — identical to serial execution, so it
@@ -597,8 +595,6 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       maybeInlineCompact()
       return cid
     }
-    val id = log.nextId
-    val basedOn = log.latestId.getOrElse(log.EmptyTable)
     // _seq pins a total order for duplicate keys with equal precombine
     // WITHIN one batch (SURVEY.md §7.4 tie-break risk): later row wins.
     // persist: the batch is consumed 3× (partition probe, merge, write) —
@@ -607,7 +603,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       .withColumn("_seq", monotonically_increasing_id())
       .persist()
     try {
-      val (oldFiles, current) = snapshotForUpsert(incoming)
+      val (oldFiles, current) = snapshotForUpsert(incoming, base)
       // winner-per-key via max_by hash aggregation, NOT a ranking window:
       // an aggregate gets map-side partial combine, so each shuffle
       // partition receives one candidate row per (task, key) instead of
@@ -623,8 +619,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         .agg(max_by(struct(union.columns.map(col): _*), ord).as("_row"))
         .select(col("_row.*"))
         .drop("_seq")
-      writeCommit(merged, "upsert", oldFiles.map(_.path), Some(id),
-        basedOn = Some(basedOn), commitMeta = dropMeta,
+      writeCommit(merged, "upsert", base, id, oldFiles.map(_.path),
+        commitMeta = dropMeta,
         // non-global: the merge read exactly the touched partitions
         partitionScoped = !config.globalIndex)
     } finally incoming.unpersist()
@@ -639,7 +635,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // persisted: consumed up to 3× (emptiness probe, partition-tuple
     // probe, anti-join) — same rationale as upsert's incoming persist
     val keys = keysIn.persist()
-    try withOccRetry(deleteImpl(keys)) finally keys.unpersist()
+    try withOccRetry(deleteImpl(keys, log.snapshot())) finally keys.unpersist()
   }
 
   /** Delete every row matching `pred` (Hudi's delete-by-predicate /
@@ -647,13 +643,25 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * read that itself engages column-stats file skipping and partition
     * pruning, then routes through the keyed delete — so a predicate on a
     * well-clustered column touches only the files and partitions that
-    * can hold matches.
+    * can hold matches. One snapshot serves the metadata-only probe, the
+    * predicate read and the keyed delete, so the doomed keys come from
+    * the version the delete is validated against.
     */
   def deleteWhere(pred: org.apache.spark.sql.Column): Long =
-    withOccRetry(dropPartitionsMetadataOnly(pred)).getOrElse {
-      val cols = (config.partitionCols ++ config.keyCols).distinct
-      delete(read(pred).select(cols.map(col): _*))
+    withOccRetry {
+      val base = log.snapshot()
+      dropPartitionsMetadataOnly(pred, base).getOrElse(
+        withDoomedKeys(pred, base)(deleteImpl(_, base)))
     }
+
+  /** the (partition, key) rows of `base` matching `pred`, persisted for
+    * the keyed delete `body` (consumed up to 3×, like [[delete]]'s) */
+  private def withDoomedKeys(pred: org.apache.spark.sql.Column,
+      base: Snapshot)(body: DataFrame => Long): Long = {
+    val cols = (config.partitionCols ++ config.keyCols).distinct
+    val keys = readPruned(base, Some(pred)).select(cols.map(col): _*).persist()
+    try body(keys) finally keys.unpersist()
+  }
 
   /** Position-delete (deletion vectors — Iceberg v2 position deletes /
     * Delta DV role): delete by key WITHOUT rewriting the target files.
@@ -676,22 +684,19 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * into plain base files. CoW only — MoR deletes are already O(keys)
     * tombstone deltas. */
   def deleteDv(keysIn: DataFrame): Long = {
-    require(exists, s"table ${config.root} does not exist")
-    require(!config.isMor,
-      "position deletes (deletion vectors) apply to CoW tables — " +
-        "MoR deletes are already O(keys) tombstone deltas")
     val keys = keysIn.persist()
-    try withOccRetry(deleteDvImpl(keys)) finally keys.unpersist()
+    try withOccRetry(deleteDvImpl(keys, log.snapshot())) finally keys.unpersist()
   }
 
   /** [[deleteWhere]] on the DV path: resolves doomed keys with the same
     * stats-skipping snapshot read, then position-deletes them. */
   def deleteWhereDv(pred: org.apache.spark.sql.Column): Long =
-    // a provable whole-partition predicate is still better served by the
-    // metadata-only drop (zero rows read OR written) than by positions
-    withOccRetry(dropPartitionsMetadataOnly(pred)).getOrElse {
-      val cols = (config.partitionCols ++ config.keyCols).distinct
-      deleteDv(read(pred).select(cols.map(col): _*))
+    withOccRetry {
+      val base = log.snapshot()
+      // a provable whole-partition predicate is still better served by
+      // the metadata-only drop (zero rows read OR written) than by positions
+      dropPartitionsMetadataOnly(pred, base).getOrElse(
+        withDoomedKeys(pred, base)(deleteDvImpl(_, base)))
     }
 
   /** Position-UPDATE (the row-level-update face of deletion vectors —
@@ -708,7 +713,6 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * update_postimage (the commit's adds). CoW only. */
   def updateDvWhere(pred: org.apache.spark.sql.Column,
       sets: Map[String, org.apache.spark.sql.Column]): Long = {
-    require(exists, s"table ${config.root} does not exist")
     require(!config.isMor,
       "position updates (deletion vectors) apply to CoW tables — " +
         "MoR updates are already O(rows) delta appends")
@@ -721,23 +725,22 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     require(badDerived.isEmpty,
       s"UPDATE may not assign engine-derived (generated/ALWAYS-identity) " +
         s"columns: ${badDerived.mkString(",")}")
-    val known = tableSchema().fieldNames.toSet
-    val unknown = sets.keySet -- known
-    require(unknown.isEmpty, s"unknown column(s): ${unknown.mkString(",")}")
     withOccRetry(updateDvOnce(pred, sets))
   }
 
   private def updateDvOnce(pred: org.apache.spark.sql.Column,
       sets: Map[String, org.apache.spark.sql.Column]): Long = {
-    val id = log.nextId
-    val basedOn = log.latestId.getOrElse(log.EmptyTable)
-    if (basedOn < 0) return -1L
     val snap = log.snapshot()
+    require(snap.id.isDefined, s"table ${config.root} does not exist")
+    val basedOn = snap.id.get
+    val id = snap.nextId
+    val target = tableSchema(snap)
+    val unknown = sets.keySet -- target.fieldNames.toSet
+    require(unknown.isEmpty, s"unknown column(s): ${unknown.mkString(",")}")
     val live = snap.files
     val resolved = resolvePredicate(pred, snap)
     val files = resolved.fold(live)(p => pruneFilesFor(live, p, snap))
     if (files.isEmpty) return basedOn
-    val target = tableSchema(snap)
     val targetKey = SchemaEvo.adaptKey(target)
     val jsonOf = snap.pathSchemas
     val dvRows = dvRowsFor(files, snap)
@@ -772,8 +775,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         sets.get(c).map(_.as(c)).getOrElse(col("`" + c + "`"))): _*)
       val incoming = withDerived(withMeta(updated, id))
         .withColumn("_seq", monotonically_increasing_id())
-      try writeCommit(incoming, "dv_update", Seq.empty, fixedId = Some(id),
-        basedOn = Some(basedOn),
+      try writeCommit(incoming, "dv_update", snap, id, Seq.empty,
         // extraAdds cannot rebase (the rebase re-read would drop them);
         // conflicts abort clean and the outer occRetry re-runs wholesale
         partitionScoped = false, extraAdds = dvAdds)
@@ -785,11 +787,14 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     } finally matched.unpersist()
   }
 
-  private def deleteDvImpl(keys: DataFrame): Long = {
-    if (keys.isEmpty) return log.latestId.getOrElse(-1L)
-    val id = log.nextId
-    val basedOn = log.latestId.getOrElse(log.EmptyTable)
-    val snap = log.snapshot()
+  private def deleteDvImpl(keys: DataFrame, snap: Snapshot): Long = {
+    require(snap.id.isDefined, s"table ${config.root} does not exist")
+    require(!config.isMor,
+      "position deletes (deletion vectors) apply to CoW tables — " +
+        "MoR deletes are already O(keys) tombstone deltas")
+    val basedOn = snap.id.get
+    if (keys.isEmpty) return basedOn
+    val id = snap.nextId
     val live = snap.files
     val userPartsKnown = config.partitionCols.forall(keys.columns.contains)
     val oldFiles =
@@ -797,7 +802,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       else if (!config.globalIndex && userPartsKnown)
         pruneByKeyRange(keys, filesMatchingTuples(live, withDerived(keys)))
       else pruneByKeyRange(keys, filesInKeyPartitions(keys, live, snap))
-    if (oldFiles.isEmpty) return log.latestId.getOrElse(-1L)
+    if (oldFiles.isEmpty) return basedOn
     val joinCols =
       if (!config.globalIndex && config.partitionCols.nonEmpty && userPartsKnown)
         config.partitionCols ++ config.keyCols
@@ -825,7 +830,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     val fs = new Path(config.root).getFileSystem(hconf)
     try {
       val (dir, adds) = writeDvSidecars(id, "dv_delete", matches, oldFiles)
-      if (adds.isEmpty) return log.latestId.getOrElse(-1L) // nothing matched
+      if (adds.isEmpty) return basedOn // nothing matched
       try log.append(Commit(id, "dv_delete", System.currentTimeMillis(),
         tableJson, adds, Seq.empty), basedOnLatest = basedOn)
       catch { case e: Throwable =>
@@ -902,11 +907,10 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * written when nothing matches, the keyed delete's own contract).
     */
   private def dropPartitionsMetadataOnly(
-      pred: org.apache.spark.sql.Column): Option[Long] = {
+      pred: org.apache.spark.sql.Column, snap: Snapshot): Option[Long] = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     if (config.partitionCols.isEmpty) return None
-    val snap = log.snapshot()
     val live = snap.files
     if (live.isEmpty) return None // read(pred) on empty is a cheap no-op
     if (live.exists(_.isDelta) && !groupLocalMergeSafe) return None
@@ -943,14 +947,12 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     val doomedTuples = filtered.select("__gp_tuple")
       .collect().map(_.getString(0)).toSet
     val doomed = live.filter(f => doomedTuples.contains(f.partition))
-    val basedOn = log.latestId.getOrElse(log.EmptyTable)
-    if (doomed.isEmpty) return Some(basedOn)
-    val id = log.nextId
+    if (doomed.isEmpty) return snap.id
     // empty payload at the pinned table schema: SchemaEvo sees an
     // unchanged schema and the writer emits zero files — the commit is
     // the removals (the truncate/empty-region-overwrite precedent)
-    Some(writeCommit(readOrEmpty(Seq.empty, snap), "delete",
-      doomed.map(_.path), Some(id), basedOn = Some(basedOn),
+    Some(writeCommit(readOrEmpty(Seq.empty, snap), "delete", snap,
+      snap.nextId, doomed.map(_.path),
       commitMeta = Map("delete.metadataOnly" -> "true"),
       partitionScoped = true))
   }
@@ -968,16 +970,15 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     withOccRetry(insertOverwriteOnce(batch0))
 
   private def insertOverwriteOnce(batch0: DataFrame): Long = {
-    if (batch0.isEmpty) return log.latestId.getOrElse(-1L)
+    val snap = log.snapshot()
+    if (batch0.isEmpty) return snap.id.getOrElse(-1L)
     val (batch, dropMeta) = admitBatch(batch0)
-    val basedOn = log.latestId.getOrElse(log.EmptyTable)
-    val id = log.nextId
+    val id = snap.nextId
     val incoming = withDerived(withMeta(batch, id))
       .withColumn("_seq", monotonically_increasing_id())
       .persist()
     try {
       val deduped = dedupWithinBatch(incoming)
-      val snap = log.snapshot()
       val live = snap.files
       // overwrite scope is the USER partition: every live file whose user
       // partition levels match the batch is superseded, including buckets
@@ -1008,8 +1009,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
              deduped.unionByName(keepers, allowMissingColumns = true))
           }
         }
-      writeCommit(payload, "insert_overwrite", removes.map(_.path), Some(id),
-        basedOn = Some(basedOn),
+      writeCommit(payload, "insert_overwrite", snap, id, removes.map(_.path),
         // non-global: replaces (and read) only the touched partitions;
         // global probed foreign partitions for resident keys
         partitionScoped = !config.globalIndex)
@@ -1031,9 +1031,9 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * rewritten base.
     */
   def overwriteWhere(pred: org.apache.spark.sql.Column, batch0: DataFrame): Long = {
+    val snap = log.snapshot()
     val (batch, dropMeta) = admitBatch(batch0)
-    val id = log.nextId
-    val basedOn = log.latestId.getOrElse(log.EmptyTable)
+    val id = snap.nextId
     val incoming = withDerived(withMeta(batch, id))
       .withColumn("_seq", monotonically_increasing_id())
       .persist()
@@ -1045,7 +1045,6 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       require(incoming.filter(!inRegion).isEmpty,
         "overwriteWhere: every batch row must satisfy the predicate — " +
           "rows outside the replaced region would silently widen the overwrite")
-      val snap = log.snapshot()
       val live = snap.files
       // same analyzed-probe route as read(pruneBy): the stats index
       // drops files (→ partitions) that provably hold no matching row
@@ -1100,8 +1099,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
           keep.unionByName(dedupWithinBatch(incoming),
             allowMissingColumns = true)
         }
-      writeCommit(payload, "insert_overwrite", scope.map(_.path), Some(id),
-        basedOn = Some(basedOn), commitMeta = dropMeta,
+      writeCommit(payload, "insert_overwrite", snap, id, scope.map(_.path),
+        commitMeta = dropMeta,
         partitionScoped = !config.globalIndex)
     } finally incoming.unpersist()
   }
@@ -1114,14 +1113,13 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * (dynamic-overwrite semantics). An empty batch truncates.
     */
   def overwriteAll(batch0: DataFrame, meta: Map[String, String] = Map.empty): Long = {
+    val base = log.snapshot()
     val (batch, dropMeta) = admitBatch(batch0)
-    val basedOn = log.latestId.getOrElse(log.EmptyTable)
-    val id = log.nextId
+    val id = base.nextId
     val incoming = withDerived(withMeta(batch, id))
       .withColumn("_seq", monotonically_increasing_id())
-    val live = log.liveFiles()
-    writeCommit(dedupWithinBatch(incoming), "insert_overwrite",
-      live.map(_.path), Some(id), basedOn = Some(basedOn),
+    writeCommit(dedupWithinBatch(incoming), "insert_overwrite", base, id,
+      base.files.map(_.path),
       commitMeta = dropMeta ++ meta,
       // no old file survives: the batch schema replaces the table schema
       schemaReset = true)
@@ -1277,12 +1275,10 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       .drop("_seq")
   }
 
-  private def deleteImpl(keys: DataFrame): Long = {
-    if (keys.isEmpty) return log.latestId.getOrElse(-1L)
-    require(exists, s"table ${config.root} does not exist")
-    if (config.isMor) return morDelete(keys)
-    val id = log.nextId
-    val basedOn = log.latestId.getOrElse(log.EmptyTable)
+  private def deleteImpl(keys: DataFrame, snap: Snapshot): Long = {
+    if (keys.isEmpty) return snap.id.getOrElse(-1L)
+    require(snap.id.isDefined, s"table ${config.root} does not exist")
+    if (config.isMor) return morDelete(keys, snap)
     // prune to the partition tuples that can hold the doomed keys: from
     // the keys frame itself when it carries every user partition column
     // (the key-hash bucket level is always derivable), otherwise from the
@@ -1291,7 +1287,6 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // table thus rewrites only the partitions actually holding the keys,
     // never the whole table; semantics are unchanged because partitions
     // the probe skips cannot contain a matching key.
-    val snap = log.snapshot()
     val live = snap.files
     val userPartsKnown = config.partitionCols.forall(keys.columns.contains)
     val oldFiles =
@@ -1312,8 +1307,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     val doomed = keys.select(joinCols.map(col): _*).distinct().as("k")
     val cond = joinCols.map(c => current(c) <=> doomed(c)).reduce(_ && _)
     val remaining = current.join(doomed, cond, "left_anti")
-    writeCommit(remaining, "delete", oldFiles.map(_.path), Some(id),
-      basedOn = Some(basedOn),
+    writeCommit(remaining, "delete", snap, snap.nextId, oldFiles.map(_.path),
       // scoped only when the keys frame pinned the partitions outright;
       // the bare-key probe read key ranges table-wide
       partitionScoped = !config.globalIndex && userPartsKnown)
@@ -1341,7 +1335,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   private def mergeOnce(source0: DataFrame, clauses: Seq[MergeClause],
       commitMeta: Map[String, String]): Long = {
     import MergeClause._
-    require(exists, s"table ${config.root} does not exist")
+    val snap = log.snapshot()
+    require(snap.id.isDefined, s"table ${config.root} does not exist")
     require(clauses.nonEmpty, "merge needs at least one WHEN clause")
     val identityCols = (config.keyCols ++ config.partitionCols).toSet
     // an insert assignment for an identity column must be the SOURCE's
@@ -1394,14 +1389,12 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       s"merge source must carry identity+partition+precombine column '$c'"))
     val hasBySource = clauses.exists(cl =>
       cl.kind == BySourceUpdate || cl.kind == BySourceDelete)
-    if (!hasBySource && source0.isEmpty) return log.latestId.getOrElse(-1L)
-    val basedOn = log.latestId.getOrElse(log.EmptyTable)
-    val id = log.nextId
+    if (!hasBySource && source0.isEmpty) return snap.id.get
+    val id = snap.nextId
     val src = dedupWithinBatch(
       withDerived(source0).withColumn("_seq", monotonically_increasing_id()))
       .persist()
     try {
-      val snap = log.snapshot()
       val live = snap.files
       val oldFiles =
         if (hasBySource || effParts.isEmpty) live
@@ -1481,8 +1474,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
           .select(userCols.map(valueFor) ++ Seq(newCid.as("_commit_id")) ++
             newSeqno: _*)
           .withColumn("_record_key", keyStrExpr))
-      writeCommit(result, "merge", oldFiles.map(_.path), Some(id),
-        basedOn = Some(basedOn), commitMeta = commitMeta,
+      writeCommit(result, "merge", snap, id, oldFiles.map(_.path),
+        commitMeta = commitMeta,
         // scoped iff oldFiles took the pruned branch above
         partitionScoped = !hasBySource && effParts.nonEmpty &&
           !(config.isMor && !groupLocalMergeSafe) && !config.globalIndex)
@@ -1910,7 +1903,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     */
   def deepClone(targetRoot: String, asOf: Option[Long] = None): LakeTable = {
     val clone = new LakeTable(spark, config.copy(root = targetRoot))
-    require(!clone.exists, s"clone target $targetRoot already exists")
+    val cloneBase = clone.log.snapshot()
+    require(cloneBase.id.isEmpty, s"clone target $targetRoot already exists")
     val snap = log.snapshot(asOf)
     val clean = nativeScanFiles(snap).filter(_ => snap.dvs.isEmpty)
     clean match {
@@ -1948,19 +1942,21 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
           groups.getOrElseUpdate(jsonOf.getOrElse(orig.path, schemaJson),
             new scala.collection.mutable.ArrayBuffer[FileAdd]) += c
         }
-        var next = clone.log.nextId
+        val first = cloneBase.nextId
+        var next = first
         groups.foreach { case (j, fs) =>
           clone.log.append(
             Commit(next, "deep_clone", System.currentTimeMillis(), j,
               adds = fs.toSeq, removes = Seq.empty),
-            basedOnLatest = if (next == 0L) clone.log.EmptyTable else next - 1)
+            basedOnLatest = if (next == first) clone.log.EmptyTable else next - 1)
           next += 1
         }
         if (groups.isEmpty || groups.keys.last != schemaJson)
           clone.log.append(
             Commit(next, "schema", System.currentTimeMillis(), schemaJson,
               adds = Seq.empty, removes = Seq.empty),
-            basedOnLatest = if (next == 0L) clone.log.EmptyTable else next - 1)
+            basedOnLatest = if (next == first) clone.log.EmptyTable else next - 1)
+
         clone
       case None =>
         // merged-snapshot rewrite: user columns only (engine stamps are
@@ -2004,21 +2000,22 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * of this table reuses a stamped id.
     */
   def publishFrom(audit: LakeTable): Long = {
-    require(exists, s"table ${config.root} does not exist")
-    require(audit.exists, s"audit table ${audit.config.root} does not exist")
+    // FULL live sets (DV sidecars included): an audit whose changes are
+    // position deletes must publish its sidecars with it, and a fold on
+    // the audit must retire the source's borrowed sidecars
+    val src = log.snapshot()
+    require(src.id.isDefined, s"table ${config.root} does not exist")
+    val auditSnap = audit.log.snapshot()
+    require(auditSnap.id.isDefined,
+      s"audit table ${audit.config.root} does not exist")
     val firstMeta = audit.log.commitsAll.headOption
       .map(_.metadata).getOrElse(Map.empty[String, String])
     require(firstMeta.get("clone.sourceRoot").contains(config.root),
       s"${audit.config.root} is not a clone of ${config.root} " +
         s"(provenance: ${firstMeta.getOrElse("clone.sourceRoot", "none")})")
     val sourceCommit = firstMeta("clone.sourceCommit").toLong
-    val head = log.latestId.getOrElse(log.EmptyTable)
-    // FULL live sets (DV sidecars included): an audit whose changes are
-    // position deletes must publish its sidecars with it, and a fold on
-    // the audit must retire the source's borrowed sidecars
-    val src = log.snapshot()
+    val head = src.id.get
     val srcLive = src.all.map(f => f.path -> f).toMap
-    val auditSnap = audit.log.snapshot()
     val auditLive = auditSnap.all
     val adds = auditLive.filterNot(f => srcLive.contains(f.path))
     val removes = {
@@ -2053,13 +2050,13 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         .flatMap(f => src.pathSchemas.get(f.path)).distinct.map(parseSchema)
     }
     SchemaEvo.validateAgainstLiveFiles(parseSchema(schemaJson), retainedSchemas)
-    val id = math.max(log.nextId, audit.log.latestId.getOrElse(0L))
+    val auditHead = auditSnap.id.get
+    val id = math.max(src.nextId, auditHead)
     log.append(
       Commit(id, "publish", System.currentTimeMillis(), schemaJson,
         adds = adds, removes = removes,
         meta = Map("publish.auditRoot" -> audit.config.root,
-          "publish.auditCommit" ->
-            audit.log.latestId.getOrElse(0L).toString)),
+          "publish.auditCommit" -> auditHead.toString)),
       basedOnLatest = head)
     id
   }
@@ -2083,15 +2080,15 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * the same contract as Delta's column mapping; re-sync via compaction.
     */
   def renameColumn(oldName: String, newName: String): Long = {
-    require(exists, s"table ${config.root} does not exist")
-    val s = tableSchema()
+    val base = schemaBase()
+    val s = tableSchema(base)
     require(s.fieldNames.contains(oldName), s"no column '$oldName'")
     require(!s.fieldNames.contains(newName), s"column '$newName' already exists")
     require(!SchemaEvo.isInternal(oldName) && !pinnedCols.contains(oldName),
       s"column '$oldName' is pinned by the table configuration")
     require(newName.nonEmpty && !SchemaEvo.isInternal(newName),
       s"invalid new column name '$newName'")
-    schemaCommit(StructType(s.fields.map(f =>
+    schemaCommit(base, StructType(s.fields.map(f =>
       if (f.name == oldName) SchemaEvo.renameField(f, newName) else f)))
   }
 
@@ -2100,12 +2097,12 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * Re-adding the same name later mints a FRESH column id, so the
     * dropped data never resurrects. */
   def dropColumn(name: String): Long = {
-    require(exists, s"table ${config.root} does not exist")
-    val s = tableSchema()
+    val base = schemaBase()
+    val s = tableSchema(base)
     require(s.fieldNames.contains(name), s"no column '$name'")
     require(!SchemaEvo.isInternal(name) && !pinnedCols.contains(name),
       s"column '$name' is pinned by the table configuration")
-    schemaCommit(StructType(s.fields.filterNot(_.name == name)))
+    schemaCommit(base, StructType(s.fields.filterNot(_.name == name)))
   }
 
   /** Add a nullable column (metadata-only commit): existing rows read
@@ -2113,8 +2110,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * drop never resurrects the dropped column's data. */
   def addColumn(name: String, dt: DataType,
       defaultSql: Option[String] = None): Long = {
-    require(exists, s"table ${config.root} does not exist")
-    val s = tableSchema()
+    val base = schemaBase()
+    val s = tableSchema(base)
     require(!s.fieldNames.contains(name), s"column '$name' already exists")
     require(name.nonEmpty && !SchemaEvo.isInternal(name),
       s"invalid column name '$name'")
@@ -2135,7 +2132,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
           .putString("EXISTS_DEFAULT", sql).build())
     }
     val (user, internal) = s.fields.partition(x => !SchemaEvo.isInternal(x.name))
-    schemaCommit(StructType(user ++ Array(minted) ++ internal))
+    schemaCommit(base, StructType(user ++ Array(minted) ++ internal))
   }
 
   /** The "validated now, loudly" gate for DEFAULT expressions, shared
@@ -2189,8 +2186,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * deliberately preserved: repointing it would rewrite the history
     * those files read as. Validated now, loudly, like ADD COLUMN. */
   def setColumnDefault(name: String, defaultSql: Option[String]): Long = {
-    require(exists, s"table ${config.root} does not exist")
-    val s = tableSchema()
+    val base = schemaBase()
+    val s = tableSchema(base)
     val f = s.fields.find(_.name == name)
       .getOrElse(throw new IllegalArgumentException(s"no column '$name'"))
     require(!SchemaEvo.isInternal(name), s"invalid column name '$name'")
@@ -2203,7 +2200,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         new org.apache.spark.sql.types.MetadataBuilder()
           .withMetadata(f.metadata).remove("CURRENT_DEFAULT").build()
     }
-    schemaCommit(StructType(s.fields.map(x =>
+    schemaCommit(base, StructType(s.fields.map(x =>
       if (x.name == name) x.copy(metadata = md) else x)))
   }
 
@@ -2211,15 +2208,15 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * float→double, ... — [[SchemaEvo.canWiden]]): old files keep the
     * narrow physical type; reads cast up by column id. */
   def widenColumn(name: String, dt: DataType): Long = {
-    require(exists, s"table ${config.root} does not exist")
-    val s = tableSchema()
+    val base = schemaBase()
+    val s = tableSchema(base)
     val f = s.fields.find(_.name == name)
       .getOrElse(throw new IllegalArgumentException(s"no column '$name'"))
     require(!SchemaEvo.isInternal(name) && !pinnedCols.contains(name),
       s"column '$name' is pinned by the table configuration")
     require(SchemaEvo.canWiden(f.dataType, dt),
       s"cannot widen ${f.dataType.simpleString} to ${dt.simpleString}")
-    schemaCommit(StructType(s.fields.map(x =>
+    schemaCommit(base, StructType(s.fields.map(x =>
       if (x.name == name) x.copy(dataType = dt) else x)))
   }
 
@@ -2263,29 +2260,36 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
 
   private def nestedSchemaChange(path: Seq[String])
       (op: StructType => StructType): Long = {
-    require(exists, s"table ${config.root} does not exist")
+    val base = schemaBase()
     require(!SchemaEvo.isInternal(path.head) &&
         !pinnedCols.contains(path.head),
       s"column '${path.head}' is pinned by the table configuration")
-    schemaCommit(op(tableSchema()))
+    schemaCommit(base, op(tableSchema(base)))
   }
 
-  /** publish a metadata-only schema commit (op "schema"): adds/removes
-    * empty, optimistic-concurrency checked like any write */
-  private def schemaCommit(next: StructType): Long = {
-    val basedOn = log.latestId.getOrElse(log.EmptyTable)
-    val id = log.nextId
+  /** the one snapshot a schema change derives its next schema from and
+    * is validated against */
+  private def schemaBase(): Snapshot = {
+    val base = log.snapshot()
+    require(base.id.isDefined, s"table ${config.root} does not exist")
+    base
+  }
+
+  /** publish a metadata-only schema commit (op "schema") derived from
+    * `base`: adds/removes empty, optimistic-concurrency checked against
+    * `base` like any write */
+  private def schemaCommit(base: Snapshot, next: StructType): Long = {
+    val id = base.nextId
     // stamp ids on any legacy field so identity survives the change —
     // at EVERY nesting level (nested fields default to name identity)
     val stamped = StructType(next.fields.map(f =>
       if (SchemaEvo.isInternal(f.name)) f
       else SchemaEvo.renameField(
         f.copy(dataType = SchemaEvo.stampIds(f.dataType)), f.name)))
-    val head = log.snapshot()
     SchemaEvo.validateAgainstLiveFiles(stamped,
-      head.files.flatMap(f => head.pathSchemas.get(f.path)).distinct.map(parseSchema))
+      base.files.flatMap(f => base.pathSchemas.get(f.path)).distinct.map(parseSchema))
     log.append(Commit(id, "schema", System.currentTimeMillis(), stamped.json,
-      Seq.empty, Seq.empty), basedOnLatest = basedOn)
+      Seq.empty, Seq.empty), basedOnLatest = base.id.get)
     resync()
     id
   }
@@ -3574,9 +3578,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * the partition value so it lands in (and prunes to) the right
     * directory — attached from the key+partition index when absent.
     */
-  private def morDelete(keys: DataFrame): Long = {
-    val id = log.nextId
-    val basedOn = log.latestId.getOrElse(log.EmptyTable)
+  private def morDelete(keys: DataFrame, snap: Snapshot): Long = {
+    val id = snap.nextId
     val present = config.partitionCols.filter(keys.columns.contains)
     val keyed = keys.select((config.keyCols ++ present).distinct.map(col): _*).distinct()
     val placed =
@@ -3585,18 +3588,19 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         // column-pruned index scan (footer-range-pruned first):
         // key -> current partition tuple(s)
         withDerived(
-          { val snap = log.snapshot()
-            readOrEmpty(pruneByKeyRange(keyed, snap.files), snap) }
+          readOrEmpty(pruneByKeyRange(keyed, snap.files), snap)
             .select((config.keyCols ++ config.partitionCols).distinct.map(col): _*)
             .distinct()
             .join(keyed, config.keyCols, "left_semi"))
+    val precombineType = tableSchema(snap).fields
+      .find(_.name == config.precombineCol).map(_.dataType)
+      .getOrElse(org.apache.spark.sql.types.StringType)
     val tombstones = withMeta(placed, id)
-      .withColumn(config.precombineCol,
-        lit(null).cast(schemaOf(config.precombineCol)))
+      .withColumn(config.precombineCol, lit(null).cast(precombineType))
       .withColumn("_seq", monotonically_increasing_id())
       .withColumn("_deleted", lit(true))
-    val cid = writeCommit(tombstones, "delete_delta", Seq.empty, Some(id),
-      kind = "delta", basedOn = Some(basedOn),
+    val cid = writeCommit(tombstones, "delete_delta", snap, id, Seq.empty,
+      kind = "delta",
       // scoped when placement needed no table-wide index probe
       partitionScoped = present.size == config.partitionCols.size)
     maybeInlineCompact()
@@ -3610,10 +3614,9 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     */
   def compact(): Long = {
     require(config.isMor, "compact() applies to merge-on-read tables")
-    val basedOn = log.latestId.getOrElse(log.EmptyTable)
     val snap = log.snapshot()
     val live = snap.files
-    if (!live.exists(_.isDelta)) return log.latestId.getOrElse(-1L)
+    if (!live.exists(_.isDelta)) return snap.id.getOrElse(-1L)
     // Hudi compaction scope: only file groups that accumulated deltas are
     // rewritten; partitions that saw no writes since the last compaction
     // keep their base files live (at 100 TB compaction cost follows write
@@ -3624,7 +3627,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         live.filter(f => touched.contains(f.partition))
       } else live
     val merged = morMerge(readFiles(dirty, snap))
-    writeCommit(merged, "compact", dirty.map(_.path), basedOn = Some(basedOn),
+    writeCommit(merged, "compact", snap, snap.nextId, dirty.map(_.path),
       // reads exactly the dirty partitions; rows keep their provenance
       // stamps, so a rebase moves nothing
       partitionScoped = groupLocalMergeSafe, stampsId = false)
@@ -3645,8 +3648,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   def foldDvs(minRatio: Double = 0.1): Long = {
     require(!config.isMor, "foldDvs() applies to CoW tables (MoR folds DVs via compact)")
     require(minRatio > 0 && minRatio <= 1, s"minRatio in (0,1], got $minRatio")
-    val basedOn = log.latestId.getOrElse(log.EmptyTable)
     val snap = log.snapshot()
+    val basedOn = snap.id.getOrElse(log.EmptyTable)
     val dvs = snap.dvs
     if (dvs.isEmpty) return basedOn
     val dvByTarget = dvs.groupBy(_.target)
@@ -3655,8 +3658,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       f.rows > 0L && dvByTarget.getOrElse(f.path, 0L).toDouble / f.rows >= minRatio)
     if (victims.isEmpty) return basedOn
     // readFiles applies the victims' DVs; rows keep their stamps
-    writeCommit(readFiles(victims, snap), "dv_fold", victims.map(_.path),
-      basedOn = Some(basedOn), partitionScoped = true, stampsId = false)
+    writeCommit(readFiles(victims, snap), "dv_fold", snap, snap.nextId,
+      victims.map(_.path), partitionScoped = true, stampsId = false)
   }
 
   /** Rewrite live data into the configured cluster order (Hudi
@@ -3683,21 +3686,24 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       maxPartitionsPerCommit: Int = 0): Long = {
     require(config.clusterCols.nonEmpty,
       "recluster() needs clusterCols configured")
-    val basedOn = log.latestId.getOrElse(log.EmptyTable)
     val snap = log.snapshot()
-    val live = snap.files
-    if (live.isEmpty) return basedOn
-    val selected = pruneBy.flatMap(resolvePredicate(_, snap))
-      .fold(live)(c => pruneByColStats(live, c, snap))
-    // MoR dedup groups must never straddle the rewrite boundary: expand
-    // the scope to whole partitions, and to the whole table when groups
-    // can span partitions (same discipline as compact)
-    val scoped =
+    val basedOn = snap.id.getOrElse(log.EmptyTable)
+    // the files of `s` the rewrite covers, within `parts` when given
+    def scopeOf(s: Snapshot, parts: Option[Set[String]]): Seq[FileAdd] = {
+      val live = parts.fold(s.files)(ps => s.files.filter(f => ps.contains(f.partition)))
+      val selected = pruneBy.flatMap(resolvePredicate(_, s))
+        .fold(live)(c => pruneByColStats(live, c, s))
+      // MoR dedup groups must never straddle the rewrite boundary:
+      // expand the scope to whole partitions, and to the whole table
+      // when groups can span partitions (same discipline as compact)
       if (!config.isMor) selected
       else if (groupLocalMergeSafe) {
-        val parts = selected.map(_.partition).toSet
-        live.filter(f => parts.contains(f.partition))
+        val ps = selected.map(_.partition).toSet
+        live.filter(f => ps.contains(f.partition))
       } else live
+    }
+    if (snap.files.isEmpty) return basedOn
+    val scoped = scopeOf(snap, None)
     if (scoped.isEmpty) return basedOn
     // no-op guard (compact's !deltas return, adapted): when the scope
     // has no deltas and every selected file already came out of a
@@ -3718,25 +3724,37 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       if (allReclustered) return basedOn
     }
     val partScoped = !config.isMor || groupLocalMergeSafe
-    val batches =
-      if (maxPartitionsPerCommit <= 0 || !partScoped)
-        Seq(scoped)
-      else scoped.groupBy(_.partition).toSeq.sortBy(_._1)
-        .grouped(maxPartitionsPerCommit).map(_.flatMap(_._2)).toSeq
-    var last = basedOn
-    batches.foreach { vs =>
-      val mat =
-        if (vs.exists(_.isDelta)) morMerge(readFiles(vs, snap))
-        else readFiles(vs, snap)
-      // basedOn re-resolves per batch: one small OCC window per batch,
-      // partial progress survives a crash or a lost race mid-backlog
-      last = writeCommit(mat, "recluster", vs.map(_.path),
-        basedOn = Some(log.latestId.getOrElse(log.EmptyTable)),
-        partitionScoped = partScoped,
-        stampsId = false)
-    }
-    last
+    val batched = maxPartitionsPerCommit > 0 && partScoped
+    inBatches(snap, scoped.map(_.partition),
+        if (batched) maxPartitionsPerCommit else 0) { (b, parts) =>
+      val vs = if (parts.isEmpty) scoped else scopeOf(b, Some(parts))
+      if (vs.isEmpty) None
+      else {
+        val mat =
+          if (vs.exists(_.isDelta)) morMerge(readFiles(vs, b))
+          else readFiles(vs, b)
+        Some(writeCommit(mat, "recluster", b, b.nextId, vs.map(_.path),
+          partitionScoped = partScoped, stampsId = false))
+      }
+    }.getOrElse(basedOn)
   }
+
+  /** Run a maintenance rewrite over the partitions `plan` named, at most
+    * `perCommit` of them per commit (0 = all in one). The first batch
+    * rewrites from `planned`, the snapshot the plan came from (`parts`
+    * empty: the whole plan); every later batch resolves its OWN snapshot
+    * and re-selects its files from it, so each commit is based on the
+    * version it read even when writers land between batches — one small
+    * OCC window per batch, partial progress survives a crash or a lost
+    * race mid-backlog. Returns the last commit id, None if none. */
+  private def inBatches(planned: Snapshot, plan: Seq[String], perCommit: Int)
+      (rewrite: (Snapshot, Set[String]) => Option[Long]): Option[Long] =
+    if (perCommit <= 0) rewrite(planned, Set.empty)
+    else plan.distinct.sorted.grouped(perCommit).zipWithIndex
+      .foldLeft(Option.empty[Long]) { case (last, (parts, i)) =>
+        val b = if (i == 0) planned else log.snapshot()
+        rewrite(b, parts.toSet).orElse(last)
+      }
 
   /** Bin small files (the Delta OPTIMIZE bin-packing / Hudi small-file
     * role): frequent small writes accumulate files whose open/footer
@@ -3772,38 +3790,37 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         * injecting a failure here IS the crash window between batches */
       onBatchCommitted: Long => Unit = _ => ()): Long = {
     val snap = log.snapshot()
-    val live = snap.files
     def sizeOf(f: FileAdd): Long =
       if (f.bytes > 0) f.bytes
       else new Path(f.path).getFileSystem(hconf).getFileStatus(new Path(f.path)).getLen
+    // the small files of `s` to bin, in partitions holding more than one.
     // MoR bins its change-log deltas (base files belong to compact());
     // CoW has only base files to bin
-    val byPart = live
+    def smallOf(s: Snapshot): Seq[FileAdd] = s.files
       .filter(f => (if (config.isMor) f.isDelta else !f.isDelta && !f.isDv) &&
         sizeOf(f) < maxBytes)
-      .groupBy(_.partition).filter(_._2.size > 1)
-      .toSeq.sortBy(_._1)
-    if (byPart.isEmpty) return log.latestId.getOrElse(-1L)
-    val batches =
-      if (maxPartitionsPerCommit <= 0) Seq(byPart)
-      else byPart.grouped(maxPartitionsPerCommit).toSeq
-    var last = log.latestId.getOrElse(log.EmptyTable)
-    batches.foreach { g =>
-      val victims = g.flatMap(_._2)
-      // coalesce to the file count the VOLUME warrants — the scan would
-      // otherwise keep ≥ default-parallelism splits and re-emit many
-      // small files; coalesce merges read partitions without a shuffle
-      val nOut = math.max(1L,
-        (victims.map(sizeOf).sum + maxBytes - 1) / maxBytes).toInt
-      // basedOn re-resolves per batch: each OCC window spans ONE batch
-      last = writeCommit(readFiles(victims, snap).coalesce(nOut), "delta_compact",
-        victims.map(_.path), kind = if (config.isMor) "delta" else "base",
-        basedOn = Some(log.latestId.getOrElse(log.EmptyTable)),
-        // verbatim per-partition rewrite of its victims only
-        partitionScoped = true, stampsId = false)
-      onBatchCommitted(last)
-    }
-    last
+      .groupBy(_.partition).filter(_._2.size > 1).toSeq.sortBy(_._1).flatMap(_._2)
+    val planned = smallOf(snap)
+    if (planned.isEmpty) return snap.id.getOrElse(-1L)
+    inBatches(snap, planned.map(_.partition), maxPartitionsPerCommit) { (b, parts) =>
+      val victims =
+        if (parts.isEmpty) planned else smallOf(b).filter(f => parts.contains(f.partition))
+      if (victims.isEmpty) None
+      else {
+        // coalesce to the file count the VOLUME warrants — the scan would
+        // otherwise keep ≥ default-parallelism splits and re-emit many
+        // small files; coalesce merges read partitions without a shuffle
+        val nOut = math.max(1L,
+          (victims.map(sizeOf).sum + maxBytes - 1) / maxBytes).toInt
+        val id = writeCommit(readFiles(victims, b).coalesce(nOut), "delta_compact",
+          b, b.nextId, victims.map(_.path),
+          kind = if (config.isMor) "delta" else "base",
+          // verbatim per-partition rewrite of its victims only
+          partitionScoped = true, stampsId = false)
+        onBatchCommitted(id)
+        Some(id)
+      }
+    }.getOrElse(snap.id.getOrElse(-1L))
   }
 
   /** Inline compaction trigger (reference's max.delta.commits semantics):
@@ -3820,18 +3837,12 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       if (sinceBase >= config.compactEvery) compact()
     }
 
-  private def schemaOf(colName: String): DataType =
-    log.schemaJsonAsOf(None)
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-      .flatMap(s => s.fields.find(_.name == colName).map(_.dataType))
-      .getOrElse(org.apache.spark.sql.types.StringType)
-
   /** partition-scoped index: key unique per (partition tuple, key);
     * global index: key unique table-wide (SURVEY.md §1.1 record key).
     * The derived bucket is a pure function of the key, so it never joins
     * the dedup identity.
     */
-  private def dedupCols: Seq[String] =
+  private[graft] def dedupCols: Seq[String] =
     (if (config.globalIndex) Seq.empty else config.partitionCols) ++ config.keyCols
 
   // schema JSONs repeat across commits and reads — memoize the parse
@@ -4038,7 +4049,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   private[graft] def mergedPrePostPivotMulti(
       files: Seq[FileAdd], keys: Seq[(Long, DataFrame)],
       payload: DataFrame => org.apache.spark.sql.Column,
-      /** the snapshot whose schema the rows are read and adapted with */
+      /** the snapshot whose file → schema map reads `files` and whose
+        * table schema the rows adapt to */
       snap: Snapshot): DataFrame = {
     require(keys.nonEmpty, "fused pivot needs at least one commit")
     val cids = keys.map(_._1)
@@ -5019,8 +5031,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * located with a column-pruned key+partition scan (parquet reads two
     * columns), so a key migrating partitions drops its old row.
     */
-  private def snapshotForUpsert(incoming: DataFrame): (Seq[FileAdd], DataFrame) = {
-    val snap = log.snapshot()
+  private def snapshotForUpsert(incoming: DataFrame,
+      snap: Snapshot): (Seq[FileAdd], DataFrame) = {
     val live = snap.files
     if (effParts.isEmpty) (live, readOrEmpty(live, snap))
     else {
@@ -5073,10 +5085,13 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   /** Write `df` under a fresh commit directory, then append the commit
     * JSON (files-then-log ordering = crash safety; see CommitLog).
     */
-  /** `basedOn`: the latest commit id observed when the caller resolved
-    * the snapshot this write merged from — captured at writeCommit entry
-    * when the caller did no earlier metadata read. CommitLog.append
-    * validates the head is unchanged at publish (optimistic concurrency).
+  /** `base`: the ONE [[Snapshot]] this write attempt read — the files it
+    * merged from, the schema it evolves from and the DVs it retires all
+    * come from it, and CommitLog.append validates at publish that the
+    * head is still `base.id` (optimistic concurrency) — the OCC base is
+    * the read version's own id, never a separately resolved head. `id`:
+    * the id the rows were stamped with, `base.nextId` (the rebase passes
+    * its new head's).
     *
     * `partitionScoped`: true when the op's READ scope was confined to the
     * partitions its adds/removes touch (a partition-local upsert, a
@@ -5091,9 +5106,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * original provenance stamps.
     */
   private def writeCommit(
-      df0: DataFrame, op: String, removesIn: Seq[String],
-      fixedId: Option[Long] = None, kind: String = "base",
-      basedOn: Option[Long] = None,
+      df0: DataFrame, op: String, base: Snapshot, id: Long,
+      removesIn: Seq[String], kind: String = "base",
       commitMeta: Map[String, String] = Map.empty,
       partitionScoped: Boolean = false,
       /** true for an append that read nothing from the snapshot (a MoR
@@ -5117,20 +5131,18 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       knownStaged: Set[Long] = Set.empty): Long = {
     require(extraAdds.isEmpty || !partitionScoped,
       "extraAdds cannot ride a rebaseable (partitionScoped) commit")
-    val expectedHead = basedOn.getOrElse(log.latestId.getOrElse(log.EmptyTable))
-    val id = fixedId.getOrElse(log.nextId)
+    val expectedHead = base.id.getOrElse(log.EmptyTable)
     // central deletion-vector rule: any commit that removes a data file
     // retires that file's live DVs with it — the rewrite read the rows
     // THROUGH the DVs, so the rewritten files already exclude the
     // deleted positions (this is how compaction folds DVs in), and a
     // DV must never outlive its target into the cleaner's replay
-    val head = log.snapshot()
     val removes = {
       val r0 = removesIn
       if (r0.isEmpty || config.isMor) r0
       else {
         val rs = r0.toSet
-        r0 ++ head.dvs.filter(d => rs.contains(d.target)).map(_.path)
+        (r0 ++ base.dvs.filter(d => rs.contains(d.target)).map(_.path)).distinct
       }
     }
     // schema evolution (SchemaEvo): the commit records the evolved TABLE
@@ -5139,14 +5151,12 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // fail HERE, before any file is written; a change that would corrupt
     // retained live files (narrowing a column older files hold wide)
     // fails against the live-file schemas.
-    val prevSchema: Option[StructType] =
-      if (expectedHead < 0) None
-      else log.schemaJsonAsOf(Some(expectedHead)).map(parseSchema)
+    val prevSchema = base.schemaJson.map(parseSchema)
     val evolved = SchemaEvo.evolve(prevSchema, df0.schema, id, reset = schemaReset)
-    if (head.id.isDefined) {
+    if (base.id.isDefined) {
       val removeSet = removes.toSet
-      val retained = head.files.filterNot(f => removeSet.contains(f.path))
-        .flatMap(f => head.pathSchemas.get(f.path)).distinct.map(parseSchema)
+      val retained = base.files.filterNot(f => removeSet.contains(f.path))
+        .flatMap(f => base.pathSchemas.get(f.path)).distinct.map(parseSchema)
       SchemaEvo.validateAgainstLiveFiles(evolved, retained)
     }
     // conform the batch to the evolved types (a narrow batch column
@@ -5158,7 +5168,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         .filter(f => types.get(f.name).exists(_ != f.dataType))
         .foldLeft(df0)((acc, f) => acc.withColumn(f.name, col(f.name).cast(types(f.name))))
     }
-    // deterministic-interleaving seam: fires between this writer's head
+    // deterministic-interleaving seam: fires between this writer's base
     // resolution and its publish — the exact window the optimistic check
     // guards. Concurrency specs hang a competing writer's commit here;
     // production leaves it a no-op.
@@ -5308,7 +5318,10 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       schemaJson: String): Option[Long] = {
     val fs = dir.getFileSystem(hconf)
     if (!partitionScoped || attempt >= MaxRebase) return None
-    val newHead = log.latestId.getOrElse(log.EmptyTable)
+    // the new head, resolved ONCE: its id is the new OCC base, its
+    // nextId the new commit id, its schema the one the rebase adapts to
+    val newBase = log.snapshot()
+    val newHead = newBase.id.getOrElse(log.EmptyTable)
     // staged (undecided) transaction commits above our snapshot are
     // interveners too: under either eventual decision, folding both
     // outputs is only sound when partition-disjoint — the same rule as
@@ -5359,7 +5372,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // adapt below fails loud on that
     if (!readFree && !disjoint) return None
     val provenStaged = stagedInterveners.map(_.id).toSet
-    val newId = log.nextId
+    val newId = newBase.nextId
     // a write with no files (e.g. a whole-partition delete) rebases as a
     // pure metadata append — nothing to re-read or restamp
     if (adds.isEmpty) {
@@ -5370,8 +5383,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         // a phantom fresh-cid field (the old name is the same IDENTITY,
         // not a new column), while keeping failed-only cids would
         // re-expose a concurrently dropped column's old files
-        val rebasedSchema = log.schemaJsonAsOf(Some(newHead))
-          .getOrElse(schemaJson)
+        val rebasedSchema = newBase.schemaJson.getOrElse(schemaJson)
         log.append(Commit(newId, op, System.currentTimeMillis(), rebasedSchema,
           Seq.empty, removes, commitMeta), basedOnLatest = newHead,
           knownStaged = provenStaged)
@@ -5397,8 +5409,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       .parquet(dir.toString)
     val reread = {
       val failedSchema = parseSchema(schemaJson)
-      val headSchema = log.schemaJsonAsOf(Some(newHead))
-        .map(parseSchema).getOrElse(failedSchema)
+      val headSchema = newBase.schemaJson.map(parseSchema).getOrElse(failedSchema)
       // target = head schema + this write's OWN new columns (a plain
       // adapt-to-head would silently drop the data of any column this
       // write introduced — SchemaEvo.rebaseTarget)
@@ -5421,8 +5432,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         when(col("_commit_id") === lit(failedId), lit(newId))
           .otherwise(col("_commit_id")))
     try {
-      val cid = writeCommit(restamped, op, removes, Some(newId), kind,
-        basedOn = Some(newHead), commitMeta = commitMeta,
+      val cid = writeCommit(restamped, op, newBase, newId, removes, kind,
+        commitMeta = commitMeta,
         partitionScoped = true, readFree = readFree, stampsId = stampsId,
         rebaseAttempt = attempt + 1, knownStaged = provenStaged)
       // the failed attempt's directory is fully superseded only now (the

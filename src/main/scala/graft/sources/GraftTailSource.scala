@@ -317,7 +317,8 @@ final class GraftTailSource(
     *     is exact — no diff shuffle at all, just a codegen'd metadata-
     *     column predicate over O(commit's files).
     *   - tombstones: for delete-capable ops only, removed-file rows
-    *     whose `_record_key` is absent from the added files — a
+    *     whose dedup identity ([[graft.lake.LakeTable.dedupCols]]) is
+    *     absent from the added files — a
     *     left-anti join bounded by the commit's touched files, emitted
     *     with `_deleted` = true (the same contract as the MoR tail's
     *     delete deltas). Upserts/bulk loads never remove keys and skip
@@ -363,6 +364,13 @@ final class GraftTailSource(
         "rewritten files it must diff were physically deleted — " +
         "restart the stream from a fresh snapshot")
     ensureIndexed(to)
+    // per-commit row identity: the table's dedup columns, matched
+    // null-safe (a null partition value is one partition, not none)
+    val idCols = table.dedupCols
+    def quoted(n: String) = col("`" + n + "`")
+    def keyed(df: DataFrame): DataFrame =
+      idCols.foldLeft(df)((acc, n) => acc.withColumnRenamed(n, s"_k_$n"))
+    val sameKey = idCols.map(n => quoted(s"_k_$n") <=> quoted(n)).reduce(_ && _)
     val frames = table.log.commitsInRange(from, to)
       .filterNot(c => PhysicalOps.contains(c.op))
       .flatMap { c =>
@@ -411,15 +419,18 @@ final class GraftTailSource(
           //   no old row + stamped add  → insert
           //   old row + NO adds row     → delete (delete-capable ops only)
           //   old row + unstamped add   → nothing (untouched rewrite)
-          // The per-key aggregate is sound on CoW: a commit's rewritten
-          // files hold at most ONE live row per key (the precombine
-          // merge's invariant), so max_by(payload, stamped) is "the"
-          // stamped row, and count(*) > 0 marks the key as present in
-          // the adds (the tombstone anti-join's old contract, which
-          // deliberately counted UNSTAMPED rewrites as presence). The
-          // aggregate counts stamped rows and fails the batch when a key
-          // has two (a partition-scoped table stamping one key in two
-          // partitions), rather than let one win arbitrarily. max_by
+          // A "key" is the table's dedup identity (LakeTable.dedupCols):
+          // (partition columns, key) on a partition-scoped table, where
+          // one key value may live in several partitions, and the key
+          // alone under a global index; partition values compare
+          // null-safe. The per-key aggregate is sound on CoW: a commit's
+          // rewritten files hold at most ONE live row per key (the
+          // precombine merge's invariant), so max_by(payload, stamped)
+          // is "the" stamped row, and count(*) > 0 marks the key as
+          // present in the adds (the tombstone anti-join's old contract,
+          // which deliberately counted UNSTAMPED rewrites as presence).
+          // The aggregate counts stamped rows and fails the batch when a
+          // key has two, rather than let one win arbitrarily. max_by
           // orders only the marker: Spark cannot order a payload struct
           // holding a map column (INVALID_ORDERING_TYPE).
           val payloadFields = schema.fields
@@ -442,15 +453,16 @@ final class GraftTailSource(
             max_by, raise_error, when}
           val addRows = readAdds()
           val stamped = when(col("_commit_id") === c.id, lit(1))
-          val aggAdds = addRows.groupBy(col("_record_key")).agg(
-            when(count(stamped) > 1, raise_error(concat(
+          val aggAdds = addRows.groupBy(idCols.map(quoted) :+ col("_record_key"): _*)
+            .agg(when(count(stamped) > 1, raise_error(concat(
                 lit(s"commit ${c.id} rewrote more than one row stamped " +
                   "with it for key "), col("_record_key"))))
               .otherwise(max_by(packed(addRows), stamped)).as("_post"),
             count(lit(1)).as("_n_any"))
           val olds = readOld()
-          val byKey = olds.select(col("_record_key"), packed(olds).as("_pre"))
-            .join(aggAdds, Seq("_record_key"), "full_outer")
+          val byKey = keyed(olds.select(idCols.map(quoted) :+
+              packed(olds).as("_pre"): _*))
+            .join(aggAdds, sameKey, "full_outer")
           val deleteCapable = DeleteCapableOps.contains(c.op)
           Seq(byKey.select(explode(
               when(col("_pre").isNull && col("_post").isNotNull,
@@ -484,9 +496,9 @@ final class GraftTailSource(
             // owns adds+removes); untyped commits take the anti-join
             val newKeys =
               if (adds.isEmpty) None
-              else Some(readAdds().select("_record_key").distinct())
+              else Some(readAdds().select(idCols.map(quoted): _*).distinct())
             val t = newKeys.fold(oldRows)(k =>
-                oldRows.join(k, Seq("_record_key"), "left_anti"))
+                oldRows.join(keyed(k), sameKey, "left_anti"))
               .select(proj: _*)
               .withColumn("_deleted", lit(true))
             Some(if (changeTypes)
@@ -637,18 +649,20 @@ final class GraftTailSource(
     // same file groups once per commit. Any removal (compaction,
     // partition drop, clean sweep) or DV commit in the range breaks the
     // run; runs cap at 16 commits to bound plan width.
-    // rows of every run are read and adapted with the table's current
-    // schema (the stream schema's names), resolved once per batch
-    lazy val head = table.log.snapshot()
+    // each run reads its files with the file → schema map of its OWN
+    // last commit's snapshot (a file removed before the head has no
+    // entry in the head's), adapted to the table's current schema (the
+    // stream schema's names), resolved once per batch
+    lazy val headSchema = table.log.snapshot().schemaJson
     val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val run = scala.collection.mutable.ArrayBuffer
       .empty[(graft.lake.Commit, Seq[String])]
     def flushRun(): Unit = {
       if (run.nonEmpty) {
         val keysByCommit = run.toSeq.map { case (c, ps) => c.id -> keysOf(c, ps) }
-        val liveAtLast = table.log.liveFiles(Some(run.last._1.id))
-        frames += typedChanges(
-          table.mergedPrePostPivotMulti(liveAtLast, keysByCommit, packed, head))
+        val atLast = table.log.snapshot(Some(run.last._1.id))
+        frames += typedChanges(table.mergedPrePostPivotMulti(atLast.files,
+          keysByCommit, packed, atLast.copy(schemaJson = headSchema)))
         run.clear()
       }
     }

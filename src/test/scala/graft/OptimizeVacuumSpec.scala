@@ -296,6 +296,60 @@ class OptimizeVacuumSpec extends AnyFunSuite {
       .head.getString(0) == "v3-3")
   }
 
+  /** CoW table of 400 keys over p0/p1 with more than one base file per
+    * partition (AQE off for the load, so the range-partitioned write
+    * keeps its 4 output tasks); pk 1 lives in p1 */
+  private def twoFilePartitions(clusterCols: Seq[String]) = {
+    import spark.implicits._
+    val cfg = graft.lake.LakeTableConfig(
+      Files.createTempDirectory("optrace").resolve("t").toString,
+      keyCols = Seq("pk"), precombineCol = "ts", partitionCols = Seq("part"),
+      clusterCols = clusterCols)
+    val t = graft.lake.LakeTable(spark, cfg)
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try t.bulkInsert((1 to 400).map(i => (i.toLong, s"p${i % 2}", s"v$i-0", 0))
+      .toDF("pk", "part", "v", "ts"))
+    finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert(t.log.liveFiles().groupBy(_.partition).values.forall(_.size > 1),
+      "fixture wants more than one file per partition")
+    (t, graft.lake.LakeTable(spark, cfg))
+  }
+
+  private def racedUpsert(racer: graft.lake.LakeTable): Unit = {
+    import spark.implicits._
+    racer.upsert(Seq((1L, "p1", "NEW", 1)).toDF("pk", "part", "v", "ts"))
+  }
+
+  private def assertOneRowPerKey(t: graft.lake.LakeTable): Unit = {
+    import spark.implicits._
+    val rows = t.read()
+    assert(rows.count() == 400 && rows.select("pk").distinct().count() == 400,
+      s"${rows.count()} rows for ${rows.select("pk").distinct().count()} keys")
+    assert(rows.filter($"pk" === 1L).select("v").as[String].collect().toSeq ==
+      Seq("NEW"))
+  }
+
+  test("bounded compactSmall: each batch rewrites the version it is based on") {
+    val (t, racer) = twoFilePartitions(Seq.empty)
+    var raced = false
+    // the racer rewrites batch 2's partition between the two batches
+    t.compactSmall(maxPartitionsPerCommit = 1, onBatchCommitted = _ =>
+      if (!raced) { raced = true; racedUpsert(racer) })
+    assert(raced)
+    assertOneRowPerKey(t)
+  }
+
+  test("bounded recluster: each batch rewrites the version it is based on") {
+    val (t, racer) = twoFilePartitions(Seq("v"))
+    var raced = false
+    // the racer rewrites batch 2's partition inside batch 1's OCC window
+    t.onHeadResolved = () => if (!raced) { raced = true; racedUpsert(racer) }
+    t.recluster(maxPartitionsPerCommit = 1)
+    assert(raced)
+    assertOneRowPerKey(t)
+  }
+
   test("CREATE TABLE ... SHALLOW CLONE pins a snapshot; tables stay independent") {
     wh
     spark.sql("""CREATE TABLE ov.db.src (pk BIGINT, ts INT, v STRING)

@@ -27,7 +27,8 @@ object LogListingFs {
 
 /** One operation reads one resolved version ([[graft.lake.Snapshot]]):
   *   - the commit log is listed a bounded number of times per resolved
-  *     version, whatever the read surface;
+  *     version, whatever the read surface, and a write resolves the
+  *     version it is based on once;
   *   - metadata answers (aggregate pushdown) consult the PINNED version's
   *     deletion vectors, never the head's;
   *   - every snapshot read surface returns the same columns whether or
@@ -132,6 +133,24 @@ class SnapshotSpec extends AnyFunSuite {
         s"$storage changesBetween listed _log ${n("changesBetween")} times for two versions")
       Seq("sql lookup", "sql max(pk)").foreach { op =>
         assert(n(op) <= 6, s"$storage $op listed _log ${n(op)} times")
+      }
+    }
+  }
+
+  test("each write resolves its base once: bounded _log listings") {
+    import spark.implicits._
+    Seq("mor", "cow").foreach { storage =>
+      val t = apiTable(storage)
+      val ops = Seq(
+        "upsert" -> (() => t.upsert(rows((1 to 40).map(_ * 3), 9))),
+        "delete" -> (() => t.delete(Seq((8L, "p8"), (15L, "p5")).toDF("pk", "part"))),
+        "deleteWhere" -> (() => t.deleteWhere(col("pk") === 22L)),
+        "insertOverwrite" -> (() => t.insertOverwrite(rows(Seq(3, 13), 10)))) ++
+        (if (storage == "mor") Seq("compact" -> (() => t.compact())) else Seq.empty)
+      val n = withLogCounting(ops.map { case (op, run) => op -> listings(run()) })
+      info(s"$storage: ${n.map { case (op, c) => s"$op=$c" }.mkString(", ")}")
+      n.foreach { case (op, c) =>
+        assert(c <= 6, s"$storage $op listed _log $c times for one write")
       }
     }
   }

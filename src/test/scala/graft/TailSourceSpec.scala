@@ -678,19 +678,75 @@ class TailSourceSpec extends AnyFunSuite {
       ("update_postimage", 1L, Map("a" -> 5))))
   }
 
-  test("CoW typed tail fails loud when a commit stamps one key twice") {
-    // the fused classification keeps ONE stamped row per record key; a
-    // partition-scoped table can stamp the same key in two partitions
-    // in one commit, and that must fail the batch, not pick one row
+  private def optDf(rows: (Long, Option[Int], String, Int)*): DataFrame = {
+    import spark.implicits._
+    rows.toDF("pk", "vendorid", "payload", "ts")
+  }
+
+  private def tailRows(t: LakeTable, from: Long, to: Long, typed: Boolean) = {
+    val src = new GraftTailSource(spark.sqlContext, t,
+      if (typed) t.changeFeedSchema else t.tailSchema, changeTypes = typed)
+    src.batchFrame(from, to)
+      .select((if (typed) "_change_type" else "_deleted"), "pk", "vendorid", "payload")
+      .collect().map(r => (r.get(0).toString, r.getLong(1),
+        Option(r.get(2)).map(_.asInstanceOf[Int]), r.getString(3))).toSet
+  }
+
+  test("CoW typed tail keys a partition-scoped table by (partition, key)") {
+    // one key value stamped in two partitions (one of them the null
+    // partition) is two rows of the table, so two inserts; an update in
+    // the null partition pairs its pre-image null-safely
     val t = LakeTable(spark, LakeTableConfig(freshRoot(), keyCols = Seq("pk"),
       precombineCol = "ts", partitionCols = Seq("vendorid")))
-    t.bulkInsert(df((1L, 1, "a", 0), (2L, 2, "b", 0)))
-    t.upsert(df((5L, 1, "x", 1), (5L, 2, "y", 1)))
+    t.bulkInsert(optDf((1L, Some(1), "a", 0), (2L, None, "b", 0)))
+    t.upsert(optDf((5L, Some(1), "x", 1), (5L, None, "y", 1), (2L, None, "b2", 1)))
     assert(t.read().filter(col("pk") === 5L).count() == 2)
-    val src = new GraftTailSource(spark.sqlContext, t, t.changeFeedSchema,
-      changeTypes = true)
-    val e = intercept[Exception](src.batchFrame(0L, 1L).collect())
-    assert(e.getMessage.contains("more than one row stamped"), e.getMessage)
+    assert(tailRows(t, 0L, 1L, typed = true) == Set(
+      ("insert", 5L, Some(1), "x"), ("insert", 5L, None, "y"),
+      ("update_preimage", 2L, None, "b"), ("update_postimage", 2L, None, "b2")))
+  }
+
+  test("CoW tail: a key leaving one partition for another pairs no foreign pre-image") {
+    // one overwrite rewrites partitions 1 and 2: key 5 drops out of
+    // partition 1 and is written fresh into partition 2 — on a
+    // partition-scoped table that is a delete plus an insert, never an
+    // update whose pre-image comes from the other partition
+    val t = LakeTable(spark, LakeTableConfig(freshRoot(), keyCols = Seq("pk"),
+      precombineCol = "ts", partitionCols = Seq("vendorid")))
+    t.bulkInsert(df((1L, 1, "a", 0), (5L, 1, "x", 0), (7L, 2, "z", 0)))
+    t.insertOverwrite(df((1L, 1, "a2", 1), (5L, 2, "y", 1)))
+    assert(tailRows(t, 0L, 1L, typed = true) == Set(
+      ("update_preimage", 1L, Some(1), "a"), ("update_postimage", 1L, Some(1), "a2"),
+      ("delete", 5L, Some(1), "x"), ("insert", 5L, Some(2), "y"),
+      ("delete", 7L, Some(2), "z")))
+    assert(tailRows(t, 0L, 1L, typed = false) == Set(
+      ("false", 1L, Some(1), "a2"), ("false", 5L, Some(2), "y"),
+      ("true", 5L, Some(1), "x"), ("true", 7L, Some(2), "z")))
+  }
+
+  test("MoR typed tail reads a run's files with the run's own file schemas") {
+    // with checkpoints the head snapshot maps only its LIVE files to
+    // schemas: the run at commit 1 reads files the compaction removed,
+    // written before the rename, which must still alias v -> w
+    import spark.implicits._
+    val t = LakeTable(spark, LakeTableConfig(freshRoot(), keyCols = Seq("pk"),
+      precombineCol = "ts", partitionCols = Seq("vendorid"),
+      storageType = "mor", checkpointEvery = 2))
+    def row(pk: Long, ts: Int, name: String) =
+      Seq((pk, 1, s"v$pk-$ts", ts)).toDF("pk", "vendorid", name, "ts")
+    t.bulkInsert(Seq(1L, 2L, 3L).map(pk => (pk, 1, s"v$pk-0", 0))
+      .toDF("pk", "vendorid", "v", "ts"))                    // c0
+    t.upsert(row(3L, 1, "v"))                                // c1
+    t.renameColumn("v", "w")                                 // c2
+    t.compact()                                              // c3
+    t.upsert(row(1L, 1, "w"))                                // c4
+    t.upsert(row(2L, 1, "w"))                                // c5
+    val got = new GraftTailSource(spark.sqlContext, t, t.changeFeedSchema,
+      changeTypes = true).batchFrame(0L, 1L)
+      .select("_change_type", "pk", "w").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
+    assert(got == Set(("update_preimage", 3L, "v3-0"),
+      ("update_postimage", 3L, "v3-1")), got)
   }
 
   test("MoR tail derives tombstones from a metadata-only partition drop") {
