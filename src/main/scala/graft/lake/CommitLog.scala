@@ -194,6 +194,12 @@ final case class Snapshot(
   *             lookup never opens a segment that cannot contain the id)
   * @param to   highest commit id in the segment
   */
+/** one listing of a commit log's `_log` directory, parsed into its id
+  * spaces: visible commits, rolled-back ids, staged transaction commits
+  * and checkpoints */
+private final case class LogScan(visible: Seq[Long], rolled: Seq[Long],
+    staged: Seq[Long], ckpts: Seq[Long])
+
 final case class ArchiveSegment(from: Long, to: Long, commits: Seq[Commit])
 
 /** The OCC arbitration primitive: publish `tmp` at `dst` ATOMICALLY,
@@ -300,16 +306,17 @@ final class CommitLog(root: String, hadoopConf: Configuration,
 
   def exists: Boolean = fs.exists(logDir) && listIds.nonEmpty
 
-  /** ONE directory listing parsed into (visible commit ids, rolled ids,
-    * staged txn ids), with the staged-materialization sweep applied
-    * first when a FOREIGN staged name shows up — every id-space consumer
-    * (listIds/nextId/tailableHead) shares this so no path pays extra
-    * metadata round-trips for the transaction machinery. A txn handle's
+  /** ONE directory listing parsed into visible commit ids, rolled ids,
+    * staged txn ids and checkpoint ids, with the staged-materialization
+    * sweep applied first when a FOREIGN staged name shows up — every
+    * id-space consumer (listIds/nextId/tailableHead/snapshot) shares
+    * this so no path pays extra metadata round-trips for the
+    * transaction machinery or the checkpoints. A txn handle's
     * OWN undecided staging is exempt from the sweep trigger — its
     * timeline includes those ids anyway, and sweeping them would pay one
     * coordinator round-trip per resolution. */
-  private def scanLog(): (Seq[Long], Seq[Long], Seq[Long]) = {
-    if (!fs.exists(logDir)) return (Seq.empty, Seq.empty, Seq.empty)
+  private def scanLog(): LogScan = {
+    if (!fs.exists(logDir)) return LogScan(Seq.empty, Seq.empty, Seq.empty, Seq.empty)
     var names = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
     // staged transaction commits are RARE: the name scan below is free
     // on the listing we already paid for, and the sweep (coordinator
@@ -329,10 +336,10 @@ final class CommitLog(root: String, hadoopConf: Configuration,
       .map(_.stripPrefix("rolled-").toLong)
     val staged = names.filter(_.matches("\\d{8,}\\.json\\.txn"))
       .map(_.stripSuffix(".json.txn").toLong)
-    (visible, rolled, staged)
+    LogScan(visible, rolled, staged, ckptIdsIn(names))
   }
 
-  private def listIds: Seq[Long] = timeline(scanLog()._1)
+  private def listIds: Seq[Long] = timeline(scanLog().visible)
 
   /** the ids a resolution sees among `visible`: read-your-writes INSIDE
     * a transaction — the txn's own handle (and only it) resolves its own
@@ -380,7 +387,7 @@ final class CommitLog(root: String, hadoopConf: Configuration,
     new Path(logDir, f"$id%08d.json.txn")
 
   /** ids of staged (undecided) transaction commits */
-  private[graft] def stagedIds: Seq[Long] = scanLog()._3.sorted
+  private[graft] def stagedIds: Seq[Long] = scanLog().staged.sorted
 
   /** the staged commits themselves (OCC rebase needs their partitions).
     * NOT memoized in `parsed`: a staged id only becomes immutable once
@@ -401,7 +408,7 @@ final class CommitLog(root: String, hadoopConf: Configuration,
     * the head, capped below any undecided staged commit so a commit can
     * never materialize BEHIND an already-served offset */
   def tailableHead: Option[Long] = {
-    val (visible, _, staged) = scanLog() // ONE listing for head + floor
+    val LogScan(visible, _, staged, _) = scanLog() // ONE listing for head + floor
     val l = visible.maxOption
     staged.minOption match {
       case Some(f) => l.map(math.min(_, f - 1)).filter(_ >= 0)
@@ -519,12 +526,12 @@ final class CommitLog(root: String, hadoopConf: Configuration,
   /** ids retracted by rollback — never reused, so commit JSONs stay
     * immutable PER ID and the forever-memoization (here and in any other
     * CommitLog instance on this root) stays sound */
-  private def rolledIds: Seq[Long] = scanLog()._2
+  private def rolledIds: Seq[Long] = scanLog().rolled
 
   /** the next free id — for writers that base nothing on the table's
     * state (timeline tooling); table writes take [[Snapshot.nextId]] */
   def nextId: Long = {
-    val (visible, rolled, staged) = scanLog()
+    val LogScan(visible, rolled, staged, _) = scanLog()
     nextIdOf(visible, rolled, staged)
   }
 
@@ -614,7 +621,7 @@ final class CommitLog(root: String, hadoopConf: Configuration,
     */
   def append(c: Commit, basedOnLatest: Long = Unchecked,
       knownStaged: Set[Long] = Set.empty): Unit = {
-    val (visible, rolled, stagedNow) = scanLog()
+    val LogScan(visible, rolled, stagedNow, _) = scanLog()
     // a retired (rolled-back) id must NEVER be reused, even though its
     // JSON path is free again: other CommitLog instances memoize commit
     // JSONs forever per id, and a rollback interleaved between two
@@ -703,10 +710,10 @@ final class CommitLog(root: String, hadoopConf: Configuration,
   }
 
   /** Resolve ONE version: the state as of `asOf` (inclusive), the head
-    * when None — one listing of commit ids, one checkpoint lookup, one
-    * fold of the newest [[Checkpoint]] at-or-before the target plus the
-    * commit tail. Checkpointed and replayed resolution produce the
-    * IDENTICAL [[Snapshot]], order included.
+    * when None — ONE listing of `_log` (commit and checkpoint ids
+    * alike), one fold of the newest [[Checkpoint]] at-or-before the
+    * target plus the commit tail. Checkpointed and replayed resolution
+    * produce the IDENTICAL [[Snapshot]], order included.
     *
     * Contract: an operation resolves each version it reads exactly once,
     * here, and passes the value down; helpers below the entry point
@@ -715,7 +722,7 @@ final class CommitLog(root: String, hadoopConf: Configuration,
     * methods below are projections for callers that need one fact of
     * one resolution. */
   def snapshot(asOf: Option[Long] = None): Snapshot = {
-    val (visible, rolled, staged) = scanLog()
+    val LogScan(visible, rolled, staged, ckpts) = scanLog()
     val ids = timeline(visible)
     val nextId = nextIdOf(visible, rolled, staged)
     asOf.foreach { id =>
@@ -727,7 +734,7 @@ final class CommitLog(root: String, hadoopConf: Configuration,
     }
     val target = asOf.orElse(ids.lastOption).getOrElse(
       return Snapshot(None, Seq.empty, Seq.empty, None, Map.empty, nextId))
-    val ck = latestCheckpointAt(target)
+    val ck = checkpointAt(target, ckpts)
     val from = ck.map(_.id).getOrElse(-1L)
     val live = mutable.LinkedHashMap.empty[String, FileAdd]
     val schemaOf = mutable.HashMap.empty[String, String]
@@ -762,9 +769,10 @@ final class CommitLog(root: String, hadoopConf: Configuration,
 
   private def ckptIds: Seq[Long] =
     if (!fs.exists(logDir)) Seq.empty
-    else fs.listStatus(logDir).toSeq
-      .map(_.getPath.getName)
-      .filter(_.matches("ckpt-\\d{8,}\\.json"))
+    else ckptIdsIn(fs.listStatus(logDir).toSeq.map(_.getPath.getName))
+
+  private def ckptIdsIn(names: Seq[String]): Seq[Long] =
+    names.filter(_.matches("ckpt-\\d{8,}\\.json"))
       .map(_.stripPrefix("ckpt-").stripSuffix(".json").toLong)
       .sorted
 
@@ -780,7 +788,11 @@ final class CommitLog(root: String, hadoopConf: Configuration,
 
   /** newest checkpoint at-or-before `target`, None if none covers it */
   def latestCheckpointAt(target: Long): Option[Checkpoint] =
-    ckptIds.filter(_ <= target).lastOption.map { id =>
+    checkpointAt(target, ckptIds)
+
+  /** [[latestCheckpointAt]] among checkpoint ids a listing already read */
+  private def checkpointAt(target: Long, ckpts: Seq[Long]): Option[Checkpoint] =
+    ckpts.filter(_ <= target).lastOption.map { id =>
       ckptParsed.getOrElseUpdate(id, {
         ckptOpens.incrementAndGet()
         val in: java.io.InputStream = fs.open(ckptPath(id))
@@ -796,10 +808,11 @@ final class CommitLog(root: String, hadoopConf: Configuration,
     * failed and provoke a duplicating retry. */
   private def maybeCheckpoint(): Unit =
     if (checkpointEvery > 0) try {
-      val (visible, _, staged) = scanLog() // ONE listing for head + floor
+      // ONE listing for head, floor and the last checkpoint
+      val LogScan(visible, _, staged, ckpts) = scanLog()
       val ids = timeline(visible)
       if (ids.nonEmpty) {
-        val last = ckptIds.lastOption.getOrElse(-1L)
+        val last = ckpts.lastOption.getOrElse(-1L)
         // never checkpoint ACROSS a staged transaction commit: a live
         // set baked above an undecided id would silently skip it when
         // it later materializes (resolution trusts the checkpoint)

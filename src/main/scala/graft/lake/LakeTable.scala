@@ -369,6 +369,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   import LakeTable._
 
   private val hconf = spark.sparkContext.hadoopConfiguration
+  private val logger = org.slf4j.LoggerFactory.getLogger(classOf[LakeTable])
   val log = new CommitLog(config.root, hconf, config.checkpointEvery)
 
   /** physical partition-path LEVEL NAMES: the user columns (suffixed by
@@ -750,7 +751,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     val matched = files.groupBy(f => jsonOf.getOrElse(f.path, target.json))
       .toSeq.map { case (j, fsG) =>
         val fileSchema = parseSchema(j)
-        val raw0 = spark.read.schema(fileSchema).parquet(fsG.map(_.path): _*)
+        val raw0 = LogFileIndex.scan(spark, fsG, fileSchema)
           .select(col("*"),
             DvCodec.normPathCol(col("_metadata.file_path")).as("__dv_file"),
             col("_metadata.row_index").as("__dv_pos"))
@@ -817,7 +818,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     val posCols = joinCols.map(c => col("`" + c + "`"))
     val candidates = groups.toSeq.map { case (j, fs) =>
       val fileSchema = parseSchema(j)
-      val raw0 = spark.read.schema(fileSchema).parquet(fs.map(_.path): _*)
+      val raw0 = LogFileIndex.scan(spark, fs, fileSchema)
       val raw = dvRows.fold(raw0)(dv => joinDvs(raw0, dv))
       raw.select(posCols :+
         DvCodec.normPathCol(col("_metadata.file_path")).as("__dv_file") :+
@@ -1550,9 +1551,12 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   /** The one result rule of the snapshot read surfaces: the merged scan
     * of `files` (`_file_name`-tagged on metaColumns tables), or, with no
     * file left to scan, an empty frame with the same columns — the table
-    * schema minus the MoR internals the merge drops. */
-  private def scanOrEmpty(snap: Snapshot, files: Seq[FileAdd]): DataFrame =
-    if (files.nonEmpty) mergeIfNeeded(files, snap, tagFileName = config.metaColumns)
+    * schema minus the MoR internals the merge drops. `keys` (dedup
+    * columns) restricts the scan to those keys before any merge. */
+  private def scanOrEmpty(snap: Snapshot, files: Seq[FileAdd],
+      keys: Option[DataFrame] = None): DataFrame =
+    if (files.nonEmpty)
+      mergeIfNeeded(files, snap, tagFileName = config.metaColumns, keys = keys)
     else {
       val empty = readOrEmpty(Seq.empty, snap).drop("_seq", "_deleted")
       if (!config.metaColumns) empty
@@ -1573,13 +1577,24 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * per key whose current version changed in `(from, to]`, tagged
     * `_change_type` = insert | update | delete. Update/insert rows carry
     * the NEW values; delete rows carry the LAST values the key had at
-    * `from`. Plan shape: the insert/update side is the `to` snapshot
-    * filtered on `_commit_id > from` — a metadata-column predicate that
-    * prunes whole commit directories via parquet min/max — joined
-    * (null-safe, dedup-key) against the `from` snapshot's keys to split
-    * insert from update; deletes are a key anti-join of the two
-    * snapshots. A rewrite that re-ingests identical values still reports
+    * `from`. A rewrite that re-ingests identical values still reports
     * an update (same contract as Hudi's incremental CDC on CoW).
+    *
+    * Plan shape — the cost is the window, not the table:
+    *  1. the window's touched keys K ([[changeKeys]]): the dedup
+    *     columns of rows its logical commits stamped, plus keys its
+    *     removals or deletion vectors may have deleted;
+    *  2. each side (the `from` and the `to` snapshot) scans only its
+    *     files in K's partitions, semi-joined (broadcast, null-safe) to
+    *     K BEFORE the MoR merge — exact, because the merge partitions by
+    *     the dedup columns;
+    *  3. ONE null-safe full-outer join of the two sides on the dedup
+    *     columns; every change type is a filter over it (new side
+    *     stamped `_commit_id > from`: insert or update; old side only:
+    *     delete).
+    * A window whose `from` snapshot lies below the cleaner horizon, or
+    * with a schema-changing commit, joins the two snapshots whole (the
+    * same reader with no K), and logs why.
     */
   def changesBetween(from: Long, to: Long): DataFrame =
     changesBetween(from, to, preImages = false)
@@ -1610,8 +1625,23 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     log.stagedFloor.filter(_ <= to).foreach(f => require(f > to,
       s"commit $f is an undecided transaction commit inside [$from, $to] " +
         "— retry after the transaction decides"))
-    val newSnap = readPruned(log.snapshot(Some(to)), None)
-    val oldSnap = readPruned(log.snapshot(Some(from)), None)
+    val snapTo = log.snapshot(Some(to))
+    val snapFrom = log.snapshot(Some(from))
+    val window = log.commitsInRange(from, to)
+    val (newSnap, oldSnap) = changeFeedUnbounded(from, window, snapFrom) match {
+      case Some(reason) =>
+        logger.info(s"changesBetween($from, $to) diffs both snapshots whole: $reason")
+        (scanOrEmpty(snapTo, snapTo.files), scanOrEmpty(snapFrom, snapFrom.files))
+      case None =>
+        val (keys, parts) = changeKeys(from, window, snapFrom, snapTo)
+        def side(snap: Snapshot) = keys match {
+          case None => scanOrEmpty(snap, Seq.empty)
+          case Some(k) => scanOrEmpty(snap,
+            parts.fold(snap.files)(ps => snap.files.filter(f => ps(f.partition))),
+            Some(k))
+        }
+        (side(snapTo), side(snapFrom))
+    }
     val keyed = dedupCols
     // ONE null-safe full-outer join of the two snapshots (r18): the
     // previous shape derived inserts/updates (changed ⟕ old keys),
@@ -1653,6 +1683,75 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
           lit("update_preimage").as("_change_type"): _*)
       base.unionByName(pres, allowMissingColumns = true)
     }
+  }
+
+  /** Why [[changesBetween]] must diff its two snapshots whole, or None
+    * when the window bounds it: a `from` below the cleaner horizon (a
+    * pinned version — files the window removed may be gone), or a window
+    * commit whose schema differs from `from`'s. */
+  private[graft] def changeFeedUnbounded(from: Long, window: Seq[Commit],
+      snapFrom: Snapshot): Option[String] = {
+    val horizon = log.cleanedUpTo
+    if (from < horizon)
+      Some(s"window starts at commit $from, below the cleaner horizon $horizon")
+    else {
+      // MoR internals (`_seq`, `_deleted`) join the schema with the first
+      // delta commit: user columns only
+      def user(s: StructType) = s.fields.filterNot(f => SchemaEvo.isInternal(f.name)).toSeq
+      val schema = user(tableSchema(snapFrom))
+      window.find(c => user(parseSchema(c.schemaJson)) != schema)
+        .map(c => s"commit ${c.id} changes the schema")
+    }
+  }
+
+  /** The keys a change window `(from, to]` may have changed, as dedup
+    * columns, and the partitions holding every row of them (None = any
+    * partition) — None for keys when the window changed nothing:
+    *  - rows stamped `_commit_id > from` in the files the window's
+    *    logical commits added (tombstones included; each file read with
+    *    its own commit's schema). Physical ops ([[LakeTable.PhysicalOps]])
+    *    add nothing: every row they write carries an older stamp;
+    *  - when a logical commit removed files: keys of the window's removed
+    *    files live at `from` that no window add live at `to` still holds
+    *    (partition drops, overwrites, CoW deletes), as in
+    *    [[MaterializedAgg]]'s bounded refresh;
+    *  - rows the window's deletion vectors deleted.
+    * Partitions bound the scan only when every dedup group lives in one
+    * partition ([[groupLocalMergeSafe]]) of one partition spec. */
+  private def changeKeys(from: Long, window: Seq[Commit], snapFrom: Snapshot,
+      snapTo: Snapshot): (Option[DataFrame], Option[Set[String]]) = {
+    def keysOf(df: DataFrame) = df.select(dedupCols.map(c => col("`" + c + "`")): _*)
+    val logical = window.filterNot(c => LakeTable.PhysicalOps.contains(c.op))
+    val stamped = logical.flatMap(c => c.adds.filterNot(_.isDv).map(_ -> c.schemaJson))
+    val stampedKeys = stamped.groupBy(_._2).toSeq.map { case (j, fs) =>
+      keysOf(LogFileIndex.scan(spark, fs.map(_._1), parseSchema(j))
+        .filter(col("_commit_id") > from))
+    }
+    val liveFrom = snapFrom.files.map(f => f.path -> f).toMap
+    val removedOld =
+      if (!logical.exists(_.removes.nonEmpty)) Seq.empty
+      else window.flatMap(_.removes).distinct.flatMap(liveFrom.get)
+    val goneKeys = if (removedOld.isEmpty) None else {
+      val liveTo = snapTo.files.map(_.path).toSet
+      val removedParts = removedOld.map(_.partition).toSet
+      val kept = window.flatMap(_.adds).filter(a => !a.isDv &&
+          liveTo.contains(a.path) &&
+          (!groupLocalMergeSafe || removedParts(a.partition))).distinct
+      Some(joinDedup(keysOf(readOrEmpty(removedOld, snapFrom)),
+        keysOf(readOrEmpty(kept, snapTo)), "left_anti"))
+    }
+    val dvs = logical.flatMap(_.adds.filter(_.isDv))
+    val dvKeys = if (dvs.isEmpty) None else {
+      val addOf = (snapFrom.files ++ snapTo.files ++ window.flatMap(_.adds))
+        .map(f => f.path -> f).toMap
+      val schemaOf = snapFrom.pathSchemas ++ snapTo.pathSchemas
+      Some(keysOf(dvDeletedRows(dvs, tableSchema(snapTo), schemaOf.get,
+        p => addOf.getOrElse(p, FileAdd(p, "")))))
+    }
+    val keys = (stampedKeys ++ goneKeys ++ dvKeys).reduceOption(_ union _)
+    val touched = stamped.map(_._1) ++ removedOld ++ dvs
+    val oneSpec = (snapFrom.files ++ snapTo.files ++ touched).map(_.spec).distinct.size <= 1
+    (keys, if (groupLocalMergeSafe && oneSpec) Some(touched.map(_.partition).toSet) else None)
   }
 
   /** Read-optimized query (Hudi's MoR `_ro` view): base files only, no
@@ -3535,20 +3634,35 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * partitions (see [[groupLocalMergeSafe]]).
     */
   private def mergeIfNeeded(files: Seq[FileAdd], snap: Snapshot,
-      tagFileName: Boolean = false): DataFrame = {
-    if (!files.exists(_.isDelta)) readFiles(files, snap, tagFileName)
-    else if (!groupLocalMergeSafe) morMerge(readFiles(files, snap, tagFileName))
+      tagFileName: Boolean = false, keys: Option[DataFrame] = None): DataFrame = {
+    // the key restriction runs on the raw rows, BEFORE the merge: exact,
+    // because the merge partitions by exactly these columns
+    def scan(fs: Seq[FileAdd]): DataFrame = {
+      val raw = readFiles(fs, snap, tagFileName)
+      keys.fold(raw)(k => joinDedup(raw, broadcast(k), "left_semi"))
+    }
+    if (!files.exists(_.isDelta)) scan(files)
+    else if (!groupLocalMergeSafe) morMerge(scan(files))
     else {
       val touched = files.filter(_.isDelta).map(_.partition).toSet
       val (dirty, clean) = files.partition(f => touched.contains(f.partition))
-      val merged = morMerge(readFiles(dirty, snap, tagFileName))
+      val merged = morMerge(scan(dirty))
       if (clean.isEmpty) merged
       else
         // allowMissingColumns: delta commits may have widened the schema,
         // so the merged side can carry columns the clean base files lack
-        merged.unionByName(readFiles(clean, snap, tagFileName),
-          allowMissingColumns = true)
+        merged.unionByName(scan(clean), allowMissingColumns = true)
     }
+  }
+
+  /** `df` semi- or anti-joined to `keys` on the dedup columns,
+    * null-safe (a null partition value is one partition, not none) */
+  private def joinDedup(df: DataFrame, keys: DataFrame, how: String): DataFrame = {
+    val kc = dedupCols.indices.map(i => s"__ck_$i")
+    val k = keys.select(dedupCols.zip(kc).map { case (c, n) =>
+      col("`" + c + "`").as(n) }: _*)
+    df.join(k, dedupCols.zip(kc).map { case (c, n) =>
+      col("`" + c + "`") <=> col(n) }.reduce(_ && _), how)
   }
 
   /** MoR read-time merge over base ∪ delta rows. Per dedup key:
@@ -3878,8 +3992,12 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * scan over disjoint files, so pushdown/pruning apply per group and
     * total I/O is unchanged; group count is bounded by live schema
     * versions (compaction collapses it back to one).
-    */
-  /** `tagFileName`: attach `_file_name` (file basename via
+    *
+    * The scan lists nothing: each group's file list and sizes come from
+    * the commit log ([[LogFileIndex]]), so building the frame touches no
+    * data path and runs no Spark job, however many files it names.
+    *
+    * `tagFileName`: attach `_file_name` (file basename via
     * `input_file_name`) AT THE SCAN — the expression reads a scan-local
     * thread state, so it must be captured before any exchange. Only the
     * public snapshot read surfaces tag; internal readers that rewrite
@@ -3898,11 +4016,11 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // union).
     val groups = scala.collection.mutable.LinkedHashMap
       .empty[Set[(String, String, DataType)],
-             (StructType, scala.collection.mutable.ArrayBuffer[String])]
+             (StructType, scala.collection.mutable.ArrayBuffer[FileAdd])]
     files.foreach { f =>
       val schema = jsonOf.get(f.path).map(parseSchema).getOrElse(target)
       groups.getOrElseUpdate(SchemaEvo.adaptKey(schema),
-        (schema, new scala.collection.mutable.ArrayBuffer[String]))._2 += f.path
+        (schema, new scala.collection.mutable.ArrayBuffer[FileAdd]))._2 += f
     }
     val targetKey = SchemaEvo.adaptKey(target)
     // live deletion vectors covering any of these files: applied as ONE
@@ -3910,8 +4028,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // directly on the raw scan (codegen'd BroadcastHashJoin LeftAnti).
     // Zero-cost when no DV is live — the common case stays a bare scan.
     val dvRows = dvRowsFor(files, snap)
-    groups.toSeq.map { case (key, (fileSchema, paths)) =>
-      val raw0 = spark.read.schema(fileSchema).parquet(paths.toSeq: _*)
+    groups.toSeq.map { case (key, (fileSchema, group)) =>
+      val raw0 = LogFileIndex.scan(spark, group.toSeq, fileSchema)
       val raw = dvRows.fold(raw0)(dv => joinDvs(raw0, dv))
       val adapted = if (key == targetKey) raw
         else SchemaEvo.adapt(raw, fileSchema, target)
@@ -3970,13 +4088,14 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * change-tail's typed/untyped delete source for DV commits. */
   private[graft] def dvDeletedRows(dvs: Seq[FileAdd],
       streamSchema: StructType,
-      schemaJsonOf: String => Option[String]): DataFrame = {
+      schemaJsonOf: String => Option[String],
+      addOf: String => FileAdd): DataFrame = {
     val dvRows = dvPositions(dvs)
-    dvs.map(_.target).distinct
-      .groupBy(p => schemaJsonOf(p).getOrElse(tableSchema().json))
-      .toSeq.map { case (j, ps) =>
+    dvs.map(_.target).distinct.map(addOf)
+      .groupBy(f => schemaJsonOf(f.path).getOrElse(tableSchema().json))
+      .toSeq.map { case (j, fs) =>
         val fileSchema = parseSchema(j)
-        val raw = joinDvs(spark.read.schema(fileSchema).parquet(ps: _*),
+        val raw = joinDvs(LogFileIndex.scan(spark, fs, fileSchema),
           dvRows, "left_semi")
         SchemaEvo.adaptToStream(raw, fileSchema, streamSchema)
       }.reduce(_ unionByName _)
@@ -4162,24 +4281,25 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * ([[SchemaEvo.adaptToStream]]: renames alias, pre-evolution files
     * null-backfill/upcast, evolution past the stream schema fails loud).
     * The change-tail read primitive for Copy-on-Write tables, where a
-    * commit's logical changes are derived from its adds/removes. */
+    * commit's logical changes are derived from its adds/removes. A file
+    * known only by path is `FileAdd(path, "")`: its unrecorded length
+    * costs one status request, never a listing. */
   private[graft] def readTimelineFiles(
-      paths: Seq[String], streamSchema: StructType,
+      files: Seq[FileAdd], streamSchema: StructType,
       schemaJsonOf: String => Option[String]): DataFrame = {
-    if (paths.isEmpty)
+    if (files.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], streamSchema)
     val groups = scala.collection.mutable.LinkedHashMap
       .empty[Set[(String, String, DataType)],
-             (StructType, scala.collection.mutable.ArrayBuffer[String])]
-    paths.foreach { p =>
-      val schema = schemaJsonOf(p).map(parseSchema).getOrElse(tableSchema())
+             (StructType, scala.collection.mutable.ArrayBuffer[FileAdd])]
+    files.foreach { f =>
+      val schema = schemaJsonOf(f.path).map(parseSchema).getOrElse(tableSchema())
       groups.getOrElseUpdate(SchemaEvo.adaptKey(schema),
-        (schema, new scala.collection.mutable.ArrayBuffer[String]))._2 += p
+        (schema, new scala.collection.mutable.ArrayBuffer[FileAdd]))._2 += f
     }
-    groups.toSeq.map { case (_, (fileSchema, ps)) =>
-      SchemaEvo.adaptToStream(
-        spark.read.schema(fileSchema).parquet(ps.toSeq: _*),
+    groups.toSeq.map { case (_, (fileSchema, fs)) =>
+      SchemaEvo.adaptToStream(LogFileIndex.scan(spark, fs.toSeq, fileSchema),
         fileSchema, streamSchema)
     }.reduce(_.unionByName(_))
   }
@@ -5848,6 +5968,12 @@ object LakeTable {
     * state — counted by inline compaction and excluded from the base
     * (plain-parquet-readable) schema resolution */
   val DeltaOps: Set[String] = Set("delta_commit", "delete_delta", "delta_compact")
+
+  /** commit ops that rewrite data with NO logical change (maintenance):
+    * change feeds and tails skip them — by the maintenance-invariance
+    * laws their diff is empty */
+  val PhysicalOps: Set[String] = Set("compact", "delta_compact", "recluster",
+    "dv_fold")
 
   /** separator joining multi-level partition tuples in FileAdd.partition */
   val PartSep = "\u0001"

@@ -72,12 +72,6 @@ final class GraftTailSource(
     * happens to start with "d" from ever confusing the classifier */
   private val ChangeDir = ".*/data/d\\d{8,}-[0-9a-f]+/.*".r
 
-  /** ops that rewrite data with NO logical change (maintenance) — the
-    * CoW tail skips them outright rather than paying a full diff read
-    * that is empty by the maintenance-invariance laws */
-  private val PhysicalOps = Set("compact", "delta_compact", "recluster",
-    "dv_fold")
-
   /** ops that can make a key disappear — only these pay the tombstone
     * anti-join; plain upserts never remove keys */
   private val DeleteCapableOps = Set("delete", "insert_overwrite", "merge")
@@ -331,15 +325,19 @@ final class GraftTailSource(
     * readable until [[graft.lake.LakeTable.clean]]; a tail lagging past
     * the cleaner horizon fails loud on the missing file, the same
     * contract as time travel below the horizon. */
-  /** Incremental path → add-commit-schema index for the CoW diff: a
-    * removed file's schema is its ADD commit's, which can lie anywhere
-    * below the batch. Seeded ONCE from the timeline up to the first
-    * batch, then grown per batch from the batch's own commits — so the
+  /** Incremental path → (add, add-commit schema) index for the CoW
+    * diff: a removed file's schema and recorded length are its ADD
+    * commit's, which can lie anywhere below the batch. Seeded ONCE from
+    * the timeline up to the first batch, then grown per batch from the batch's own commits — so the
     * per-trigger driver work is O(new commits), never a re-fold of the
     * whole add history (the growth-with-AGE failure the commit log
     * exists to avoid; commit JSON reads are already memoized, this
     * bounds the CPU fold too). `indexedUpTo` is spec-observable. */
-  private val pathSchemaIdx = scala.collection.mutable.HashMap.empty[String, String]
+  private val pathIdx =
+    scala.collection.mutable.HashMap.empty[String, (graft.lake.FileAdd, String)]
+  private def schemaOf(path: String): Option[String] = pathIdx.get(path).map(_._2)
+  private def addOf(path: String): graft.lake.FileAdd =
+    pathIdx.get(path).fold(graft.lake.FileAdd(path, ""))(_._1)
   private[graft] var indexedFoldedCommits: Long = 0L
   private var indexedUpTo: Long = Long.MinValue
   private def ensureIndexed(upTo: Long): Unit =
@@ -348,7 +346,7 @@ final class GraftTailSource(
         .filter(c => c.id > indexedUpTo && c.id <= upTo)
         .foreach { c =>
           indexedFoldedCommits += 1
-          c.adds.foreach(a => pathSchemaIdx(a.path) = c.schemaJson)
+          c.adds.foreach(a => pathIdx(a.path) = (a, c.schemaJson))
         }
       indexedUpTo = upTo
     }
@@ -372,14 +370,14 @@ final class GraftTailSource(
       idCols.foldLeft(df)((acc, n) => acc.withColumnRenamed(n, s"_k_$n"))
     val sameKey = idCols.map(n => quoted(s"_k_$n") <=> quoted(n)).reduce(_ && _)
     val frames = table.log.commitsInRange(from, to)
-      .filterNot(c => PhysicalOps.contains(c.op))
+      .filterNot(c => LakeTable.PhysicalOps.contains(c.op))
       .flatMap { c =>
         if (c.op == "dv_delete") {
           // deletion-vector commit: the logical change is exactly the
           // tombstoned rows — target files' rows at the DV'd positions
           ensureIndexed(to)
           val dead = table.dvDeletedRows(
-              c.adds.filter(_.isDv), schema, pathSchemaIdx.get)
+              c.adds.filter(_.isDv), schema, schemaOf, addOf)
             .withColumn("_deleted", lit(true))
           Seq(if (changeTypes)
             dead.withColumn("_change_type", lit("delete")) else dead)
@@ -390,23 +388,23 @@ final class GraftTailSource(
           ensureIndexed(to)
           val proj = schema.fieldNames.map(n => col("`" + n + "`")).toSeq
           val pre = table.dvDeletedRows(
-              c.adds.filter(_.isDv), schema, pathSchemaIdx.get)
+              c.adds.filter(_.isDv), schema, schemaOf, addOf)
             .withColumn("_deleted", lit(false))
             .withColumn("_change_type", lit("update_preimage"))
           val post = table.readTimelineFiles(
-              c.adds.filterNot(a => a.isDelta || a.isDv).map(_.path),
+              c.adds.filterNot(a => a.isDelta || a.isDv),
               schema, _ => Some(c.schemaJson))
             .filter(col("_commit_id") === c.id)
             .withColumn("_deleted", lit(false))
             .withColumn("_change_type", lit("update_postimage"))
           Seq(pre.select(proj: _*), post.select(proj: _*))
         } else {
-        val adds = c.adds.filterNot(a => a.isDelta || a.isDv).map(_.path)
+        val adds = c.adds.filterNot(a => a.isDelta || a.isDv)
         // adds need no index probe: their schema IS this commit's
         def readAdds() = table.readTimelineFiles(
           adds, schema, _ => Some(c.schemaJson))
         def readOld() = { requireRemovesReadable(c, "rewritten files")
-          table.readTimelineFiles(c.removes, schema, pathSchemaIdx.get) }
+          table.readTimelineFiles(c.removes.map(addOf), schema, schemaOf) }
         val proj = schema.fieldNames.map(n => col("`" + n + "`")).toSeq
         if (changeTypes && adds.nonEmpty && c.removes.nonEmpty) {
           // FUSED typed classification (r18): the pre-fusion shape
@@ -524,11 +522,11 @@ final class GraftTailSource(
     // added or widened past it after start) FAILS the stream for a
     // restart — the Delta contract — instead of silently nulling data
     val groups = scala.collection.mutable.LinkedHashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[String]]
+      .empty[String, scala.collection.mutable.ArrayBuffer[graft.lake.FileAdd]]
     table.log.commitsInRange(from, to).foreach { c =>
       c.adds.filter(a => a.isDelta && ChangeDir.matches(a.path))
         .foreach(a => groups.getOrElseUpdate(c.schemaJson,
-          new scala.collection.mutable.ArrayBuffer[String]) += a.path)
+          new scala.collection.mutable.ArrayBuffer[graft.lake.FileAdd]) += a)
     }
     // a METADATA-ONLY partition drop (LakeTable.deleteWhere's fast path)
     // commits file removals with NO delta add — invisible to the
@@ -547,7 +545,7 @@ final class GraftTailSource(
         requireRemovesReadable(c, "dropped partition files")
         val idCols = (table.config.keyCols ++ table.config.partitionCols)
           .distinct :+ "_record_key"
-        val keys = table.readTimelineFiles(c.removes, schema, pathSchemaIdx.get)
+        val keys = table.readTimelineFiles(c.removes.map(addOf), schema, schemaOf)
           .select(idCols.map(n => col("`" + n + "`")): _*).distinct()
         keys.select(schema.fields.map { f =>
           if (f.name == "_deleted") lit(true).as(f.name)
@@ -555,13 +553,13 @@ final class GraftTailSource(
           else lit(null).cast(f.dataType).as(f.name)
         }.toSeq: _*)
       }
-    val frames = groups.toSeq.map { case (j, paths) =>
+    val frames = groups.toSeq.map { case (j, files) =>
       // memoized parse: commit JSONs are immutable and repeat across
       // triggers — a continuously-running stream must not re-parse
       // the same schema every micro-batch
       val fileSchema = table.parseSchema(j)
       graft.lake.SchemaEvo.adaptToStream(
-        ctx.sparkSession.read.schema(fileSchema).parquet(paths.toSeq: _*),
+        graft.lake.LogFileIndex.scan(ctx.sparkSession, files.toSeq, fileSchema),
         fileSchema, schema)
     } ++ dropTombs
     if (frames.isEmpty)
@@ -633,12 +631,11 @@ final class GraftTailSource(
         // stale delta: the table did not change — emit nothing
         .otherwise(lit(null))).as("_r"))
       .select(schema.fieldNames.map(n => col("_r.`" + n + "`")).toSeq: _*)
-    def keysOf(c: graft.lake.Commit, deltaPaths: Seq[String]): DataFrame = {
+    def keysOf(c: graft.lake.Commit, deltas: Seq[graft.lake.FileAdd]): DataFrame = {
       val fileSchema = table.parseSchema(c.schemaJson)
       // no distinct: both consumers (range probe, semi join) tolerate
       // duplicate keys, and the delta batch is near-unique per key
-      ctx.sparkSession.read.schema(fileSchema)
-        .parquet(deltaPaths: _*)
+      graft.lake.LogFileIndex.scan(ctx.sparkSession, deltas, fileSchema)
         .select(table.config.keyCols.map(n => col("`" + n + "`")): _*)
     }
     // Consecutive delta commits FUSE into one merged probe
@@ -656,7 +653,7 @@ final class GraftTailSource(
     lazy val headSchema = table.log.snapshot().schemaJson
     val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val run = scala.collection.mutable.ArrayBuffer
-      .empty[(graft.lake.Commit, Seq[String])]
+      .empty[(graft.lake.Commit, Seq[graft.lake.FileAdd])]
     def flushRun(): Unit = {
       if (run.nonEmpty) {
         val keysByCommit = run.toSeq.map { case (c, ps) => c.id -> keysOf(c, ps) }
@@ -667,20 +664,19 @@ final class GraftTailSource(
       }
     }
     table.log.commitsInRange(from, to).foreach { c =>
-      val deltaPaths = c.adds
-        .filter(a => a.isDelta && ChangeDir.matches(a.path)).map(_.path)
+      val deltas = c.adds.filter(a => a.isDelta && ChangeDir.matches(a.path))
       val fuseSafe = c.removes.isEmpty && !c.adds.exists(_.isDv)
       // ANY removal or DV commit in the range — tailed or not (a
       // compaction between delta commits rewrites files the earlier
       // commits' live sets still need) — breaks the current run
       if (!fuseSafe) flushRun()
-      if (deltaPaths.nonEmpty && fuseSafe) {
+      if (deltas.nonEmpty && fuseSafe) {
         if (run.size >= 16) flushRun()
-        run += ((c, deltaPaths))
-      } else if (deltaPaths.nonEmpty) {
+        run += ((c, deltas))
+      } else if (deltas.nonEmpty) {
         // a delta commit that also removes/DVs: classify alone at ITS
         // live set (the pre-fusion per-commit shape)
-        run += ((c, deltaPaths))
+        run += ((c, deltas))
         flushRun()
       } else if (c.op == "delete" && c.removes.nonEmpty) {
         // metadata-only partition drop: the same derived tombstones as
@@ -689,7 +685,7 @@ final class GraftTailSource(
         requireRemovesReadable(c, "dropped partition files")
         val idCols = (table.config.keyCols ++ table.config.partitionCols)
           .distinct :+ "_record_key"
-        val keys = table.readTimelineFiles(c.removes, schema, pathSchemaIdx.get)
+        val keys = table.readTimelineFiles(c.removes.map(addOf), schema, schemaOf)
           .select(idCols.map(n => col("`" + n + "`")): _*).distinct()
         frames += keys.select(schema.fields.map { f =>
           if (f.name == "_deleted") lit(true).as(f.name)

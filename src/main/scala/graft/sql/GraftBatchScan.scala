@@ -276,13 +276,15 @@ final class GraftBatchScan(
   // ---- partition planning & reading -----------------------------------
 
   private def splitsOf(fs: Seq[FileAdd], maxSplit: Long): Seq[PartitionedFile] =
-    fs.flatMap { f =>
-      (0L until f.bytes by maxSplit).map { offset =>
-        PartitionedFile(InternalRow.empty, SparkPath.fromPathString(f.path),
-          offset, math.min(maxSplit, f.bytes - offset),
-          Array.empty[String], 0L, f.bytes)
-      }
-    }.sortBy(-_.length)
+    graft.lake.LogFileIndex.statusesOf(fs, spark.sparkContext.hadoopConfiguration)
+      .flatMap { st =>
+        val len = st.getLen
+        (0L until len by maxSplit).map { offset =>
+          PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath),
+            offset, math.min(maxSplit, len - offset),
+            Array.empty[String], 0L, len)
+        }
+      }.sortBy(-_.length)
 
   /** DV'd files plan one partition PER SPLIT (row-group parallelism
     * kept) so the reader knows the single file its row indexes belong

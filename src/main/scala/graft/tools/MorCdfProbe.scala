@@ -52,9 +52,8 @@ object MorCdfProbe {
     locally {
       import org.apache.spark.sql.functions.col
       val c = t.log.commitIfExists(2L).get
-      val deltaPaths = c.adds.filter(_.isDelta).map(_.path)
       val fileSchema = t.parseSchema(c.schemaJson)
-      val keys = spark.read.schema(fileSchema).parquet(deltaPaths: _*)
+      val keys = graft.lake.LogFileIndex.scan(spark, c.adds.filter(_.isDelta), fileSchema)
         .select(t.config.keyCols.map(n => col("`" + n + "`")): _*)
       timed("  c2 keys scan")(keys.count())
       val liveAt = t.log.liveFiles(Some(2L))

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,23 +13,38 @@ import graft.lake.{LakeTable, LakeTableConfig}
 
 /** `file://` filesystem that counts directory listings of a table's
   * commit-log directory (`_log`) — the metadata round-trips a snapshot
-  * resolution pays (one LIST request each on an object store). Installed
-  * only for the duration of a test ([[SnapshotSpec.withLogCounting]]). */
+  * resolution pays (one LIST request each on an object store) — and the
+  * listings and status requests of paths under a table's `data/`
+  * directory. Installed only for the duration of a test
+  * ([[SnapshotSpec.withLogCounting]]). */
 class LogListingFs extends LocalFileSystem {
   override def listStatus(f: Path): Array[FileStatus] = {
     if (f.getName == "_log") LogListingFs.listings.incrementAndGet()
+    LogListingFs.countData(f)
     super.listStatus(f)
+  }
+  override def getFileStatus(f: Path): FileStatus = {
+    LogListingFs.countData(f)
+    super.getFileStatus(f)
   }
 }
 
 object LogListingFs {
   val listings = new AtomicLong(0)
+  val dataCalls = new AtomicLong(0)
+  def countData(f: Path): Unit =
+    if (f.getName == "data" || f.toUri.getPath.contains("/data/"))
+      dataCalls.incrementAndGet()
 }
 
 /** One operation reads one resolved version ([[graft.lake.Snapshot]]):
   *   - the commit log is listed a bounded number of times per resolved
   *     version, whatever the read surface, and a write resolves the
   *     version it is based on once;
+  *   - a lake scan takes its file list from the commit log: building a
+  *     read lists no data path and runs no Spark job, a file whose
+  *     commit recorded no length still reads whole, and position-delete
+  *     reads and updates keep their rows;
   *   - metadata answers (aggregate pushdown) consult the PINNED version's
   *     deletion vectors, never the head's;
   *   - every snapshot read surface returns the same columns whether or
@@ -83,6 +99,37 @@ class SnapshotSpec extends AnyFunSuite {
     LogListingFs.listings.get - before
   }
 
+  /** (data-path listings and status requests, Spark jobs) while `build`
+    * runs. Jobs count through a listener; a marker job submitted after
+    * `build` drains the asynchronous listener bus up to it. */
+  private def buildCost(build: => DataFrame): (Long, Int) = {
+    val sc = spark.sparkContext
+    val group = s"build-${System.nanoTime()}"
+    val marker = s"marker-${System.nanoTime()}"
+    val jobs = new AtomicLong(0)
+    @volatile var drained = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == group) jobs.incrementAndGet()
+        if (g == marker) drained = true
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val before = LogListingFs.dataCalls.get
+      sc.setJobGroup(group, "build")
+      try build finally sc.clearJobGroup()
+      val data = LogListingFs.dataCalls.get - before
+      sc.setJobGroup(marker, "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!drained && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(drained, "listener bus did not drain")
+      (data, jobs.get.toInt)
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** 6 commits over 10 partitions and 300 rows: a base load, then five
     * upserts of 40 keys each (deltas on MoR, rewrites on CoW) */
   private def apiTable(storage: String): LakeTable = {
@@ -127,12 +174,12 @@ class SnapshotSpec extends AnyFunSuite {
     }
     counts.foreach { case (storage, n) =>
       Seq("read()", "read(pred)", "readAsOf", "lookup", "readPartitions").foreach { op =>
-        assert(n(op) <= 3, s"$storage $op listed _log ${n(op)} times for one version")
+        assert(n(op) <= 1, s"$storage $op listed _log ${n(op)} times for one version")
       }
-      assert(n("changesBetween") <= 6,
+      assert(n("changesBetween") <= 3,
         s"$storage changesBetween listed _log ${n("changesBetween")} times for two versions")
       Seq("sql lookup", "sql max(pk)").foreach { op =>
-        assert(n(op) <= 6, s"$storage $op listed _log ${n(op)} times")
+        assert(n(op) <= 1, s"$storage $op listed _log ${n(op)} times")
       }
     }
   }
@@ -150,9 +197,69 @@ class SnapshotSpec extends AnyFunSuite {
       val n = withLogCounting(ops.map { case (op, run) => op -> listings(run()) })
       info(s"$storage: ${n.map { case (op, c) => s"$op=$c" }.mkString(", ")}")
       n.foreach { case (op, c) =>
-        assert(c <= 6, s"$storage $op listed _log $c times for one write")
+        assert(c <= 3, s"$storage $op listed _log $c times for one write")
       }
     }
+  }
+
+  test("lake reads list no data files and run no job while built") {
+    import spark.implicits._
+    val t = apiTable("mor")
+    assert(t.log.snapshot().files.size > 32,
+      "past the parallel partition-discovery threshold")
+    val keys = Seq(8L, 15L, 22L).toDF("pk")
+    val cost = withLogCounting(Seq(
+      "read()" -> buildCost(t.read()),
+      "read(pred)" -> buildCost(t.read(col("part") === "p3")),
+      "readAsOf" -> buildCost(t.readAsOf(2L)),
+      "lookup" -> buildCost(t.lookup(keys)),
+      "changesBetween" -> buildCost(t.changesBetween(1L, 5L))))
+    info(cost.map { case (op, (d, j)) => s"$op: $d data-path calls, $j jobs" }
+      .mkString(", "))
+    cost.foreach { case (op, (data, jobs)) =>
+      assert(data == 0, s"$op listed or stat'ed data paths $data times")
+      // lookup prunes eagerly: its key-range probe runs jobs of its own
+      // (no listing among them — no data path was touched)
+      if (op != "lookup") assert(jobs == 0, s"$op ran $jobs jobs while built")
+    }
+    // and the scans read what they name
+    assert(t.read().count() == t.readAsOf(5L).count())
+    assert(t.lookup(keys).count() == 3)
+  }
+
+  test("a file whose commit recorded no length still reads all its rows") {
+    val cfg = LakeTableConfig(freshRoot(), keyCols = Seq("pk"),
+      precombineCol = "ts", partitionCols = Seq("part"))
+    val t = LakeTable(spark, cfg)
+    t.bulkInsert(rows(1 to 60, 0))
+    t.upsert(rows(Seq(3, 14, 25), 1))
+    val before = t.read().select("pk", "v").collect().map(_.toString).sorted.toSeq
+    // commit 0 as a commit JSON written before lengths were recorded
+    val logDir = java.nio.file.Paths.get(cfg.root, "_log")
+    val json = logDir.resolve("00000000.json")
+    Files.write(json, new String(Files.readAllBytes(json), "UTF-8")
+      .replaceAll("\"bytes\"\\s*:\\s*\\d+", "\"bytes\":0").getBytes("UTF-8"))
+    Files.deleteIfExists(logDir.resolve(".00000000.json.crc"))
+    val legacy = LakeTable(spark, cfg)
+    assert(legacy.log.snapshot().files.exists(_.bytes == 0L))
+    assert(legacy.read().select("pk", "v").collect().map(_.toString).sorted.toSeq == before)
+    assert(legacy.read(col("part") === "p3").count() == 6)
+  }
+
+  test("position-delete reads and UPDATE keep their rows") {
+    val t = LakeTable(spark, LakeTableConfig(freshRoot(), keyCols = Seq("pk"),
+      precombineCol = "ts", partitionCols = Seq("part"), deleteMode = "dv"))
+    t.bulkInsert(rows(1 to 40, 0))
+    import spark.implicits._
+    t.deleteDv(Seq(2L, 12L, 33L).toDF("pk"))
+    t.updateDvWhere(col("pk") === 5L || col("pk") === 15L,
+      Map("v" -> org.apache.spark.sql.functions.lit("upd")))
+    assert(t.log.liveDvs().nonEmpty, "deletes and updates land as DVs")
+    val expected = (1 to 40).filterNot(Set(2, 12, 33)).map { i =>
+      i.toLong -> (if (i == 5 || i == 15) "upd" else s"v$i-0") }.toSet
+    assert(t.read().select("pk", "v").as[(Long, String)].collect().toSet == expected)
+    assert(t.read(col("part") === "p5").select("pk", "v").as[(Long, String)]
+      .collect().toSet == expected.filter(_._1 % 10 == 5))
   }
 
   test("time-travel MIN/MAX/SUM pushdown reads the pinned version's DVs") {
