@@ -1585,9 +1585,11 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     *     columns of rows its logical commits stamped, plus keys its
     *     removals or deletion vectors may have deleted;
     *  2. each side (the `from` and the `to` snapshot) scans only its
-    *     files in K's partitions, semi-joined (broadcast, null-safe) to
-    *     K BEFORE the MoR merge — exact, because the merge partitions by
-    *     the dedup columns;
+    *     files in K's partitions, semi-joined (null-safe) to K BEFORE the
+    *     MoR merge — exact, because the merge partitions by the dedup
+    *     columns. K is broadcast only when the log's row counts bound it
+    *     under the broadcast threshold; a window that rewrote much of
+    *     the table semi-joins by shuffle;
     *  3. ONE null-safe full-outer join of the two sides on the dedup
     *     columns; every change type is a filter over it (new side
     *     stamped `_commit_id > from`: insert or update; old side only:
@@ -1748,10 +1750,29 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       Some(keysOf(dvDeletedRows(dvs, tableSchema(snapTo), schemaOf.get,
         p => addOf.getOrElse(p, FileAdd(p, "")))))
     }
-    val keys = (stampedKeys ++ goneKeys ++ dvKeys).reduceOption(_ union _)
     val touched = stamped.map(_._1) ++ removedOld ++ dvs
+    val keys = (stampedKeys ++ goneKeys ++ dvKeys).reduceOption(_ union _)
+      .map { k =>
+        val once = k.distinct()
+        if (keysFitBroadcast(touched, snapTo)) broadcast(once) else once
+      }
     val oneSpec = (snapFrom.files ++ snapTo.files ++ touched).map(_.spec).distinct.size <= 1
     (keys, if (groupLocalMergeSafe && oneSpec) Some(touched.map(_.partition).toSet) else None)
+  }
+
+  /** True when a key set drawn from `sources` — at most one key per row,
+    * by the row counts the log recorded — fits under
+    * `spark.sql.autoBroadcastJoinThreshold`, sized as Spark sizes a row
+    * (8 bytes plus each dedup column's default size). A disabled
+    * threshold or an unrecorded count (0) declines: the semi-join is then
+    * Spark's own choice, shuffled for a key set it cannot bound. */
+  private def keysFitBroadcast(sources: Seq[FileAdd], snap: Snapshot): Boolean = {
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val schema = tableSchema(snap)
+    val rowBytes = 8L + dedupCols.map(c =>
+      schema.find(_.name == c).fold(20)(_.dataType.defaultSize)).sum
+    threshold > 0 && sources.forall(_.rows > 0) &&
+      sources.map(_.rows).sum <= threshold / rowBytes
   }
 
   /** Read-optimized query (Hudi's MoR `_ro` view): base files only, no
@@ -3639,7 +3660,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // because the merge partitions by exactly these columns
     def scan(fs: Seq[FileAdd]): DataFrame = {
       val raw = readFiles(fs, snap, tagFileName)
-      keys.fold(raw)(k => joinDedup(raw, broadcast(k), "left_semi"))
+      keys.fold(raw)(k => joinDedup(raw, k, "left_semi"))
     }
     if (!files.exists(_.isDelta)) scan(files)
     else if (!groupLocalMergeSafe) morMerge(scan(files))
@@ -3904,9 +3925,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         * injecting a failure here IS the crash window between batches */
       onBatchCommitted: Long => Unit = _ => ()): Long = {
     val snap = log.snapshot()
-    def sizeOf(f: FileAdd): Long =
-      if (f.bytes > 0) f.bytes
-      else new Path(f.path).getFileSystem(hconf).getFileStatus(new Path(f.path)).getLen
+    def sizeOf(f: FileAdd): Long = LogFileIndex.statusesOf(Seq(f), hconf).head.getLen
     // the small files of `s` to bin, in partitions holding more than one.
     // MoR bins its change-log deltas (base files belong to compact());
     // CoW has only base files to bin

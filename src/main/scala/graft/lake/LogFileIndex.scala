@@ -23,7 +23,12 @@ import org.apache.spark.sql.types.StructType
   * JSONs written before lengths were recorded) costs one driver-side
   * `getFileStatus`. No partition schema: partition values live in the
   * data files themselves. Equality is by file list, so two scans of the
-  * same files compare equal in plan reuse. */
+  * same files compare equal in plan reuse.
+  *
+  * The statuses carry no block locations, so the scheduler gets no
+  * locality hints. That is deliberate: the stores a lake table targets
+  * (object stores, local disk) report none. On HDFS a scan would lose the
+  * locality a listing gave it; that case is unmeasured. */
 final case class LogFileIndex(files: Seq[FileAdd])(hadoopConf: Configuration)
     extends FileIndex {
 

@@ -3,7 +3,11 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,8 +20,9 @@ import graft.lake.{FileAdd, LakeTable, LakeTableConfig, LogFileIndex}
   * shapes that can change a key: stale MoR updates, tombstones and
   * re-inserts, compaction, CoW deletes, partition overwrites and drops,
   * deletion vectors, global-index partition moves, and a rename (the
-  * unrestricted case). A 1-commit window scans only its partition. */
-class ChangeFeedSpec extends AnyFunSuite {
+  * unrestricted case). A 1-commit window scans only its partition, and
+  * a window whose keys exceed the broadcast threshold broadcasts none. */
+class ChangeFeedSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -205,5 +210,50 @@ class ChangeFeedSpec extends AnyFunSuite {
     assert(before.forall(f => files.exists(_.path == f.path)),
       "the from side reads the touched partition's files")
     assertFeed(t, last - 1, last)
+  }
+
+  /** `body` under a broadcast threshold (static and adaptive), restored
+    * after: the session is shared with other suites */
+  private def withBroadcastThreshold[A](v: String)(body: => A): A = {
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, v))
+    try body
+    finally saved.foreach {
+      case (k, Some(old)) => spark.conf.set(k, old)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** the executed plan's broadcasts and its left-semi joins, by kind */
+  private def semiJoins(df: DataFrame): (Int, Seq[String]) = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val broadcasts = collectWithSubqueries(plan) { case b: BroadcastExchangeExec => b }
+    val semis = collectWithSubqueries(plan) {
+      case j: BroadcastHashJoinExec if j.joinType == LeftSemi => "broadcast"
+      case j: SortMergeJoinExec if j.joinType == LeftSemi => "shuffled"
+      case j: ShuffledHashJoinExec if j.joinType == LeftSemi => "shuffled"
+    }
+    (broadcasts.size, semis)
+  }
+
+  test("a window above the broadcast threshold semi-joins its keys by shuffle") {
+    val t = table("mor")
+    t.bulkInsert(rows(1 to 200, 0))                // 0
+    t.upsert(rows(1 to 200 by 2, 1))               // 1: 100 keys, all partitions
+    val (_, small) = withBroadcastThreshold("10m") {
+      semiJoins(t.changesBetween(0L, 1L, preImages = true))
+    }
+    assert(small.nonEmpty && small.forall(_ == "broadcast"),
+      s"a 100-row window broadcasts its keys: $small")
+    withBroadcastThreshold("10") {
+      val (broadcasts, large) = semiJoins(t.changesBetween(0L, 1L, preImages = true))
+      assert(broadcasts == 0, "no key set is broadcast above the threshold")
+      assert(large.nonEmpty && large.forall(_ == "shuffled"),
+        s"the window stays restricted to its keys: $large")
+      assertFeed(t, 0L, 1L)
+    }
   }
 }
