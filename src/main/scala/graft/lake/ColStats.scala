@@ -74,14 +74,14 @@ object ColStats {
 
   def save(root: String, s: ColStatsFile, hconf: Configuration): Unit = {
     val p = file(root)
-    val fs = p.getFileSystem(hconf)
+    val fs = LocalFs.of(p, hconf)
     val out = fs.create(p, true)
     try out.write(mapper.writeValueAsBytes(s)) finally out.close()
   }
 
   def load(root: String, hconf: Configuration): Option[ColStatsFile] = {
     val p = file(root)
-    val fs = p.getFileSystem(hconf)
+    val fs = LocalFs.of(p, hconf)
     if (!fs.exists(p)) None
     else {
       val in: java.io.InputStream = fs.open(p)

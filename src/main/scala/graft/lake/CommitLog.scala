@@ -293,7 +293,7 @@ final class CommitLog(root: String, hadoopConf: Configuration,
     val q = fs.makeQualified(new Path(p)).toString
     q == rootStr || q.startsWith(rootStr + "/")
   }
-  private def fs: FileSystem = logDir.getFileSystem(hadoopConf)
+  private def fs: FileSystem = LocalFs.of(logDir, hadoopConf)
 
   // tolerate unknown fields: case-class getters (e.g. FileAdd.isDelta)
   // serialize as extra properties, and future log versions may add fields
@@ -464,9 +464,9 @@ final class CommitLog(root: String, hadoopConf: Configuration,
     txnDecided.get(txnId).orElse {
       val p = new Path(coord, s"$txnId.decision")
       val d = scala.util.Try {
-        if (!p.getFileSystem(hadoopConf).exists(p)) None
+        if (!LocalFs.of(p, hadoopConf).exists(p)) None
         else {
-          val in: java.io.InputStream = p.getFileSystem(hadoopConf).open(p)
+          val in: java.io.InputStream = LocalFs.of(p, hadoopConf).open(p)
           try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
           finally in.close()
         }

@@ -22,7 +22,7 @@ private[graft] object DvCodec {
 
   def write(conf: Configuration, path: Path, positions: Array[Long]): Long = {
     java.util.Arrays.sort(positions)
-    val fs = path.getFileSystem(conf)
+    val fs = LocalFs.of(path, conf)
     val out = new java.io.DataOutputStream(
       new java.io.BufferedOutputStream(fs.create(path, false)))
     try {
@@ -40,7 +40,7 @@ private[graft] object DvCodec {
 
   def read(conf: Configuration, path: String): Array[Long] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
+    val fs = LocalFs.of(p, conf)
     val in = new java.io.DataInputStream(
       new java.io.BufferedInputStream(fs.open(p)))
     try {

@@ -764,7 +764,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       }.reduce(_.unionByName(_, allowMissingColumns = true))
       .filter(pred)
       .persist()
-    val fsys = new Path(config.root).getFileSystem(hconf)
+    val fsys = LocalFs.of(new Path(config.root), hconf)
     try {
       val (dvDir, dvAdds) = writeDvSidecars(id, "dv_update",
         matched.select(col("__dv_file"), col("__dv_pos")), files)
@@ -828,7 +828,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     val cond = joinCols.map(c => candidates(c) <=> doomed(c)).reduce(_ && _)
     val matches = candidates.join(doomed, cond, "left_semi")
       .select(col("__dv_file"), col("__dv_pos")).persist()
-    val fs = new Path(config.root).getFileSystem(hconf)
+    val fs = LocalFs.of(new Path(config.root), hconf)
     try {
       val (dir, adds) = writeDvSidecars(id, "dv_delete", matches, oldFiles)
       if (adds.isEmpty) return basedOn // nothing matched
@@ -851,7 +851,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     * nothing matched; the collect is touched-files scale. */
   private def writeDvSidecars(id: Long, op: String, matches: DataFrame,
       targets: Seq[FileAdd]): (Path, Seq[FileAdd]) = {
-    val fs = new Path(config.root).getFileSystem(hconf)
+    val fs = LocalFs.of(new Path(config.root), hconf)
     val dir = dataDir(id, "dv", op)
     fs.mkdirs(dir)
     val confS = new SerializableHadoopConf(hconf)
@@ -2030,9 +2030,9 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     clean match {
       case Some(files) =>
         val schemaJson = snap.schemaJson.getOrElse(new StructType().json)
-        val srcFs = new Path(config.root).getFileSystem(hconf)
+        val srcFs = LocalFs.of(new Path(config.root), hconf)
         val dstDir = new Path(targetRoot, "data/c00000000-deepclone")
-        val dstFs = dstDir.getFileSystem(hconf)
+        val dstFs = LocalFs.of(dstDir, hconf)
         dstFs.mkdirs(dstDir)
         val copied = files.zipWithIndex.map { case (f, i) =>
           val sp = new Path(f.path)
@@ -2995,7 +2995,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   private def manifestsDir = new Path(config.root, "_manifests")
 
   private def dropManifests(): Unit = {
-    val fs = manifestsDir.getFileSystem(hconf)
+    val fs = LocalFs.of(manifestsDir, hconf)
     if (fs.exists(manifestsDir)) { fs.delete(manifestsDir, true); () }
   }
 
@@ -3041,7 +3041,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       s"commit $id's snapshot is below the clean horizon " +
         s"(${log.cleanedUpTo}) — its files were physically deleted")
     val files = log.liveFiles(Some(id)).filterNot(_.isDelta)
-    val fs = manifestsDir.getFileSystem(hconf)
+    val fs = LocalFs.of(manifestsDir, hconf)
     fs.mkdirs(manifestsDir)
     val qualified = files.map(f => fs.makeQualified(new Path(f.path)).toString)
     val isHead = log.latestId.contains(id)
@@ -3118,7 +3118,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         DvCodec.read(conf.value, p).iterator.map(pos => (fp, ln, pos)) }
       .toDF("file_path", "link_name", "row_index")
     val tmpDir = new Path(manifestsDir, s".tmpd-$id-${System.nanoTime()}")
-    deletes.coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
+    deletes.coalesce(1).write.options(LocalFs.writeOptions(tmpDir, hconf))
+      .mode("overwrite").parquet(tmpDir.toString)
     val part = fs.listStatus(tmpDir).map(_.getPath)
       .find(_.getName.endsWith(".parquet"))
       .getOrElse(throw new IllegalStateException(
@@ -3249,7 +3250,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   def vacuumOrphans(olderThanMs: Long = 60L * 60 * 1000,
       dryRun: Boolean = false): Seq[String] = {
     val dataRoot = new Path(config.root, "data")
-    val fs = dataRoot.getFileSystem(hconf)
+    val fs = LocalFs.of(dataRoot, hconf)
     if (!fs.exists(dataRoot)) return Seq.empty
     // every directory any commit's files live in, keyed by the segment
     // directly under data/ (one directory per commit attempt)
@@ -3375,7 +3376,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
   /** branch name → its head commit id */
   def branches: Map[String, Long] = {
     val dir = new Path(config.root, "_refs")
-    val fs = dir.getFileSystem(hconf)
+    val fs = LocalFs.of(dir, hconf)
     if (!fs.exists(dir)) Map.empty
     else fs.listStatus(dir).toSeq.filter(_.isDirectory).flatMap { st =>
       new LakeTable(spark, config.copy(root = st.getPath.toString))
@@ -3400,7 +3401,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     */
   def dropBranch(name: String): Unit = {
     val dir = new Path(branchRoot(name))
-    val fs = dir.getFileSystem(hconf)
+    val fs = LocalFs.of(dir, hconf)
     if (!fs.exists(dir)) return
     // compare FULLY-QUALIFIED scheme-free paths: FileAdd paths are
     // qualified ("file:/abs/...") while config.root may be plain or
@@ -3550,7 +3551,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
             "single-directory invariant broken")
         Map("" -> dirs.headOption.getOrElse {
           val d = new Path(config.root, "data/_empty")
-          d.getFileSystem(hconf).mkdirs(d); d.toString
+          LocalFs.of(d, hconf).mkdirs(d); d.toString
         })
       }
       else files.groupBy(_.partition).map { case (tuple, fAdds) =>
@@ -3575,7 +3576,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         // legal, and this keeps CREATE from scanning commit dirs)
         val stub = new Path(config.root,
           s"_catalog/${tbl.replaceAll("[^A-Za-z0-9._-]", "_")}")
-        stub.getFileSystem(hconf).mkdirs(stub)
+        LocalFs.of(stub, hconf).mkdirs(stub)
         val partSet = effParts.toSet
         val dataCols = schema.fields.filterNot(f => partSet.contains(f.name))
         val partCols = effParts.map(p =>
@@ -5368,9 +5369,10 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
             .repartitionByRange(shadows.map(col) ++ clusterExprs: _*)
             .write.partitionBy(shadows: _*)
         }
-      writer.mode("error").parquet(dir.toString)
+      writer.options(LocalFs.writeOptions(dir, hconf))
+        .mode("error").parquet(dir.toString)
     } finally if (kind != "delta") mat.unpersist() // persist() returns `this`, so guard by kind, not identity
-    val fs = dir.getFileSystem(hconf)
+    val fs = LocalFs.of(dir, hconf)
     val pathLens = listParquet(fs, dir)
     val statsByPath = fileStatsFor(pathLens.map(_._1))
     val adds = pathLens.map { case (p, len) =>
@@ -5455,7 +5457,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       partitionScoped: Boolean, readFree: Boolean, stampsId: Boolean,
       attempt: Int,
       schemaJson: String): Option[Long] = {
-    val fs = dir.getFileSystem(hconf)
+    val fs = LocalFs.of(dir, hconf)
     if (!partitionScoped || attempt >= MaxRebase) return None
     // the new head, resolved ONCE: its id is the new OCC base, its
     // nextId the new commit id, its schema the one the rebase adapts to
@@ -5544,8 +5546,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
     // write's old physical names to the head's new ones; re-entering
     // writeCommit with the raw old names would re-append them as brand
     // new columns), and move the stamp
-    val reread0 = spark.read.option("recursiveFileLookup", "true")
-      .parquet(dir.toString)
+    val reread0 = spark.read.options(LocalFs.jobOptions(dir, hconf))
+      .option("recursiveFileLookup", "true").parquet(dir.toString)
     val reread = {
       val failedSchema = parseSchema(schemaJson)
       val headSchema = newBase.schemaJson.map(parseSchema).getOrElse(failedSchema)
@@ -5634,7 +5636,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       sum(col(c).cast(org.apache.spark.sql.types.DecimalType(38, 0)))
         .as(s"_s_$c"),
       count(col(c)).as(s"_n_$c")))
-    val byFile = spark.read.parquet(dir.toString)
+    val byFile = spark.read.options(LocalFs.jobOptions(dir, hconf))
+      .parquet(dir.toString)
       .groupBy(input_file_name().as("_f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect().map { r =>
@@ -5715,7 +5718,8 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
       val width = names.size
       val sel = input_file_name().as("_f") +: names.zipWithIndex.map {
         case (c, i) => col(c).cast("string").as(s"_v$i") }
-      val built = spark.read.parquet(dir.toString)
+      val built = spark.read.options(LocalFs.jobOptions(dir, hconf))
+        .parquet(dir.toString)
         .select(sel: _*)
         .rdd
         .mapPartitions { it =>
@@ -5742,7 +5746,7 @@ final class LakeTable(val spark: SparkSession, val config: LakeTableConfig) {
         }
         .map { case (uriPath, (orig, parts)) =>
           val dp = new Path(orig)
-          val fs = dp.getFileSystem(conf.value)
+          val fs = LocalFs.of(dp, conf.value)
           if (wantKey) {
             val sp = new Path(dp.getParent, "." + dp.getName + ".bf")
             val os = fs.create(sp, true)
@@ -5913,7 +5917,7 @@ object LakeTable {
     try {
       val dp = new Path(dataPath)
       val sp = new Path(dp.getParent, "." + dp.getName + ".bf")
-      val fs = sp.getFileSystem(conf)
+      val fs = LocalFs.of(sp, conf)
       if (!fs.exists(sp)) None
       else {
         val is = fs.open(sp)
@@ -5934,7 +5938,7 @@ object LakeTable {
     try {
       val dp = new Path(dataPath)
       val sp = new Path(dp.getParent, "." + dp.getName + ".bfm")
-      val fs = sp.getFileSystem(conf)
+      val fs = LocalFs.of(sp, conf)
       if (!fs.exists(sp)) None
       else {
         val dis = new java.io.DataInputStream(fs.open(sp))

@@ -60,7 +60,7 @@ object LogFileIndex {
     files.map { f =>
       val p = new Path(f.path)
       if (f.bytes > 0L) new FileStatus(f.bytes, false, 1, 0L, 0L, p)
-      else p.getFileSystem(conf).getFileStatus(p)
+      else LocalFs.of(p, conf).getFileStatus(p)
     }
 
   /** A parquet scan of exactly `files`, read with `fileSchema` (fields

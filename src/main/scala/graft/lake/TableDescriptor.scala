@@ -214,5 +214,5 @@ object TableDescriptor {
   }
 
   private def fs(p: Path, hconf: Configuration): FileSystem =
-    p.getFileSystem(hconf)
+    LocalFs.of(p, hconf)
 }

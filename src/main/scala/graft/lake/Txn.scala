@@ -50,7 +50,7 @@ final class GraftTxn private (
     coordDir: Path,
     hconf: Configuration) {
 
-  private val fs = coordDir.getFileSystem(hconf)
+  private val fs = LocalFs.of(coordDir, hconf)
   private val enlisted =
     scala.collection.mutable.LinkedHashMap.empty[String, LakeTable]
   @volatile private var outcome: Option[String] = None
@@ -165,7 +165,7 @@ object GraftTxn {
     val id = java.util.UUID.randomUUID().toString.replace("-", "")
     val dir = new Path(coordDir)
     val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = dir.getFileSystem(hconf)
+    val fs = LocalFs.of(dir, hconf)
     fs.mkdirs(dir)
     // begin marker carries the open timestamp — the stale-reaper's clock
     val out = fs.create(new Path(dir, s"$id.begin"), false)
@@ -183,7 +183,7 @@ object GraftTxn {
   def abortStale(spark: SparkSession, coordDir: String,
       olderThanMs: Long): Seq[String] = {
     val dir = new Path(coordDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LocalFs.of(dir, spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return Seq.empty
     val now = System.currentTimeMillis()
     fs.listStatus(dir).toSeq

@@ -15,7 +15,7 @@ private[graft] final class Watermark(
     dir: Path, prefix: String, hadoopConf: Configuration) {
   require(prefix.nonEmpty && prefix.matches("[A-Za-z0-9._-]+"),
     s"marker prefix must be filename-safe, got '$prefix'")
-  private def fs = dir.getFileSystem(hadoopConf)
+  private def fs = LocalFs.of(dir, hadoopConf)
   private val pat = java.util.regex.Pattern.quote(prefix) + "\\d{8,}"
 
   def last: Option[Long] =
