@@ -3,7 +3,7 @@ package graft.lake
 import java.io.FileNotFoundException
 import java.net.URI
 import java.nio.file.{FileSystemException, FileSystems, Files}
-import java.nio.file.attribute.{FileTime, PosixFilePermission, UserPrincipal}
+import java.nio.file.attribute.{FileTime, UserPrincipal}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
@@ -31,10 +31,9 @@ object LocalFs {
 
   private val ImplKey = "fs.file.impl"
 
-  /** a status reads the JDK's `unix` attribute view, whose `mode` keeps
-    * the sticky bit the `posix` view drops; where it exists (Linux,
-    * macOS) the `posix` view that sets permissions does too. Elsewhere
-    * Hadoop's own calls run. */
+  /** permissions are set and read as the JDK's `unix` attribute view's
+    * `mode` (one `chmod(2)` or `stat(2)`, sticky bit included), where
+    * that view exists (Linux, macOS). Elsewhere Hadoop's own calls run. */
   private val inProcess =
     FileSystems.getDefault.supportedFileAttributeViews.contains("unix")
 
@@ -49,9 +48,9 @@ object LocalFs {
     private lazy val blockSize = getDefaultBlockSize(new Path("/"))
 
     override def setPermission(p: Path, perm: FsPermission): Unit =
-      if (!inProcess || perm.getStickyBit) super.setPermission(p, perm)
-      else Files.setPosixFilePermissions(pathToFile(p).toPath,
-        posixPerms(perm.toShort))
+      if (!inProcess) super.setPermission(p, perm)
+      else Files.setAttribute(pathToFile(p).toPath, "unix:mode",
+        Int.box(perm.toShort & 0x3ff))
 
     /** the status Hadoop's `DeprecatedRawLocalFileStatus` gives once its
       * permission is loaded: one replica, the configured block size, the
@@ -83,15 +82,6 @@ object LocalFs {
       else Array(getFileStatus(p))
   }
 
-  private def posixPerms(mode: Int): java.util.Set[PosixFilePermission] = {
-    val s = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
-    // values() runs OWNER_READ .. OTHERS_EXECUTE, i.e. bit 8 down to 0
-    PosixFilePermission.values.foreach { b =>
-      if ((mode & (0x100 >> b.ordinal)) != 0) s.add(b)
-    }
-    s
-  }
-
   /** the lake uses [[LocalFs]] for `p` when it resolves to the `file`
     * scheme and `conf` names no `file:` implementation of its own */
   def covers(p: Path, conf: Configuration): Boolean =
@@ -99,13 +89,23 @@ object LocalFs {
       Option(p.toUri.getScheme)
         .getOrElse(FileSystem.getDefaultUri(conf).getScheme) == "file"
 
+  /** the last handle [[of]] built, with its conf: the lake resolves its
+    * filesystem per call, up to once per file a clean deletes, and the
+    * driver's calls all pass the session's conf */
+  @volatile private var last: (Configuration, LocalFs) = (null, null)
+
   /** the lake's own handle on `p`'s filesystem */
   def of(p: Path, conf: Configuration): FileSystem =
     if (!covers(p, conf)) p.getFileSystem(conf)
     else {
-      val fs = new LocalFs
-      fs.initialize(URI.create("file:///"), conf)
-      fs
+      val (c, cached) = last
+      if (c eq conf) cached
+      else {
+        val fs = new LocalFs
+        fs.initialize(URI.create("file:///"), conf)
+        last = (conf, fs)
+        fs
+      }
     }
 
   /** options for a Spark job over the lake's files under `p`: Spark

@@ -16,8 +16,7 @@ import graft.lake.{LakeTable, LakeTableConfig, LocalFs}
   * permissions in-process and changes nothing else:
   *   - every status under a written table equals the one Hadoop's raw
   *     local filesystem gives (its `ls -ld`-backed status);
-  *   - `setPermission` round-trips plain modes, and a sticky-bit mode
-  *     takes Hadoop's own call;
+  *   - `setPermission` round-trips plain and sticky-bit modes;
   *   - a lake write routes through it unless the conf names its own
   *     `file:` implementation, which is then left alone.
   */
@@ -118,7 +117,7 @@ class LocalFsSpec extends AnyFunSuite {
         .getFileStatus(new Path("file:///nonexistent-localfs/x")))
   }
 
-  test("setPermission round-trips plain modes; a sticky bit takes Hadoop's call") {
+  test("setPermission round-trips plain and sticky-bit modes") {
     val dir = Files.createTempDirectory("localfs_perm")
     val engine = LocalFs.of(new Path(dir.toUri), hconf)
     val hadoop = hadoopRaw()
@@ -134,7 +133,8 @@ class LocalFsSpec extends AnyFunSuite {
         assert(hadoop.getFileStatus(p).getPermission == want, s"$p $m")
       }
     }
-    // the posix view cannot set the sticky bit: Hadoop's call does
+    // the `unix` view's mode carries the sticky bit (the `posix` view's
+    // permission set cannot)
     val sticky = new FsPermission(Integer.parseInt("1777", 8).toShort)
     engine.setPermission(sub, sticky)
     assert(engine.getFileStatus(sub).getPermission == sticky)
@@ -154,6 +154,8 @@ class LocalFsSpec extends AnyFunSuite {
     assert(LocalFs.writeOptions(root, hconf).get("fs.file.impl")
       .contains(classOf[LocalFs].getName))
     assert(LocalFs.of(root, hconf).isInstanceOf[LocalFs])
+    // one conf reuses one handle
+    assert(LocalFs.of(root, hconf) eq LocalFs.of(new Path(freshRoot()), hconf))
     // object stores and HDFS keep their own filesystems
     assert(!LocalFs.covers(new Path("s3a://bucket/tbl"), hconf))
     assert(!LocalFs.covers(new Path("hdfs://nn:8020/tbl"), hconf))
